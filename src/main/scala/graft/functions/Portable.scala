@@ -249,7 +249,6 @@ object Portable {
     s"CASE WHEN $st >= $UnigramUnreach THEN 1 ELSE 0 END"
   def dotDuck(a: String, b: String): String =
     (1 to Dim).map(i => s"CAST($a[$i] AS DOUBLE) * CAST($b[$i] AS DOUBLE)").mkString(" + ")
-  def normSpark(a: String): String = s"sqrt(${dotSpark(a, a)})"
   def normDuck(a: String): String  = s"sqrt(${dotDuck(a, a)})"
 
   // ---- subspace squared-L2 (product quantization) --------------------------
@@ -277,21 +276,14 @@ object Portable {
     IndexedSeq.fill(k)((math.floorMod(rng.nextLong(), P - 1) + 1,
       math.floorMod(rng.nextLong(), P - 1) + 1))
   }
-  def affineHash(x: String, a: Long, b: Long): String = s"(($a * $x + $b) % $P)"
 
   // ---- simhash -------------------------------------------------------------
   /** Count-weighted bit sums: for token hash column h with weight w,
-    * s_j = sum(w * (2*bit_j(h) - 1)). Spark spells shift as `shiftright`,
-    * DuckDB as `>>`; the arithmetic is identical integer math. */
-  def simBitSumSpark(h: String, w: String, j: Int): String =
-    s"sum($w * (2 * (shiftright($h, $j) & 1) - 1))"
+    * s_j = sum(w * (2*bit_j(h) - 1)) — the oracle side of `graft_simhash`,
+    * which replays the identical integer math natively. */
   def simBitSumDuck(h: String, w: String, j: Int): String =
     s"sum($w * (2 * (($h >> $j) & 1) - 1))"
   /** Fingerprint from the 30 per-bit sums s_0..s_29 (column name prefix). */
-  def simFingerprint(pfx: String): String =
-    (0 until SimBits).map(j =>
-      s"(CASE WHEN ${pfx}$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-      .mkString(" + ")
   def simFingerprintDuck(pfx: String): String =
     (0 until SimBits).map(j =>
       s"(CASE WHEN ${pfx}$j > 0 THEN ${1L << j}::BIGINT ELSE 0::BIGINT END)").mkString(" + ")

@@ -838,10 +838,6 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
       .map(_.getPath.toString)
   }
 
-  /** The partition spec this handle was opened with (see
-    * [[PartitionedTable.open]] for recovering it from disk). */
-  def partitionColumns: Seq[String] = partitionCols
-
   /** (partitionId, FileStatus) for every data file in the current manifest
     * snapshot — the raw material for a [[AutoSkip.SidecarFileIndex]], which
     * needs sizes and partition identities, not just paths. Same

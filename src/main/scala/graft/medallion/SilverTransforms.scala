@@ -47,10 +47,10 @@ object SilverTransforms {
     * HashAggregate is unavailable) — r16 measured the tempting "fix",
     * [[graft.operators.Scale.topKPerKey]] k=1 over the graft_top_k
     * TypedImperativeAggregate (ObjectHashAggregate, no sorts), as ~12%
-    * SLOWER in an interleaved bit-identical A/B (tools/SilverAbProbe:
-    * min 1.59 vs 1.78 s, med 1.87 vs 2.07 s on sf0.1 lineitem): the
-    * per-row typed-buffer update costs more than the cheap binary-row
-    * sorts it removes. Keep max_by. */
+    * SLOWER in an interleaved bit-identical A/B (SilverAbProbe in CLAUDE.md's
+    * probe lessons: min 1.59 vs 1.78 s, med 1.87 vs 2.07 s on sf0.1
+    * lineitem): the per-row typed-buffer update costs more than the cheap
+    * binary-row sorts it removes. Keep max_by. */
   def dedupLatest(bronze: DataFrame, pkRaw: String): DataFrame = {
     val cols = bronze.columns
     bronze.filter(!col("is_duplicate_in_file"))

@@ -51,9 +51,9 @@ object Classifier {
     * ≤`buckets`-entry array — bounded work per row, evaluated once (the
     * margin feeds only the filter), not a corpus-token hot path. A/B'd vs
     * the broadcast-join two-read epoch: 2× faster per epoch, bitwise equal
-    * (tools/ClassifierProbe). Docs whose tokens hash nowhere (empty text)
-    * carry no features: they update nothing and are consistently absent
-    * from both engines' margin tables. */
+    * (ClassifierProbe in CLAUDE.md's probe lessons). Docs whose tokens hash
+    * nowhere (empty text) carry no features: they update nothing and are
+    * consistently absent from both engines' margin tables. */
   def trainPerceptron(labeled: DataFrame, buckets: Int = 64,
                       epochs: Int = 3): DataFrame = {
     require(buckets > 0 && buckets <= 65536, "buckets must be in [1, 65536]")

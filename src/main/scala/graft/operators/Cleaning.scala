@@ -110,11 +110,6 @@ object Cleaning {
   def stateSplit(c: Column): Column =
     regexp_extract(trim(c), "(\\S+)$", 1)
 
-  /** Safe float->long: only when the value is integral
-    * (reference: spark_procedures/users.sql:55-57). */
-  def safeFloatToLong(c: Column): Column =
-    when(c === floor(c), c.cast("long")).otherwise(lit(null))
-
   /** Currency extraction (reference spec DEMO.md:94-115): leading symbol ->
     * companion `value_type` code; remainder -> numeric value. */
   val CurrencyPrefixRe = "^(\\$|EUR |£|¥)"

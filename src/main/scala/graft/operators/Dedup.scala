@@ -71,7 +71,8 @@ object Dedup {
     * `dedup_minhash_lsh` +86% regression). Accumulators propagate through
     * persist/localCheckpoint materialization, which `Dataset.observe`
     * metrics do NOT (a CollectMetrics node inside a cached subtree vanishes
-    * from `observedMetrics` — measured, tools/ObserveProbe).
+    * from `observedMetrics` — measured, ObserveProbe in CLAUDE.md's probe
+    * lessons).
     *
     * The tick is a Scala UDF, deliberately: it must only ever wrap a
     * COLLISION-SIZED frame (buckets with >= 2 members), never a corpus scan.
@@ -330,7 +331,8 @@ object Dedup {
     * Kept as the PORTABLE reference chain: the hot paths ride the native
     * [[graft.plans.BandKeys]] ([[bandKeysExpr]]) since r16 — the 42-wide
     * nested tree cost 0.33-0.44 s of eager re-analysis per banded-gate run
-    * (PlanCostProbe) — and PortableParitySpec pins native == this chain. */
+    * (PlanCostProbe in CLAUDE.md's probe lessons) — and PortableParitySpec
+    * pins native == this chain. */
   private[graft] def bandKeyCols(bands: Int, rowsPerBand: Int): Seq[Column] =
     (0 until bands).map { j =>
       val rows = (0 until rowsPerBand).map(r => s"sig[${j * rowsPerBand + r}]")

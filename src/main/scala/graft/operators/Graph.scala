@@ -49,8 +49,9 @@ object Graph {
     pageRankImpl(edges, iters, dampNum, dampDen, scale, forceFold = None)
 
   /** [[pageRank]] with the regime dispatch overridable — package-private so
-    * tools/PageRankProbe can A/B the loop against the fold on the same
-    * graph; production callers always take the size-gated default. */
+    * the specs can force the loop and the fold on the same small graph and
+    * pin them equal; production callers always take the size-gated
+    * default. */
   private[graft] def pageRankImpl(edges: DataFrame, iters: Int, dampNum: Long,
                                   dampDen: Long, scale: Long,
                                   forceFold: Option[Boolean]): DataFrame = {
@@ -126,9 +127,10 @@ object Graph {
     * the loop is exact: inc(v) = Σ_edges pr(u) div deg(u) equals
     * Σ_pairs w·(pr(u) div deg(u)) term-for-term, 64-bit addition is
     * associative/commutative, and every `div` has non-negative operands so
-    * Scala `/` matches (tools/PageRankProbe hash-asserts the regimes equal;
-    * min-of-6 at the gate shape 1.54 -> 0.70 s). Stays a PLAN (mapPartitions
-    * over the union-packed frame), so composition semantics are unchanged. */
+    * Scala `/` matches (GraphSpec pins the regimes equal; min-of-6 at the
+    * gate shape 1.54 -> 0.70 s, PageRankProbe in CLAUDE.md's probe lessons).
+    * Stays a PLAN (mapPartitions over the union-packed frame), so
+    * composition semantics are unchanged. */
   private def pageRankFolded(e: DataFrame, deg: DataFrame, n: Long, iters: Int,
                              dampNum: Long, dampDen: Long, init: Long,
                              base: Long): DataFrame = {

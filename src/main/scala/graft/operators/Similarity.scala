@@ -258,8 +258,8 @@ object Similarity {
     * expressions on the same values, same 'DA' fold, same tie-breaks), so
     * the output is bitwise-identical — the oracle gate re-proves it at both
     * SFs. Cost halves: one corpus scan instead of two (plus the dropped
-    * k-row join machinery — GateJobProbe: 19 jobs → ~8); evaluation stays
-    * O(corpus x sample), never corpus². */
+    * k-row join machinery: 19 jobs → ~8, GateJobProbe in CLAUDE.md's probe
+    * lessons); evaluation stays O(corpus x sample), never corpus². */
   def rpRecall(emb: DataFrame, outDim: Int = 16, nQueries: Int = 20,
                k: Int = 10): DataFrame = {
     require(outDim >= 1 && outDim <= Portable.Dim,

@@ -1875,10 +1875,10 @@ object TextOps {
     * join + lazy checkpoint) of pure stage floor with one task. Real
     * corpora have tens-to-thousands of domains; past the gate the
     * round-loop regime keeps the arithmetic distributed (the
-    * connectedComponents size-gate precedent). A/B at sf0.1
-    * (tools/MixtureProbe, min-of-6, steal-clean window): trajectory shape
-    * 1.40 -> 0.49 s, the learn-then-apply composition 1.23 -> 0.58 s,
-    * bitwise-identical trajectories (hash-asserted in the probe). */
+    * connectedComponents size-gate precedent). A/B at sf0.1 (MixtureProbe
+    * in CLAUDE.md's probe lessons, min-of-6, steal-clean window): trajectory
+    * shape 1.40 -> 0.49 s, the learn-then-apply composition 1.23 -> 0.58 s.
+    * TextOpsSpec pins the two regimes equal on trajectory and weights. */
   private val MixtureFoldMaxDomains = 65536L
 
   /** One-pass trajectory fold: every round is closed-form over the

@@ -601,11 +601,11 @@ case class MinHashSignature(child: Expression, k: Int)
   *
   * Motive (r16): the 42-column `array(bandKeyCols…)` projection was a
   * 42-wide nested expression tree that every downstream Dataset
-  * transformation re-analyzed — PlanCostProbe measured 0.33-0.44 s of
-  * DRIVER-side construction per banded-gate run, ~20-25% of warm wall, on
-  * top of the per-row cost of 42 codegen'd fold chains. One flat loop per
-  * row, one function node in the plan. Signature minima sit in [0, P), so
-  * acc*Mult + m < 2^38 — no overflow. */
+  * transformation re-analyzed — measured at 0.33-0.44 s of DRIVER-side
+  * construction per banded-gate run, ~20-25% of warm wall (PlanCostProbe in
+  * CLAUDE.md's probe lessons), on top of the per-row cost of 42 codegen'd
+  * fold chains. One flat loop per row, one function node in the plan.
+  * Signature minima sit in [0, P), so acc*Mult + m < 2^38 — no overflow. */
 case class BandKeys(child: Expression, bands: Int, rowsPerBand: Int)
   extends UnaryExpression with codegen.CodegenFallback {
   import graft.functions.Portable
@@ -655,10 +655,10 @@ case class BandKeys(child: Expression, bands: Int, rowsPerBand: Int)
   *
   * Motive (r16): the SQL form is an `array(...)` of outDim CAST chains with
   * Dim `element_at` casts each — a ~2,000-node tree for 16×42 that every
-  * downstream transformation re-analyzes. GateJobProbe measured
-  * `embed_rp_recall` spending ~0.85 s/run in a DRIVER gap right after the
-  * scan (plan construction + codegen of the tree), ~45% of warm wall. Same
-  * class as [[BandKeys]]. */
+  * downstream transformation re-analyzes. `embed_rp_recall` was measured
+  * spending ~0.85 s/run in a DRIVER gap right after the scan (plan
+  * construction + codegen of the tree), ~45% of warm wall (GateJobProbe in
+  * CLAUDE.md's probe lessons). Same class as [[BandKeys]]. */
 case class RpProject(child: Expression, outDim: Int)
   extends UnaryExpression with codegen.CodegenFallback {
   import graft.functions.Portable

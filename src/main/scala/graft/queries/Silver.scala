@@ -127,8 +127,7 @@ object Silver {
     * re-read by the junk record, so base expressions — the 9-way
     * date_format dispatch is the expensive one — are computed once per row
     * (multi-referenced non-cheap alias: CollapseProject keeps it). */
-  private def bronzeDf(spark: SparkSession, df: DataFrame, table: String,
-                       kExpr: String, cols: Cols,
+  private def bronzeDf(df: DataFrame, kExpr: String, cols: Cols,
                        lateMod: Int, junkMod: Int): DataFrame = {
     val cs = cols(SparkD)
     val names = cs.map(_.name)
@@ -235,7 +234,7 @@ object Silver {
 
   def silverUsers(spark: SparkSession, dir: String): DataFrame =
     SilverTransforms.users(
-      bronzeDf(spark, Tables.customer(spark, dir), "customer", "c_custkey",
+      bronzeDf(Tables.customer(spark, dir), "c_custkey",
         usersCols, 10, 19),
       loadedAtSpark)
 
@@ -271,7 +270,7 @@ object Silver {
 
   def silverOrders(spark: SparkSession, dir: String): DataFrame =
     SilverTransforms.orders(
-      bronzeDf(spark, Tables.orders(spark, dir), "orders", "o_orderkey",
+      bronzeDf(Tables.orders(spark, dir), "o_orderkey",
         ordersCols, 10, 19),
       loadedAtSpark)
 
@@ -304,7 +303,7 @@ object Silver {
 
   def silverOrderItems(spark: SparkSession, dir: String): DataFrame =
     SilverTransforms.orderItems(
-      bronzeDf(spark, Tables.lineitem(spark, dir), "lineitem",
+      bronzeDf(Tables.lineitem(spark, dir),
         "(l_orderkey * 10 + l_linenumber) * 100000000 + CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)", orderItemsCols, 10, 19),
       loadedAtSpark)
 
@@ -342,7 +341,7 @@ object Silver {
 
   def silverProducts(spark: SparkSession, dir: String): DataFrame =
     SilverTransforms.products(
-      bronzeDf(spark, Tables.part(spark, dir), "part", "p_partkey",
+      bronzeDf(Tables.part(spark, dir), "p_partkey",
         productsCols, 10, 19),
       loadedAtSpark)
 
@@ -382,7 +381,7 @@ object Silver {
 
   def silverInventoryItems(spark: SparkSession, dir: String): DataFrame =
     SilverTransforms.inventoryItems(
-      bronzeDf(spark, Tables.lineitem(spark, dir), "lineitem",
+      bronzeDf(Tables.lineitem(spark, dir),
         "(l_orderkey * 10 + l_linenumber) * 100000000 + CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)", inventoryCols, 11, 23),
       loadedAtSpark)
 
@@ -416,7 +415,7 @@ object Silver {
 
   def silverDistributionCenters(spark: SparkSession, dir: String): DataFrame =
     SilverTransforms.distributionCenters(
-      bronzeDf(spark, Tables.nation(spark, dir), "nation",
+      bronzeDf(Tables.nation(spark, dir),
         "CAST(n_nationkey AS BIGINT)", dcCols, 4, 6),
       loadedAtSpark)
 
@@ -452,7 +451,7 @@ object Silver {
 
   def silverEvents(spark: SparkSession, dir: String): DataFrame =
     SilverTransforms.events(
-      bronzeDf(spark, Tables.events(spark, dir), "events", "event_id",
+      bronzeDf(Tables.events(spark, dir), "event_id",
         eventsCols, 10, 19),
       loadedAtSpark)
 
@@ -469,23 +468,6 @@ object Silver {
       sentIcD("traffic_source") -> "traffic_source",
       "trim(uri)" -> "uri",
       lowerSentD("event_type") -> "event_type"))
-
-  // ---- builder probes (graft.tools.SilverProbe) ----------------------------
-  private[graft] def probeBronzeInventory(spark: SparkSession, dir: String): DataFrame =
-    bronzeDf(spark, Tables.lineitem(spark, dir), "lineitem",
-      "(l_orderkey * 10 + l_linenumber) * 100000000 + CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)", inventoryCols, 11, 23)
-
-  private[graft] def probeInventoryNoTs(spark: SparkSession, dir: String): DataFrame = {
-    import graft.medallion.SilverTransforms.dedupLatest
-    val b = probeBronzeInventory(spark, dir)
-    dedupLatest(b, "id").select(
-      expr("try_cast(id as bigint)").as("id"),
-      expr("try_cast(product_id as bigint)").as("product_id"),
-      Cleaning.sentinelOrInitcap(col("product_category")).as("product_category"),
-      Cleaning.sentinelOrInitcap(col("product_name")).as("product_name"),
-      Cleaning.sentinelOrInitcap(col("product_brand")).as("product_brand"),
-      upper(trim(col("product_sku"))).as("product_sku"))
-  }
 
   // ==========================================================================
   val queries: Map[String, Q] = Map(

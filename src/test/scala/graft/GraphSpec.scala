@@ -61,6 +61,22 @@ class GraphSpec extends AnyFunSuite {
     assert(r1 == replay(edges, 4).toSeq.sorted, "replay mismatch")
   }
 
+  test("pageRank: the distributed round-loop and the small-graph fold agree bitwise") {
+    import spark.implicits._
+    // production takes the fold below its node gate, so the loop is only
+    // reached on large graphs: force both regimes on one small graph with
+    // multi-edges, a self-loop and a dangling sink
+    val edges = (0L until 300L).map(i => (s"d${i % 31}", s"d${(i * i + 3) % 37}")) ++
+      Seq("d5" -> "d5", "d1" -> "sink")
+    val df = edges.toDF("src", "dst").repartition(5)
+    def run(fold: Boolean): Seq[(String, Long)] =
+      Graph.pageRankImpl(df, 6, 85L, 100L, S, forceFold = Some(fold))
+        .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    val loop = run(fold = false)
+    assert(loop == run(fold = true), "loop and fold regimes disagree")
+    assert(loop == replay(edges, 6).toSeq.sorted, "replay mismatch")
+  }
+
   test("guards: empty graph, iteration and scale bounds") {
     import spark.implicits._
     val e = Seq("a" -> "b").toDF("src", "dst")

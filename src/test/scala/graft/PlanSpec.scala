@@ -31,18 +31,23 @@ class PlanSpec extends AnyFunSuite {
     // local projections row-by-row regardless of determinism, which would
     // make this test vacuous — the fence targets pushdown on real scans
     val dir = java.nio.file.Files.createTempDirectory("graft-opaque").toString
-    Seq(("ab", "abc"), ("x", "xyzzy"), ("same", "same")).toDF("a", "b")
-      .write.mode("overwrite").parquet(dir)
-    val src = spark.read.parquet(dir)
-    val fenced = src.withColumn("d", expr("graft_opaque(levenshtein(a, b))"))
-    val plain = src.withColumn("d", expr("levenshtein(a, b)"))
-    assert(fenced.orderBy("a").collect().toSeq == plain.orderBy("a").collect().toSeq,
-      "graft_opaque must not change a single value")
-    // the fence's whole point: a filter on the derived column must not be
-    // pushed through the projection (which would duplicate the evaluation)
-    val ep = fenced.filter(col("d") >= 2).queryExecution.executedPlan.toString
-    assert("levenshtein".r.findAllIn(ep).length == 1,
-      s"expected exactly one levenshtein eval below the filter:\n$ep")
+    try {
+      Seq(("ab", "abc"), ("x", "xyzzy"), ("same", "same")).toDF("a", "b")
+        .write.mode("overwrite").parquet(dir)
+      val src = spark.read.parquet(dir)
+      val fenced = src.withColumn("d", expr("graft_opaque(levenshtein(a, b))"))
+      val plain = src.withColumn("d", expr("levenshtein(a, b)"))
+      assert(fenced.orderBy("a").collect().toSeq == plain.orderBy("a").collect().toSeq,
+        "graft_opaque must not change a single value")
+      // the fence's whole point: a filter on the derived column must not be
+      // pushed through the projection (which would duplicate the evaluation)
+      val ep = fenced.filter(col("d") >= 2).queryExecution.executedPlan.toString
+      assert("levenshtein".r.findAllIn(ep).length == 1,
+        s"expected exactly one levenshtein eval below the filter:\n$ep")
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
   }
 
   test("edit distance verify: the Levenshtein DP runs once per candidate pair") {

@@ -762,4 +762,38 @@ class TextOpsSpec extends AnyFunSuite {
     assert(kept.count(_ == "hard") == 10, "heaviest domain keeps all docs")
     assert(!kept.contains("easy"), "zero-weight domain keeps nothing")
   }
+
+  test("domainMixtureWeights: the round-loop and the one-pass fold agree bitwise") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // production folds below its domain gate, so the loop is only reached
+    // on huge domain counts: force both regimes on one small corpus of four
+    // domains at graded surprisal, at the default step (three domains floor
+    // to weight 0 by round 2) and at a gentle one (weights move over rounds)
+    val corpus = (0 until 48).map { i =>
+      val d = i % 4
+      val toks = (0 until 12).map(j => if (j % 4 < d) s"rare_${i}_$j" else s"w${j % 3}")
+      (i.toLong, s"dom$d", toks.mkString(" "))
+    }.toDF("doc_id", "source", "text")
+    val iters = 5
+    val loss = TextOps.mixtureLoss(corpus, "source")
+    val mass = loss.count() * TextOps.MixtureW
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    Seq((8L, 1L), (1L, 4L)).foreach { case (etaNum, etaDen) =>
+      def traj(fold: Boolean) =
+        if (fold) TextOps.mixtureRoundsFolded(loss, iters, etaNum, etaDen, TextOps.MixtureW, mass)
+        else TextOps.mixtureRoundsLoop(loss, iters, etaNum, etaDen, TextOps.MixtureW, mass)
+      val loopTraj = rows(traj(fold = false))
+      assert(loopTraj == rows(traj(fold = true)), s"eta $etaNum/$etaDen: trajectories disagree")
+      assert(loopTraj.length == 4 * (iters + 1))
+      // the learned weights, applied: the same docs survive either regime
+      def learned(fold: Boolean) = TextOps.mixtureSampleByWeights(corpus,
+        traj(fold).filter(col("round") === iters).select("source", "weight"))
+      val loopKept = rows(learned(fold = false))
+      assert(loopKept == rows(learned(fold = true)), s"eta $etaNum/$etaDen: samples disagree")
+      assert(loopKept.nonEmpty && loopKept.length < 48,
+        s"eta $etaNum/$etaDen: sampler should keep some but not all docs, kept ${loopKept.length}")
+    }
+  }
 }
