@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Write-path semantics of the reference loader (services/loader/
   * bigquery_manager.py): create / append / overwrite / upsert with additive
@@ -645,11 +645,8 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
   def evolvePartitionSpec(t: String, newCols: Seq[String]): Unit = {
     require(newCols.nonEmpty, "partition spec needs at least one column")
     require(exists(t), s"no such table: $t")
-    if (io.exists(schemaFile(t))) {
-      val fields = org.apache.spark.sql.types.DataType.fromJson(
-          io.readString(schemaFile(t)))
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
-      val missing = newCols.filterNot(fields)
+    storedSchema(t).foreach { schema =>
+      val missing = newCols.filterNot(schema.fieldNames.contains)
       require(missing.isEmpty,
         s"partition columns not in table schema: ${missing.mkString(", ")}")
     }
@@ -805,11 +802,15 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
 
   private def schemaFile(t: String) = s"${tableDir(t)}/SCHEMA"
 
+  /** The SCHEMA file, if the table has one. */
+  private def storedSchema(t: String): Option[StructType] =
+    if (!io.exists(schemaFile(t))) None
+    else Some(DataType.fromJson(io.readString(schemaFile(t))).asInstanceOf[StructType])
+
   private def emptyFrame(spark: SparkSession, t: String): DataFrame = {
-    require(io.exists(schemaFile(t)), s"table $t has no data and no SCHEMA file")
-    val schema = org.apache.spark.sql.types.DataType.fromJson(
-      io.readString(schemaFile(t))).asInstanceOf[org.apache.spark.sql.types.StructType]
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val schema = storedSchema(t)
+    require(schema.isDefined, s"table $t has no data and no SCHEMA file")
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema.get)
   }
 
   /** Manifest-level partition pruning: read only partitions whose column->raw
@@ -879,14 +880,18 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
   }
 
   /** O(new data): stage the aligned rows, move them in, reference everything
-    * else from the previous manifest. No existing data is read or copied. */
+    * else from the previous manifest. No existing data is read or copied,
+    * and no data file is opened to align: the target types come from the
+    * SCHEMA file, which create, overwrite and every evolving write keep
+    * current. Only a table without one falls back to the merged read
+    * schema. */
   override def append(df: DataFrame, t: String): Unit = {
     if (!exists(t)) { create(df, t); return }
-    val target = read(df.sparkSession, t)
-    val aligned = Align.to(df, target.schema.map(f => f.name -> f.dataType).toMap)
+    val target = storedSchema(t).getOrElse(read(df.sparkSession, t).schema)
+    val aligned = Align.to(df, target.map(f => f.name -> f.dataType).toMap)
     val staged = stage(aligned, t, "append")
     commitRebase(t, df.sparkSession)(cur => mergeEntries(cur, staged))
-    healSchemaFile(t, target.schema, aligned.schema)
+    healSchemaFile(t, target, aligned.schema)
   }
 
   /** Additive evolution must reach the SCHEMA file too, or every
@@ -900,12 +905,12 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     * reads are unaffected (mergeSchema) and the next evolving write heals
     * the file, the sidecar-style degradation. */
   private def healSchemaFile(t: String,
-                             target: org.apache.spark.sql.types.StructType,
-                             aligned: org.apache.spark.sql.types.StructType): Unit = {
+                             target: StructType,
+                             aligned: StructType): Unit = {
     val added = aligned.fields.filterNot(f => target.fieldNames.contains(f.name))
     if (added.nonEmpty)
       io.writeString(schemaFile(t),
-        org.apache.spark.sql.types.StructType(target.fields ++ added).json)
+        StructType(target.fields ++ added).json)
   }
 
   override def overwrite(df: DataFrame, t: String): Unit = {

@@ -1,6 +1,6 @@
 package graft.normalize
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Column-name normalization to lowercase snake_case with camelCase expansion
@@ -50,20 +50,34 @@ object ColumnNameNormalizer {
   * values with `is_shifted`. One wide agg to measure, one projection to fix.
   */
 object OverflowRepair {
-  def repair(df: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val cols = df.columns
-    val counts = df.agg(count(lit(1)).as("__total"),
-      cols.map(c => count(col(c)).as(s"nn_$c")).toSeq: _*).head()
-    val total = counts.getAs[Long]("__total")
-    if (total == 0) return df
-    def nullRate(c: String) = (total - counts.getAs[Long](s"nn_$c")).toDouble / total
-    // trailing run of >= threshold-null columns
-    val phantom = cols.reverse.takeWhile(c => nullRate(c) >= threshold).reverse
+  val Threshold = 0.8
+
+  /** The measuring agg's columns: the row count and every column's
+    * non-null count. */
+  def measures(cols: Seq[String]): Seq[Column] =
+    count(lit(1)).as("__total") +: cols.map(c => count(col(c)).as(s"nn_$c"))
+
+  /** The trailing run of >= threshold-null columns, read off a row that
+    * holds [[measures]]. */
+  def phantom(cols: Seq[String], measured: Row, threshold: Double): Seq[String] = {
+    val total = measured.getAs[Long]("__total")
+    if (total == 0) return Seq.empty
+    def nullRate(c: String) = (total - measured.getAs[Long](s"nn_$c")).toDouble / total
+    cols.reverse.takeWhile(c => nullRate(c) >= threshold).reverse
+  }
+
+  /** Drop the phantom columns and flag the rows that spilled into them. */
+  def flag(df: DataFrame, phantom: Seq[String]): DataFrame =
     if (phantom.isEmpty) df
     else {
-      val keep = cols.dropRight(phantom.length)
+      val keep = df.columns.toSeq.dropRight(phantom.length)
       val spill = phantom.map(c => col(c).isNotNull).reduce(_ || _)
-      df.withColumn("is_shifted", spill).select((keep :+ "is_shifted").map(col).toSeq: _*)
+      df.withColumn("is_shifted", spill).select((keep :+ "is_shifted").map(col): _*)
     }
+
+  def repair(df: DataFrame, threshold: Double = Threshold): DataFrame = {
+    val cols = df.columns.toSeq
+    val m = measures(cols)
+    flag(df, phantom(cols, df.agg(m.head, m.tail: _*).head(), threshold))
   }
 }

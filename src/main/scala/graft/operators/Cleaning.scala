@@ -43,7 +43,10 @@ object Cleaning {
     "\u00c3\u00af\u00c2\u00bf\u00c2\u00bd" -> "", // double-encoded replacement
     "\ufffd" -> "") // U+FFFD replacement char
 
-  /** Step: trim surrounding whitespace. */
+  /** Step: strip leading and trailing SPACES — Spark `TRIM`, which leaves
+    * tabs, newlines and other whitespace in place. DuckDB's `trim` strips
+    * the same set, and the oracle-checked gates depend on that parity, so
+    * this is not widened to all whitespace. */
   def trimWs(c: Column): Column = trim(c)
 
   /** Step: empty-after-trim string -> NULL

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Evidence-based safe type coercion (reference:
   * sql/ingestion/safe_type_coercion.sql + tools/quality.py:173-261 type
@@ -31,9 +32,9 @@ object Coercion {
       else None
   }
 
-  /** One-scan castability evidence for string columns. */
-  def analyze(df: DataFrame, cols: Seq[String]): Seq[ColumnEvidence] = {
-    val aggs = cols.flatMap { c =>
+  /** The evidence agg's columns: 5 conditional counts per string column. */
+  def measures(cols: Seq[String]): Seq[Column] =
+    cols.flatMap { c =>
       Seq(
         count(col(c)).as(s"nn_$c"),
         count(expr(s"try_cast($c as bigint)")).as(s"lg_$c"),
@@ -41,29 +42,45 @@ object Coercion {
         count(expr(s"try_cast($c as date)")).as(s"dt_$c"),
         count(expr(s"try_cast($c as boolean)")).as(s"bl_$c"))
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+
+  /** Evidence read off a row that holds [[measures]]. */
+  def evidence(cols: Seq[String], measured: Row): Seq[ColumnEvidence] =
     cols.map { c =>
       ColumnEvidence(c,
-        row.getAs[Long](s"nn_$c"), row.getAs[Long](s"lg_$c"),
-        row.getAs[Long](s"db_$c"), row.getAs[Long](s"dt_$c"),
-        row.getAs[Long](s"bl_$c"))
+        measured.getAs[Long](s"nn_$c"), measured.getAs[Long](s"lg_$c"),
+        measured.getAs[Long](s"db_$c"), measured.getAs[Long](s"dt_$c"),
+        measured.getAs[Long](s"bl_$c"))
     }
+
+  /** One-scan castability evidence for string columns. */
+  def analyze(df: DataFrame, cols: Seq[String]): Seq[ColumnEvidence] = {
+    val aggs = measures(cols)
+    evidence(cols, df.agg(aggs.head, aggs.tail: _*).head())
   }
 
-  /** Coerce every column whose evidence clears `threshold`; others stay
-    * string. Invariant (ScalaCheck'd): coercion never loses non-null cells
-    * beyond the measured uncastable remainder. */
-  def coerce(df: DataFrame, threshold: Double = 0.9): DataFrame = {
-    val stringCols = df.schema.fields
-      .filter(_.dataType == org.apache.spark.sql.types.StringType).map(_.name).toSeq
-    if (stringCols.isEmpty) return df
-    val evidence = analyze(df, stringCols)
-    val targets = evidence.flatMap(e => e.target(threshold).map(e.column -> _)).toMap
+  def stringColumns(df: DataFrame): Seq[String] =
+    df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
+
+  /** column -> target type for every column whose evidence clears
+    * `threshold`. */
+  def targets(evidence: Seq[ColumnEvidence], threshold: Double): Map[String, String] =
+    evidence.flatMap(e => e.target(threshold).map(e.column -> _)).toMap
+
+  /** try_cast each targeted column; the others pass through. */
+  def cast(df: DataFrame, targets: Map[String, String]): DataFrame =
     df.select(df.columns.map { c =>
       targets.get(c) match {
         case Some(t) => expr(s"try_cast($c as $t)").as(c)
         case None => col(c)
       }
     }.toSeq: _*)
+
+  /** Coerce every column whose evidence clears `threshold`; others stay
+    * string. Invariant (ScalaCheck'd): coercion never loses non-null cells
+    * beyond the measured uncastable remainder. */
+  def coerce(df: DataFrame, threshold: Double = 0.9): DataFrame = {
+    val stringCols = stringColumns(df)
+    if (stringCols.isEmpty) df
+    else cast(df, targets(analyze(df, stringCols), threshold))
   }
 }

@@ -1,7 +1,8 @@
 package graft.pipeline
 
+import java.io.OutputStream
 import java.nio.file.{Files, Paths}
-import java.security.MessageDigest
+import java.security.{DigestInputStream, MessageDigest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.lake.TableFormat
@@ -94,9 +95,12 @@ class Ledger(path: String) {
   */
 object FilePipeline {
 
+  /** sha256 of the file's bytes, streamed: the file is never held whole. */
   def fileHash(path: String): String = {
     val md = MessageDigest.getInstance("SHA-256")
-    md.update(Files.readAllBytes(Paths.get(path)))
+    val in = new DigestInputStream(Files.newInputStream(Paths.get(path)), md)
+    try in.transferTo(OutputStream.nullOutputStream())
+    finally in.close()
     md.digest().map("%02x".format(_)).mkString
   }
 
@@ -151,46 +155,87 @@ object FilePipeline {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** What a load needs to know about its raw frame: the phantom columns
+    * [[OverflowRepair]] drops, the types [[Coercion]] tightens to, and how
+    * many rows reach the main and the quarantine table. */
+  private final case class Profile(phantom: Seq[String], targets: Map[String, String],
+                                   rows: Long, quarantined: Long)
+
+  /** Measure [[Profile]] in ONE aggregate over the raw frame — the same
+    * evidence as `OverflowRepair.repair` -> `na.drop("all")` ->
+    * `Coercion.coerce` -> `count`, which take three passes:
+    *  - an all-null row adds nothing to any `count(c)` or
+    *    `count(try_cast(c ...))`, so castability evidence over the raw frame
+    *    equals the evidence over its non-empty rows;
+    *  - a flag column is never null, so `na.drop("all")` drops no row of a
+    *    flagged frame, and its rows split by the flag: the rows whose phantom
+    *    columns are all null are clean. A frame without a flag loses its
+    *    all-null rows. Both are counts of rows whose last k columns are null,
+    *    taken for every k because the phantom run is known only after the
+    *    pass. */
+  private def profile(named: DataFrame, coercionThreshold: Double): Profile = {
+    val cols = named.columns.toSeq
+    val strings = Coercion.stringColumns(named)
+    // index of the row's last non-null column, -1 for an all-null row
+    val last =
+      if (cols.isEmpty) lit(-1)
+      else greatest(lit(-1) +: cols.zipWithIndex.map { case (c, i) => when(col(c).isNotNull, i) }: _*)
+    val trailingNull = (0 to cols.length).map(k => count(when(last < cols.length - k, 1)).as(s"__null_last_$k"))
+    val flagged = cols.contains("is_shifted")
+    val split =
+      if (flagged) Seq(count(when(!col("is_shifted"), 1)).as("__clean"),
+                       count(when(col("is_shifted"), 1)).as("__shifted"))
+      else Seq.empty
+    val aggs = OverflowRepair.measures(cols) ++ Coercion.measures(strings) ++ trailingNull ++ split
+    val m = named.agg(aggs.head, aggs.tail: _*).head()
+    val phantom = OverflowRepair.phantom(cols, m, OverflowRepair.Threshold)
+    val total = m.getAs[Long]("__total")
+    def nullLast(k: Int): Long = m.getAs[Long](s"__null_last_$k")
+    val (rows, quarantined) =
+      if (phantom.nonEmpty) (nullLast(phantom.length), total - nullLast(phantom.length))
+      else if (flagged) (m.getAs[Long]("__clean"), m.getAs[Long]("__shifted"))
+      else (total - nullLast(cols.length), 0L)
+    Profile(phantom, Coercion.targets(Coercion.evidence(strings, m), coercionThreshold),
+      rows, quarantined)
+  }
+
   def processFile(spark: SparkSession, path: String, table: String,
                   lake: TableFormat, ledger: Ledger,
                   coercionThreshold: Double = 0.9): Result = {
     val hash = fileHash(path)
-    if (ledger.isLoaded(hash))
-      return Result(hash, "loaded", 0L, skipped = true)
     val priorStatus = ledger.all().get(hash).map(_.status)
+    if (priorStatus.contains("loaded"))
+      return Result(hash, "loaded", 0L, skipped = true)
     ledger.record(FileRecord(hash, path, table, "received", 0L))
     try {
       val raw = loadRaw(spark, path)
       val named = ColumnNameNormalizer(raw)
-      val repaired = OverflowRepair.repair(named)
-      val nonEmpty = repaired.na.drop("all")
-      val coerced = Coercion.coerce(nonEmpty, coercionThreshold)
+      val p = profile(named, coercionThreshold)
+      val nonEmpty = OverflowRepair.flag(named, p.phantom).na.drop("all")
+      val coerced = Coercion.cast(nonEmpty, p.targets)
       val cleaned = coerced.select(coerced.schema.fields.map { f =>
         if (f.dataType == org.apache.spark.sql.types.StringType)
           Cleaning.protocol(col(f.name)).as(f.name)
         else col(f.name)
       }.toIndexedSeq: _*)
       // processed_at is captured ONCE on the driver and stamped as a literal:
-      // current_timestamp() is per-action, and this frame feeds three actions
-      // (count, main append, quarantine append) — persist eviction could
-      // otherwise stamp a file's main and quarantine rows differently.
+      // current_timestamp() is per-action, and this frame feeds two actions
+      // (main append, quarantine append) — a file's main and quarantine rows
+      // must carry the same stamp.
       val processedAt = java.time.Instant.now()
       val stamped = cleaned
         .withColumn("processed_at",
           lit(java.sql.Timestamp.from(processedAt)))
         .withColumn("_source_file_hash", lit(hash))
-        .persist()
       // Quarantine routing (reference prompts/coordinator.py:63-64: shifted
       // rows are suspect — route them for review, never into silver). Rows
       // the overflow repair flagged go to `<table>_quarantine` WITH the flag
       // column for context; the main table receives only clean rows and
       // keeps its schema free of the flag.
-      val shifted = stamped.columns.contains("is_shifted")
-      val good = if (shifted) stamped.filter(!col("is_shifted")).drop("is_shifted")
+      val good = if (stamped.columns.contains("is_shifted"))
+                   stamped.filter(!col("is_shifted")).drop("is_shifted")
                  else stamped
-      val rows = good.count()
-      val qrows = if (shifted) stamped.filter(col("is_shifted")).count() else 0L
-      ledger.record(FileRecord(hash, path, table, "cleaned", rows))
+      ledger.record(FileRecord(hash, path, table, "cleaned", p.rows))
       // Idempotent commit token: the file hash travels WITH the data, so a
       // crash between the lake append and the 'loaded' ledger record cannot
       // cause a double append — the re-run finds the hash already committed
@@ -208,15 +253,14 @@ object FilePipeline {
             !df.filter(col("_source_file_hash") === hash).isEmpty
         }
       if (!alreadyCommitted(table)) lake.append(good, table)
-      if (qrows > 0 && !alreadyCommitted(quarantineTable(table)))
+      if (p.quarantined > 0 && !alreadyCommitted(quarantineTable(table)))
         lake.append(stamped.filter(col("is_shifted")), quarantineTable(table))
-      stamped.unpersist()
-      ledger.record(FileRecord(hash, path, table, "loaded", rows))
+      ledger.record(FileRecord(hash, path, table, "loaded", p.rows))
       // the transcoded sibling is derived data; drop it once the load is done
       val utf8Sibling = Paths.get(path).resolveSibling(
         Paths.get(path).getFileName.toString + ".utf8")
       Files.deleteIfExists(utf8Sibling)
-      Result(hash, "loaded", rows, skipped = false, quarantinedRows = qrows)
+      Result(hash, "loaded", p.rows, skipped = false, quarantinedRows = p.quarantined)
     } catch {
       case e: Exception =>
         ledger.record(FileRecord(hash, path, table, "failed", 0L))

@@ -78,7 +78,70 @@ object DelimiterDetector {
   }
 
   def detectFile(spark: SparkSession, path: String, sample: Int = 100): Char =
-    detect(spark.read.textFile(path).take(sample).toSeq)
+    detect(SourceLines.head(spark, path, sample))
+}
+
+/** The lines `spark.read.textFile` yields for one uncompressed file, read
+  * on the driver instead of by a Spark job. They match it line for line:
+  *  - lines break on LF, CR and CRLF, as in Hadoop's `LineReader`, and a
+  *    final line break adds no empty line;
+  *  - a UTF-8 BOM at the start of the file is dropped, as
+  *    `LineRecordReader` drops it;
+  *  - each line is decoded as UTF-8 with replacement, as
+  *    `UTF8String.toString` decodes it.
+  *
+  * For a head sample, and for counting the lines of a file the driver
+  * already reads whole to hash it. */
+object SourceLines {
+  private val Bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
+
+  def head(spark: SparkSession, path: String, n: Int): Seq[String] =
+    withLines(spark, path)(_.take(n).toVector)
+
+  /** Fold over the lines that are not blank after `String.trim`: the lines
+    * the CSV parser can turn into records. */
+  def foldNonBlank[T](spark: SparkSession, path: String, zero: T)(f: (T, String) => T): T =
+    withLines(spark, path)(_.filter(_.trim.nonEmpty).foldLeft(zero)(f))
+
+  def countNonBlank(spark: SparkSession, path: String): Long =
+    foldNonBlank(spark, path, 0L)((n, _) => n + 1)
+
+  private def withLines[T](spark: SparkSession, path: String)(f: Iterator[String] => T): T = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = new java.io.PushbackInputStream(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p), Bom.length)
+    try {
+      val start = in.readNBytes(Bom.length)
+      if (!start.sameElements(Bom)) in.unread(start)
+      f(new LineIterator(in))
+    } finally in.close()
+  }
+
+  private final class LineIterator(in: java.io.InputStream) extends Iterator[String] {
+    private val chunk = new Array[Byte](64 * 1024)
+    private var len = 0
+    private var pos = 0
+    private val line = new java.io.ByteArrayOutputStream()
+
+    private def read(): Int = {
+      if (pos == len) {
+        len = math.max(in.read(chunk), 0)
+        pos = 0
+      }
+      if (len == 0) -1 else { pos += 1; chunk(pos - 1) & 0xFF }
+    }
+
+    private var b = read()
+    def hasNext: Boolean = b != -1
+    def next(): String = {
+      if (b == -1) throw new NoSuchElementException("no more lines")
+      line.reset()
+      while (b != -1 && b != '\n' && b != '\r') { line.write(b); b = read() }
+      if (b == '\r') { b = read(); if (b == '\n') b = read() }
+      else if (b == '\n') b = read()
+      line.toString(java.nio.charset.StandardCharsets.UTF_8)
+    }
+  }
 }
 
 /** CSV/JSON/Parquet raw readers (reference load_csv.sql & variants). */
@@ -155,18 +218,17 @@ object Readers {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(checkedSchema).csv(path)
       .cache()
-    val corrupt = df.filter(col("_corrupt_record").isNotNull).count()
+    val counts = df.agg(count(lit(1)), count(col("_corrupt_record"))).head()
+    val (loaded, corrupt) = (counts.getLong(0), counts.getLong(1))
     if (corrupt > 0) {
       df.unpersist()
       throw new IllegalStateException(
         s"atomic load failed: $corrupt malformed rows (token overflow or bad " +
           s"quoting) in $path")
     }
-    val loaded = df.count()
     // the CSV parser silently skips blank/whitespace-only lines; count only
     // lines that can become records so legitimate files don't fail the check
-    val rawLines = spark.read.textFile(path)
-      .filter((l: String) => l.trim.nonEmpty).count() - (if (header) 1L else 0L)
+    val rawLines = SourceLines.countNonBlank(spark, path) - (if (header) 1L else 0L)
     if (loaded != rawLines) {
       df.unpersist()
       throw new IllegalStateException(

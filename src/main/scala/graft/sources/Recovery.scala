@@ -13,10 +13,11 @@ import graft.normalize.OverflowRepair
   * columns actually caught spilled data, keep the best, repair the overflow,
   * and re-assert zero row loss.
   *
-  * Scale: every pass is a distributed scan; the only driver-side work is the
-  * header line and the per-config score row (one small agg each). The number
-  * of configs is a constant 4, so recovery costs ~5 scans of the one file
-  * being recovered — the same multiple the reference pays.
+  * Scale: every parse is a distributed scan; the driver reads the file's
+  * lines once (line count, header, token width — as the fast path's atomic
+  * check does) and one small score row per config. The number of configs is
+  * a constant 4, so recovery costs ~5 passes over the one file being
+  * recovered — the same multiple the reference pays.
   */
 object CsvRecovery {
 
@@ -45,15 +46,21 @@ object CsvRecovery {
     * atomic row-count guarantee. Throws if no strategy preserves every row. */
   def recover(spark: SparkSession, path: String, sep: String = ",",
               header: Boolean = true, overflowThreshold: Double = 0.8): DataFrame = {
-    val lines = spark.read.textFile(path).filter((l: String) => l.trim.nonEmpty)
-    val srcRows = lines.count() - (if (header) 1L else 0L)
-    // quote-blind token width: the widest row under null-padding. Recovery is
-    // line-oriented by construction (multiline quoted records belong to the
-    // strict fast path, which handles them before recovery is reached).
-    val width = lines.select(max(size(split(col("value"), Pattern.quote(sep)))))
-      .head().getInt(0)
+    // one driver pass over the non-blank lines: their count, the first one,
+    // and the quote-blind token width — the widest row under null-padding.
+    // Recovery is line-oriented by construction (multiline quoted records
+    // belong to the strict fast path, which handles them before recovery is
+    // reached).
+    val splitter = Pattern.compile(Pattern.quote(sep))
+    val (lineCount, width, firstLine) =
+      SourceLines.foldNonBlank(spark, path, (0L, 0, Option.empty[String])) {
+        case ((n, w, first), l) =>
+          (n + 1, math.max(w, splitter.split(l, -1).length), first.orElse(Some(l)))
+      }
+    require(firstLine.isDefined, s"csv recovery: $path has no non-blank line")
+    val srcRows = lineCount - (if (header) 1L else 0L)
     val headerNames: Seq[String] =
-      if (header) lines.head().split(Pattern.quote(sep), -1).toSeq.map(unquote)
+      if (header) splitter.split(firstLine.get, -1).toSeq.map(unquote)
       else Seq.tabulate(width)(i => s"column$i")
     val base = headerNames.length
     val names = headerNames ++ (base until width).map(i => s"column$i")
@@ -145,8 +152,8 @@ object JsonRepair {
       .withColumn("fixed",
         when(isObject(col("line")), col("line")).otherwise(repair(col("line"))))
       .cache()
-    val n = checked.count()
-    val bad = checked.filter(!isObject(col("fixed"))).count()
+    val counts = checked.agg(count(lit(1)), count(when(!isObject(col("fixed")), 1))).head()
+    val (n, bad) = (counts.getLong(0), counts.getLong(1))
     if (bad > 0) {
       checked.unpersist()
       throw new IllegalStateException(

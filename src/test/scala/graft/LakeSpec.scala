@@ -297,6 +297,40 @@ class LakeSpec extends AnyFunSuite {
     assert(out(0).isNullAt(out(0).fieldIndex("note")))
   }
 
+  test("partitioned append aligns from the SCHEMA file, and by the merged read without one") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val roots = Seq.fill(2)(Files.createTempDirectory("graft-plake"))
+    val tables = roots.map(r => new PartitionedTable(r.toString, Seq("day")))
+    def schemaFile(i: Int) = roots(i).resolve("pa").resolve("SCHEMA")
+    tables.foreach { t =>
+      t.create(Seq((1L, "d1", 10L)).toDF("id", "day", "n"), "pa")
+      // additive evolution: the new column must reach the SCHEMA file
+      t.append(Seq((2L, "d2", 20L, 1.5)).toDF("id", "day", "n", "score"), "pa")
+    }
+    val stored = DataType.fromJson(Files.readString(schemaFile(0))).asInstanceOf[StructType]
+    assert(stored.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("id" -> "bigint", "day" -> "string", "n" -> "bigint", "score" -> "double"))
+    // the second table loses its SCHEMA file: its append falls back to the read
+    Files.delete(schemaFile(1))
+    // type drift: every column arrives as a string
+    val drifted = Seq(("3", "d1", "30", "2.5"), ("4", "d2", "oops", "x")).toDF("id", "day", "n", "score")
+    tables.foreach(_.append(drifted, "pa"))
+    val outs = tables.map { t =>
+      val df = t.read(spark, "pa")
+      (df.schema.map(f => f.name -> f.dataType.simpleString),
+        df.orderBy("id").collect().map(_.toSeq.map(Option(_))).toSeq)
+    }
+    assert(outs(0)._1 == stored.map(f => f.name -> f.dataType.simpleString))
+    assert(outs(0)._2 == Seq(
+      Seq(Some(1L), Some("d1"), Some(10L), None),
+      Seq(Some(2L), Some("d2"), Some(20L), Some(1.5)),
+      Seq(Some(3L), Some("d1"), Some(30L), Some(2.5)),
+      Seq(Some(4L), Some("d2"), None, None)))
+    assert(outs(1) == outs(0), "the SCHEMA path and the read path must align alike")
+    assert(!Files.exists(schemaFile(1)), "a non-evolving append writes no SCHEMA file")
+  }
+
   test("partitioned empty create is readable and appendable, not a broken table") {
     import spark.implicits._
     val t = pfmt("k")

@@ -3,8 +3,11 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.lake.ParquetDirFormat
-import graft.operators.Heuristics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import graft.lake.{ParquetDirFormat, PartitionedTable}
+import graft.normalize.{ColumnNameNormalizer, OverflowRepair}
+import graft.operators.{Cleaning, Coercion, Heuristics}
 import graft.pipeline.{FilePipeline, Ledger}
 
 class PipelineSpec extends AnyFunSuite {
@@ -121,6 +124,118 @@ class PipelineSpec extends AnyFunSuite {
     // a stray late failure event cannot regress a completed load
     ledger.record(graft.pipeline.FileRecord("h1", "/p", "t", "failed", 0))
     assert(ledger.isLoaded("h1"))
+  }
+
+  /** Rows, quarantined rows and the main and quarantine contents of a load,
+    * by the measuring chain the fused profile replaces: OverflowRepair.repair
+    * -> na.drop("all") -> Coercion.coerce -> count, one pass each. */
+  private def chained(path: String): (Long, Long, DataFrame, Option[DataFrame]) = {
+    val named = ColumnNameNormalizer(FilePipeline.loadRaw(spark, path))
+    val coerced = Coercion.coerce(OverflowRepair.repair(named).na.drop("all"), 0.9)
+    val cleaned = coerced.select(coerced.schema.fields.map { f =>
+      if (f.dataType == org.apache.spark.sql.types.StringType)
+        Cleaning.protocol(col(f.name)).as(f.name)
+      else col(f.name)
+    }.toIndexedSeq: _*)
+    if (!cleaned.columns.contains("is_shifted")) (cleaned.count(), 0L, cleaned, None)
+    else {
+      val good = cleaned.filter(!col("is_shifted")).drop("is_shifted")
+      val quar = cleaned.filter(col("is_shifted"))
+      (good.count(), quar.count(), good, Some(quar))
+    }
+  }
+
+  /** Schema and rows of a frame, provenance columns left out. */
+  private def contents(df: DataFrame): (Seq[(String, String)], Seq[String]) = {
+    val d = df.drop("processed_at", "_source_file_hash")
+    (d.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq,
+      d.collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted)
+  }
+
+  test("the one-pass load profile equals the repair -> drop -> coerce -> count chain") {
+    val root = Files.createTempDirectory("graft-profile")
+    val inputs: Seq[(String, String, Long, Long)] = Seq(
+      // name, content, expected rows, expected quarantined rows
+      ("clean.csv", "id,name,amount,day,flag\n1, alice ,3.5,2024-01-02,true\n" +
+        "2,bob,4,2024-01-03,false\n3,\tcarol,x,2024-01-04,true\n", 3L, 0L),
+      // a mostly-empty trailing column: the load's own overflow repair flags it
+      ("phantom.csv", "id,name,extra\n" + (1 to 9).map(i => s"$i,n$i,").mkString("\n") +
+        "\n10,n10,spill\n,,\n", 10L, 1L),
+      // token overflow: CsvRecovery flags the row before the load sees it
+      ("recovered.csv", "id,name,notes\n" + (1 to 9).map(i => s"$i,name$i,note$i").mkString("\n") +
+        "\n10,Bob,messy, extra\n", 9L, 1L),
+      ("all_null_rows.csv", "a,b,c\n1,x,7\n,,\n2,y,8\n,,\n3,,\n", 3L, 0L),
+      ("header_only.csv", "a,b\n", 0L, 0L),
+      ("typed.jsonl", "{\"id\": 1, \"score\": 2.5, \"ok\": true, \"tags\": [\"x\"], \"code\": \"12\"}\n" +
+        "{}\n{\"id\": 2, \"score\": null, \"ok\": false, \"tags\": [], \"code\": \"13\"}\n" +
+        "{\"id\": 3, \"code\": \" 14 \", \"note\": \"n\"}\n", 3L, 0L))
+    inputs.foreach { case (name, content, rows, quarantined) =>
+      val path = root.resolve(name)
+      Files.write(path, content.getBytes("UTF-8"))
+      val (oldRows, oldQuar, oldGood, oldQuarDf) = chained(path.toString)
+      assert((oldRows, oldQuar) == ((rows, quarantined)), name)
+      val lake = new ParquetDirFormat(root.resolve(s"lake-$name").toString)
+      val r = FilePipeline.processFile(spark, path.toString, "t", lake,
+        new Ledger(root.resolve(s"$name.ledger").toString))
+      assert((r.rows, r.quarantinedRows) == ((oldRows, oldQuar)), name)
+      assert(contents(lake.read(spark, "t")) == contents(oldGood), name)
+      assert(lake.exists(FilePipeline.quarantineTable("t")) == (oldQuar > 0), name)
+      if (oldQuar > 0)
+        assert(contents(lake.read(spark, FilePipeline.quarantineTable("t"))) ==
+          contents(oldQuarDf.get), name)
+    }
+  }
+
+  test("job-count guard: a clean CSV load into an existing un-indexed PartitionedTable") {
+    val root = Files.createTempDirectory("graft-jobs")
+    def orders(from: Int): String =
+      "o_orderkey,o_custkey,o_orderstatus,o_totalprice,o_orderdate,o_comment\n" +
+        (from until from + 200).map { i =>
+          s"$i,${i % 37}, ${"FOP"(i % 3)} ,${i * 1.25},2024-01-${"%02d".format(i % 28 + 1)},note $i"
+        }.mkString("\n") + "\n"
+    val first = root.resolve("orders-1.csv")
+    val second = root.resolve("orders-2.csv")
+    Files.write(first, orders(1).getBytes("UTF-8"))
+    Files.write(second, orders(1001).getBytes("UTF-8"))
+    val lake = new PartitionedTable(root.resolve("lake").toString, Seq("o_orderstatus"))
+    val ledger = new Ledger(root.resolve("ledger.tsv").toString)
+    FilePipeline.processFile(spark, first.toString, "orders", lake, ledger)
+
+    val sc = spark.sparkContext
+    val group = "job-count-guard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var fenced = false
+    val listener = new SparkListener {
+      private def groupOf(p: java.util.Properties) =
+        Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (groupOf(e.properties).contains(group)) jobs.incrementAndGet()
+    }
+    // a listener sees events in post order: once the fence job's end
+    // arrives, every job of the load has been counted
+    val fence = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = fenced = true
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one clean CSV load", interruptOnCancel = false)
+      val r = try FilePipeline.processFile(spark, second.toString, "orders", lake, ledger)
+              finally sc.clearJobGroup()
+      assert(r.rows == 200 && r.quarantinedRows == 0)
+      sc.addSparkListener(fence)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!fenced && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(fenced, "listener fence timed out")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.removeSparkListener(fence)
+    }
+    assert(lake.read(spark, "orders").count() == 400)
+    // job counts repeat exactly, so the pin is exact: a rise means a load
+    // gained a Spark job; a change that removes one on purpose lowers the pin
+    val pinned = 7
+    assert(jobs.get() == pinned, s"a clean CSV load ran ${jobs.get()} Spark jobs, pinned at $pinned")
   }
 
   test("PII name matching is token-exact, not substring") {

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{DelimiterDetector, FormatDetector, Formats, Readers, Sinks}
+import graft.sources.{DelimiterDetector, FormatDetector, Formats, Readers, Sinks, SourceLines}
 
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -62,6 +62,46 @@ class SourcesSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Readers.atomicCsv(spark, p, multiLine = true)
     }
+  }
+
+  test("driver-side lines equal spark.read.textFile: sample, delimiter and line count") {
+    def bytes(s: String) = s.getBytes("UTF-8")
+    // an invalid UTF-8 byte (0xFF) and a truncated sequence (0xE2 0x82) well
+    // past Encoding's 64 KB head, so the file reaches the readers undecoded
+    val head64k = bytes((1 to 8000).map(i => f"$i%05d,x,y\n").mkString)
+    val invalid = head64k ++ Array(0x31, 0x2C, 0xFF, 0x2C, 0xE2, 0x82, 0x0A).map(_.toByte) ++
+      bytes("2,b,c\n")
+    // a CRLF straddling byte 65536, where a 64 KB read ends
+    val pad = "a,b,c\n" + "p,q,r" + "p" * (65536 - 6 - 5 - 1) + "\r\n1,2,3\n"
+    val bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
+    val cases: Seq[(String, Array[Byte], String)] = Seq(
+      ("crlf", bytes("a,b\r\n1,2\r\n3,4\r\n"), ","),
+      ("lone_cr", bytes("a;b\r1;2\r\r3;4"), ";"),
+      ("blank", bytes("a|b\n\n   \n1|2\n\t\n \r\n3|4\n\n"), "|"),
+      ("multibyte", bytes("a,b\nü,€\n\uD83D\uDE00,x\n"), ","),
+      ("invalid_after_head", invalid, ","),
+      ("crlf_on_chunk_edge", bytes(pad), ","),
+      ("bom", bom ++ bytes("a,b\n1,2\n"), ","))
+    val dir = Files.createTempDirectory("graft-lines")
+    cases.foreach { case (name, content, sep) =>
+      val p = dir.resolve(s"$name.csv")
+      Files.write(p, content)
+      val text = spark.read.textFile(p.toString)
+      val sample = text.take(100).toSeq
+      assert(SourceLines.head(spark, p.toString, 100) == sample, name)
+      assert(SourceLines.head(spark, p.toString, Int.MaxValue) == text.collect().toSeq, name)
+      assert(DelimiterDetector.detectFile(spark, p.toString) == DelimiterDetector.detect(sample), name)
+      assert(DelimiterDetector.detectFile(spark, p.toString) == sep.head, name)
+      val nonBlank = text.filter((l: String) => l.trim.nonEmpty).count()
+      assert(SourceLines.countNonBlank(spark, p.toString) == nonBlank, name)
+      // atomicCsv's guard holds on each file: its driver-side count agrees
+      // with the rows the CSV parser loads
+      assert(Readers.atomicCsv(spark, p.toString, sep = sep).count() == nonBlank - 1, name)
+    }
+    val empty = dir.resolve("empty.csv")
+    Files.write(empty, Array.emptyByteArray)
+    assert(SourceLines.head(spark, empty.toString, 100).isEmpty)
+    assert(SourceLines.countNonBlank(spark, empty.toString) == 0L)
   }
 
   test("json sniff: array vs jsonl") {
