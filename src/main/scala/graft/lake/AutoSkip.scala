@@ -16,9 +16,9 @@ import org.apache.spark.sql.types._
   * predicate, without the caller naming an index (the reference gets this
   * transparently from its engine: pmgraham/biglake-iceberg-pipeline
   * terraform/bigquery_tables.tf:97-116 declares Iceberg tables and
-  * tools/quality.py queries never name an index — the engine prunes). The
-  * API-mediated [[SkippingScan]] remains for callers that want the candidate
-  * list itself; this is the path every OTHER query takes.
+  * tools/quality.py queries never name an index — the engine prunes). It is
+  * the lake's only pruned read path: the skipping gates in
+  * [[graft.queries.Events]] go through it too.
   *
   * How it plugs into Spark: [[read]] returns a DataFrame over a
   * `HadoopFsRelation` whose location is a [[SidecarFileIndex]]. Catalyst
@@ -71,15 +71,6 @@ object AutoSkip {
     indexFrom(spark, root, t, PartitionedTable.open(root, t).read(spark, t),
       zoneCols, bloomCols)
 
-  /** [[index]] for a plain versioned [[ParquetDirFormat]] table — same
-    * sidecar layout under `<root>/<t>/idx` (the `idx` directory never
-    * matches the `v<N>` version-dir pattern, so the table's own version
-    * resolution ignores it). */
-  def indexDir(spark: SparkSession, root: String, t: String,
-               zoneCols: Seq[String], bloomCols: Seq[String] = Seq.empty): Unit =
-    indexFrom(spark, root, t, new ParquetDirFormat(root).read(spark, t),
-      zoneCols, bloomCols)
-
   private def indexFrom(spark: SparkSession, root: String, t: String,
                         df: DataFrame, zoneCols: Seq[String],
                         bloomCols: Seq[String]): Unit =
@@ -124,9 +115,9 @@ object AutoSkip {
     * retains (see [[expireIndexGenerations]]). */
   val CommitRefreshRetain = 3
 
-  /** WRITE-transparent sidecar maintenance — the commit hook both lake
-    * formats call after a successful data commit: iff the table has sidecars
-    * (someone called [[index]]/[[indexDir]] at least once), refresh them
+  /** WRITE-transparent sidecar maintenance — the commit hook
+    * [[PartitionedTable]] calls after a successful data commit: iff the
+    * table has sidecars (someone called [[index]] at least once), refresh them
     * against the just-committed snapshot, discovering the indexed column
     * sets from the sidecars themselves (zone columns from the zonemap's
     * `<c>__min` fields, Bloom columns from the `bloom__<c>` table names).
@@ -149,10 +140,9 @@ object AutoSkip {
     * [[CommitRefreshRetain]] are expired here too, so steady-state sidecar
     * storage is O(retain), not O(commits). Failure NEVER fails the data
     * commit (it already landed): any error degrades to a stale sidecar,
-    * which the superset guarantee makes correct-but-unpruned. Recursion
-    * terminates structurally: sidecar tables live in a ParquetDirFormat
-    * lake whose own tables have no `idx` directory, so their commits no-op
-    * here. */
+    * which the superset guarantee makes correct-but-unpruned. The sidecars
+    * themselves live in a [[ParquetDirFormat]] lake, whose commits never
+    * call this hook. */
   private[lake] def refreshAfterCommit(spark: SparkSession, root: String,
                                        t: String, df: => DataFrame): Unit =
     try {
@@ -184,48 +174,6 @@ object AutoSkip {
     val table = PartitionedTable.open(root, t)
     val schema = table.read(spark, t).schema
     val withId = table.dataFileStatuses(t)
-    val partVals = withId.map { case (id, st) =>
-      pathOf(st.getPath.toString) -> table.idToValues(id)
-    }.toMap
-    open(spark, root, t, withId.map(_._2), partVals, schema,
-      virtualPartCols = Seq.empty)
-  }
-
-  /** [[read]] for a plain versioned [[ParquetDirFormat]] table: the same
-    * transparent pruning, with partition values (when the table was
-    * createPartitioned) recovered from the `c=v` path segments Spark wrote
-    * inside the snapshot directory. */
-  def readDir(spark: SparkSession, root: String, t: String): DataFrame = {
-    val table = new ParquetDirFormat(root)
-    val schema = table.read(spark, t).schema
-    val statuses = table.dataFileStatuses(t)
-    val parts = table.partitionSpec(t).toSet
-    val partVals = statuses.map { st =>
-      val vals = st.getPath.toString.split("/").filter(_.contains("="))
-        .map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k -> unescapePathName(v)
-        }.filter(kv => parts(kv._1)).toMap
-      pathOf(st.getPath.toString) -> vals
-    }.toMap
-    open(spark, root, t, statuses, partVals, schema,
-      virtualPartCols = table.partitionSpec(t))
-  }
-
-  private def unescapePathName(s: String): String = LakePaths.unescapePathName(s)
-
-  /** `virtualPartCols`: partition columns NOT present in the data files
-    * (Spark's own `partitionBy` strips them — the ParquetDirFormat layout).
-    * They become the FileIndex's REAL partitionSchema, with per-file values
-    * parsed from the path, because Spark removes partition-only predicates
-    * from the post-scan filter and trusts the FileIndex to prune them
-    * EXACTLY. PartitionedTable passes none: its shadow-column layout keeps
-    * real columns in the files, so every predicate stays a data filter. */
-  private def open(spark: SparkSession, root: String, t: String,
-                   statuses: Seq[FileStatus],
-                   partVals: Map[String, Map[String, String]],
-                   schema: StructType,
-                   virtualPartCols: Seq[String]): DataFrame = {
     // partition values from the layout's path mapping: exact bounds
     // (min = max = value) for STRING partition columns; Hive's default-
     // partition marker means "this column is null here". Non-string
@@ -233,9 +181,9 @@ object AutoSkip {
     // column's value space) — the zone sidecar covers those if indexed.
     val stringPartCols = schema.fields
       .filter(_.dataType == StringType).map(_.name).toSet
-    val partBounds: Map[String, Map[String, ColZone]] = partVals.map {
-      case (key, vals) =>
-        val zones = vals.collect {
+    val partBounds: Map[String, Map[String, ColZone]] = withId.map {
+      case (id, st) =>
+        val zones = table.idToValues(id).collect {
           case (c, raw) if stringPartCols(c) =>
             if (raw == "__HIVE_DEFAULT_PARTITION__")
               c -> ColZone(null, null, nulls = 1L, rows = 1L)
@@ -244,13 +192,14 @@ object AutoSkip {
               c -> ColZone(v, v, nulls = 0L, rows = 1L)
             }
         }
-        key -> zones
-    }
+        pathOf(st.getPath.toString) -> zones
+    }.toMap
 
     // sidecars resolve through the VERSIONED index lake: the handle pins one
-    // committed immutable generation (resolved LAZILY, on the first
-    // listFiles that actually carries filters — a projection-only read must
-    // not pay one Spark job per sidecar it can never use). Existence-gated
+    // committed immutable generation of each sidecar, resolved LAZILY — the
+    // zone map on the first listFiles that carries filters, a column's Bloom
+    // filter on the first one that pins a point value on that column (a read
+    // must not pay a Spark job for a sidecar it cannot use). Existence-gated
     // (no probe cost for indexes never built); a torn/unreadable sidecar
     // degrades to "no pruning" via the Try.
     val lake = idxLake(root, t)
@@ -259,67 +208,35 @@ object AutoSkip {
       else scala.util.Try(collectZones(lake.read(spark, "zonemap")))
         .getOrElse(Map.empty)
 
-    val bloomsF: () => Seq[BloomSidecar] = () => schema.fields.toSeq
-      .filter(f => bloomSafeType(f.dataType))
-      .filter(f => scala.util.Try(lake.exists(bloomTable(f.name))).getOrElse(false))
-      .flatMap { f =>
-        scala.util.Try {
+    val bloomF: StructField => Option[BloomSidecar] = f =>
+      scala.util.Try {
+        if (!lake.exists(bloomTable(f.name))) None
+        else {
           val idx = lake.read(spark, bloomTable(f.name))
           val covered = idx.select("file").distinct()
             .collect().map(r => pathOf(r.getString(0))).toSet
-          BloomSidecar(f.name, f.dataType, idx, covered)
-        }.toOption
-      }
+          Some(BloomSidecar(idx, covered))
+        }
+      }.toOption.flatten
 
-    val partSchema = StructType(schema.fields.filter(f => virtualPartCols.contains(f.name)))
-    val dataSchema = StructType(schema.fields.filterNot(f => virtualPartCols.contains(f.name)))
-    // per-file partition VALUES in the partition schema's own types (legacy
-    // string cast, the same parse partition discovery applies); the raw
-    // string map doubles as the grouping key in listFiles
-    val partRows: Map[String, (Map[String, String], InternalRow)] =
-      if (partSchema.isEmpty) Map.empty
-      else statuses.map { st =>
-        val key = pathOf(st.getPath.toString)
-        val vals = partVals.getOrElse(key, Map.empty)
-        val row = InternalRow.fromSeq(partSchema.fields.toSeq.map { f =>
-          vals.get(f.name) match {
-            case Some(raw) if raw != "__HIVE_DEFAULT_PARTITION__" =>
-              // the SESSION time zone, not a hardcoded UTC: Spark's own
-              // partition discovery parses timestamp/date partition values
-              // under sessionLocalTimeZone, and the served values must agree
-              // with it (r12 ADVICE)
-              scala.util.Try(Cast(
-                Literal(org.apache.spark.unsafe.types.UTF8String.fromString(raw),
-                  StringType), f.dataType,
-                Option(spark.sessionState.conf.sessionLocalTimeZone)).eval(null))
-                .getOrElse(null)
-            case _ => null
-          }
-        })
-        key -> (vals.filter(kv => partSchema.fieldNames.contains(kv._1)), row)
-      }.toMap
     val fileIndex = new SidecarFileIndex(spark, new HPath(s"$root/$t"),
-      statuses, partBounds, zonesF, bloomsF, partSchema, partRows)
-    val relation = HadoopFsRelation(fileIndex, partSchema, dataSchema, None,
+      withId.map(_._2), partBounds, zonesF,
+      schema.fields.toSeq.filter(f => bloomSafeType(f.dataType)), bloomF)
+    val relation = HadoopFsRelation(fileIndex, new StructType(), schema, None,
       new ParquetFileFormat, Map.empty[String, String])(spark)
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .baseRelationToDataFrame(relation)
   }
 
   /** The [[SidecarFileIndex]] behind a frame [[read]] produced (after any
-    * number of filters/projections) — lets specs assert which files the last
-    * action actually opened via [[SidecarFileIndex.lastKept]]. */
+    * number of filters/projections/joins; the first one in the plan) — lets
+    * specs assert which files the last action actually opened via
+    * [[SidecarFileIndex.lastKept]]. */
   private[graft] def fileIndexOf(df: DataFrame): Option[SidecarFileIndex] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case h: HadoopFsRelation => h.location match {
-            case s: SidecarFileIndex => Some(s)
-            case _ => None
-          }
-          case _ => None
-        }
-    }.flatten
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.relation
+    }.collect { case h: HadoopFsRelation => h.location }
+      .collectFirst { case s: SidecarFileIndex => s }
 
   /** Per-file, per-column pruning evidence in CATALYST-INTERNAL values
     * (UTF8String for strings, raw primitives elsewhere) so comparisons run
@@ -327,8 +244,8 @@ object AutoSkip {
     * min/max with nulls >= rows means "no non-null value in this file". */
   private[graft] final case class ColZone(min: Any, max: Any, nulls: Long, rows: Long)
 
-  private[graft] final case class BloomSidecar(col: String, dt: DataType,
-                                              index: DataFrame, covered: Set[String])
+  /** One column's Bloom sidecar and the files it covers. */
+  private[graft] final case class BloomSidecar(index: DataFrame, covered: Set[String])
 
   /** Types whose JVM toString equals Spark's CAST(x AS STRING) — the
     * canonical form [[BloomIndex]] hashes. Restricting bloom pruning to
@@ -360,33 +277,31 @@ object AutoSkip {
     }.toMap
   }
 
-  /** The [[FileIndex]] doing the transparent pruning. For the
-    * PartitionedTable layout `partSchema` is empty on purpose — partition
-    * columns live IN the data files (shadow-column layout), so every
-    * predicate arrives as a data filter and one bounds mechanism covers
-    * partition, zone, and bloom evidence uniformly. For ParquetDirFormat
-    * layouts (`partitionBy`-stripped columns) `partSchema` carries the
-    * virtual partition columns and listFiles must — and does — apply the
-    * partition filters EXACTLY against each file's parsed values, because
-    * Spark removes partition-only predicates from the post-scan filter. */
+  /** The [[FileIndex]] doing the transparent pruning. Its partition schema
+    * is empty on purpose: partition columns live IN the data files
+    * (PartitionedTable's shadow-column layout), so every predicate arrives
+    * as a data filter, Spark re-applies all of them after the scan, and one
+    * bounds mechanism covers partition, zone, and bloom evidence uniformly.
+    * `bloomCols` are the columns a Bloom sidecar may exist for; `bloomF`
+    * resolves one, at most once per column per handle. */
   private[graft] final class SidecarFileIndex(
       spark: SparkSession, root: HPath, allFiles: Seq[FileStatus],
       partBounds: Map[String, Map[String, ColZone]],
       zonesF: () => Map[String, Map[String, ColZone]],
-      bloomsF: () => Seq[BloomSidecar],
-      partSchema: StructType = new StructType(),
-      partRows: Map[String, (Map[String, String], InternalRow)] = Map.empty)
+      bloomCols: Seq[StructField],
+      bloomF: StructField => Option[BloomSidecar])
     extends FileIndex {
 
-    // forced only by a filtered listFiles — see the open() scaladoc
+    // forced only by a filtered listFiles — see the read() comment
     private lazy val zones = zonesF()
-    private lazy val blooms = bloomsF()
+    private val blooms =
+      scala.collection.concurrent.TrieMap.empty[String, Option[BloomSidecar]]
 
     /** Last pruning outcome, for specs asserting which files a query opened. */
     @volatile var lastKept: Seq[String] = allFiles.map(_.getPath.toString)
 
     override def rootPaths: Seq[HPath] = Seq(root)
-    override def partitionSchema: StructType = partSchema
+    override def partitionSchema: StructType = new StructType()
     override def sizeInBytes: Long = allFiles.map(_.getLen).sum
     override def inputFiles: Array[String] = allFiles.map(_.getPath.toString).toArray
     override def refresh(): Unit = () // snapshot handle — reopen via AutoSkip.read
@@ -402,51 +317,27 @@ object AutoSkip {
         // nothing can prune — answer from the listing alone, never forcing
         // the sidecar reads
         lastKept = allFiles.map(_.getPath.toString)
-        return groupDirs(allFiles)
+        return Seq(PartitionDirectory(InternalRow.empty, allFiles.toArray))
       }
-      val bloomKeeps: Seq[(BloomSidecar, Set[String])] = blooms.flatMap { b =>
-        pointValues(filters, b.col, b.dt).map { vs =>
-          b -> bloomCache.getOrElseUpdate((b.col, vs),
-            BloomIndex.candidateFiles(spark, b.index, vs.toSeq.sorted)
-              .map(pathOf).toSet)
+      val bloomKeeps: Seq[(BloomSidecar, Set[String])] = bloomCols.flatMap { f =>
+        pointValues(filters, f.name, f.dataType).flatMap { vs =>
+          blooms.getOrElseUpdate(f.name, bloomF(f)).map { b =>
+            b -> bloomCache.getOrElseUpdate((f.name, vs),
+              BloomIndex.candidateFiles(spark, b.index, vs.toSeq.sorted)
+                .map(pathOf).toSet)
+          }
         }
       }
-      // EXACT partition-filter predicate over the virtual partition values
-      // (bind by name, null evals drop — SQL filter semantics); the bounds
-      // mechanism below additionally prunes on anything it understands
-      val exactPart: InternalRow => Boolean =
-        if (partSchema.isEmpty || partitionFilters.isEmpty) _ => true
-        else {
-          val bound = partitionFilters.map(_.transform {
-            case a: AttributeReference =>
-              val i = partSchema.fieldIndex(a.name)
-              BoundReference(i, partSchema.fields(i).dataType, nullable = true)
-          }).reduce(And)
-          val pred = Predicate.createInterpreted(bound)
-          row => pred.eval(row)
-        }
       val kept = allFiles.filter { st =>
         val key = pathOf(st.getPath.toString)
         val bounds = partBounds.getOrElse(key, Map.empty) ++
           zones.getOrElse(key, Map.empty)
-        partRows.get(key).forall(pr => exactPart(pr._2)) &&
-          filters.forall(f => keepByBounds(bounds, f)) &&
+        filters.forall(f => keepByBounds(bounds, f)) &&
           bloomKeeps.forall { case (b, cand) => !b.covered(key) || cand(key) }
       }
       lastKept = kept.map(_.getPath.toString)
-      groupDirs(kept)
+      Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
     }
-
-    private def groupDirs(files: Seq[FileStatus]): Seq[PartitionDirectory] =
-      if (partSchema.isEmpty)
-        Seq(PartitionDirectory(InternalRow.empty, files.toArray))
-      else
-        files.groupBy(st => partRows.get(pathOf(st.getPath.toString)).map(_._1))
-          .map { case (_, sts) =>
-            val row = partRows.get(pathOf(sts.head.getPath.toString))
-              .map(_._2).getOrElse(InternalRow.empty)
-            PartitionDirectory(row, sts.toArray)
-          }.toSeq
 
     /** Conservative zone evaluation: true = the file MIGHT contain a
       * matching row (keep), false = provably cannot (prune). Unhandled

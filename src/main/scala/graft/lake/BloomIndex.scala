@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shape: build is ONE scan with a map-side-combined bit_or
   * aggregate (shuffle carries at most files x bits/64 words); lookup cost
-  * is index-sized, never data-sized; the subsequent read opens only
+  * is index-sized, never data-sized; [[AutoSkip.read]] then opens only
   * candidate files. No false negatives by construction — a file containing
   * a looked-up value always survives; false positives only cost extra file
-  * opens, never wrong results, because the caller re-applies the exact
-  * predicate.
+  * opens, never wrong results, because Spark re-applies the exact predicate
+  * after the scan.
   */
 object BloomIndex {
 
@@ -52,7 +52,7 @@ object BloomIndex {
     * positions are only meaningful under the parameters that computed them,
     * so an index queried with different parameters would silently return
     * false negatives — missing files, breaking the superset guarantee. The
-    * read path ([[candidateFiles]]/[[lookup]]) therefore takes no parameter
+    * read path ([[candidateFiles]]) therefore takes no parameter
     * arguments at all; it recovers them from the index, surviving any lake
     * round-trip. Two int32 columns per ≤ bits/64 rows per file is sidecar
     * noise next to the 8-byte bitmap word they ride with. */
@@ -133,20 +133,5 @@ object BloomIndex {
       .filter(col("hit_bits") === k)
       .select("file").distinct()
       .collect().map(_.getString(0)).toSeq
-  }
-
-  /** Point-lookup read through the index: open only candidate files, then
-    * re-apply the EXACT predicate (clears Bloom false positives). An empty
-    * candidate set — the common case for absent keys — reads nothing. NOTE:
-    * the index keys a value's STRING form (the build and lookup sides hash
-    * the same canonical text), so `values` must render the same way the
-    * column casts to string. */
-  def lookup(spark: SparkSession, index: DataFrame, c: String, values: Seq[Any],
-             schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val files = candidateFiles(spark, index, values)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files: _*)
-      .filter(col(c).cast("string").isin(values.map(_.toString): _*))
   }
 }

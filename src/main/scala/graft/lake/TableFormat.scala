@@ -456,10 +456,6 @@ class ParquetDirFormat(root: String) extends TableFormat {
     val parts = partitionSpec(table)
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer).parquet(dir)
     io.writeHint(pointer(table), next.toString)
-    // write-transparent sidecar maintenance: no-op unless this table was
-    // ever indexed (two file stats); never fails the commit
-    AutoSkip.refreshAfterCommit(df.sparkSession, root, table,
-      read(df.sparkSession, table))
   }
 
   override def create(df: DataFrame, table: String): Unit = {
@@ -507,15 +503,6 @@ class ParquetDirFormat(root: String) extends TableFormat {
     val rows = df.count()
     val nFiles = math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile).toInt
     commit(df.repartition(nFiles), table)
-  }
-
-  /** FileStatus of every data file in the CURRENT snapshot — the raw
-    * material for [[AutoSkip.readDir]]'s FileIndex. Listing-sized work. */
-  def dataFileStatuses(table: String): Seq[FileStatus] = {
-    val v = currentVersion(table).getOrElse(
-      throw new IllegalArgumentException(s"no such table: $table"))
-    io.listFilesRecursive(versionDir(table, v))
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
   }
 
   /** Names of all tables under this root (directories with a LAST pointer
@@ -825,24 +812,10 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     else readDirs(spark, t, keep.flatMap(_._2))
   }
 
-  /** Data FILES of the partitions whose column->value map satisfies `pred` —
-    * the manifest-pruning third of a composed [[SkippingScan]]: exposing the
-    * file list (rather than a DataFrame) lets callers intersect it with the
-    * zone-map and Bloom sidecars' candidate lists before opening anything.
-    * Manifest-sized listing work; no data file is read. Pruning is EXACT by
-    * construction (a file lives in exactly its partition's directory), so no
-    * re-filter is needed on the partition predicate. */
-  def partitionFiles(t: String, pred: Map[String, String] => Boolean): Seq[String] = {
-    val keep = manifest(t).filter { case (id, _) => pred(idToValues(id)) }
-    keep.flatMap(_._2).flatMap(rel => io.listFilesRecursive(s"${dataDir(t)}/$rel"))
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
-  }
-
   /** (partitionId, FileStatus) for every data file in the current manifest
     * snapshot — the raw material for a [[AutoSkip.SidecarFileIndex]], which
-    * needs sizes and partition identities, not just paths. Same
-    * manifest-sized listing budget as [[partitionFiles]]. */
+    * needs sizes and partition identities, not just paths. Manifest-sized
+    * listing work; no data file is read. */
   def dataFileStatuses(t: String): Seq[(String, FileStatus)] =
     manifest(t).flatMap { case (id, dirs) =>
       dirs.flatMap(rel => io.listFilesRecursive(s"${dataDir(t)}/$rel"))

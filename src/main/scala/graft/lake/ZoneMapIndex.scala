@@ -1,17 +1,18 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StringType
 
 /** Per-file min/max zone-map sidecar for RANGE file skipping — the
   * manifest-stats layer of an Iceberg-style lake (reference:
   * pmgraham/biglake-iceberg-pipeline terraform/bigquery_tables.tf:97-116
   * declares Iceberg tables whose manifests carry exactly these bounds; no
   * engine-side analogue exists there — this is a beyond-reference scale
-  * component). Completes the file-skipping triad:
+  * component). One of the three kinds of evidence [[AutoSkip.read]]'s
+  * FileIndex prunes on:
   *
-  *  - partition pruning ([[TableFormat]]) — coarse, by partition value;
+  *  - partition values ([[PartitionedTable]]'s manifest) — by partition value;
   *  - [[BloomIndex]] — point lookups on high-cardinality unclustered ids;
   *  - zone maps (this) — RANGE predicates, where a Bloom filter is blind.
   *
@@ -24,41 +25,52 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Bounds are stored IN THE COLUMN'S OWN TYPE (one sidecar row per file,
   * a `<col>__min`/`<col>__max`/`<col>__nulls` triple per indexed column),
   * so pruning comparisons are exact — no double rounding on int64 keys, no
-  * collation surprises on strings. Long strings are truncated the way
-  * Iceberg truncates manifest bounds: lower bounds truncate to a prefix
-  * (always a valid lower bound); upper bounds truncate and INCREMENT the
-  * last kept code unit — if no code unit below U+FFFF exists to increment,
-  * the full string is kept (correctness first, width second).
+  * collation surprises on strings. Strings longer than 32 code units are
+  * truncated the way Iceberg truncates manifest bounds: lower bounds
+  * truncate to a prefix (always a valid lower bound); upper bounds truncate
+  * and INCREMENT the last kept code unit — if no code unit below U+FFFF
+  * exists to increment, the full string is kept (correctness first, width
+  * second).
   *
   * Superset guarantee: a file that contains a row matching the range always
-  * survives [[candidateFiles]]; false survivors only cost file opens —
-  * [[rangeScan]] re-applies the exact predicate. Rows whose indexed column
-  * is NULL never match a range predicate, so all-null files prune away.
+  * survives [[AutoSkip.read]]'s pruning; false survivors only cost file
+  * opens — Spark re-applies the exact predicate after the scan. Rows whose
+  * indexed column is NULL never match a range predicate, so all-null files
+  * prune away.
   */
 object ZoneMapIndex {
 
+  /** Length a string bound is truncated to: code points for the lower
+    * bound (Spark's `substring`), UTF-16 code units for the upper bound. */
+  private val MaxStrLen = 32
+
   /** Iceberg-style upper-bound truncation (see Iceberg spec §Appendix D,
     * "Single-value serialization... truncate(L, s)"): keep `maxLen` code
-    * units, then increment the last one that is < U+FFFF and drop the rest;
-    * None when every kept unit is U+FFFF (no safe short upper bound). */
+    * units, then increment the last one that is neither U+FFFF nor a
+    * surrogate half and drop the rest (U+D7FF steps over the surrogate range
+    * to U+E000); None when no kept unit qualifies (no safe short upper
+    * bound). A surrogate half is skipped because Spark stores a lone one as
+    * '?', which sorts below the value it should bound, and the file would
+    * be pruned from reads that match it. */
   private[graft] def truncatedUpper(s: String, maxLen: Int): Option[String] = {
     if (s.length <= maxLen) return Some(s)
     val prefix = s.substring(0, maxLen).toCharArray
     var i = prefix.length - 1
-    while (i >= 0 && prefix(i) == '\uFFFF') i -= 1
+    while (i >= 0 && (prefix(i) == '\uFFFF' || Character.isSurrogate(prefix(i)))) i -= 1
     if (i < 0) None
-    else Some(new String(prefix, 0, i) + (prefix(i) + 1).toChar)
+    else Some(new String(prefix, 0, i) +
+      (if (prefix(i) == '\uD7FF') '\uE000' else (prefix(i) + 1).toChar))
   }
 
-  private def boundCols(df: DataFrame, c: String, maxStrLen: Int): Seq[Column] = {
+  private def boundCols(df: DataFrame, c: String): Seq[Column] = {
     val isStr = df.schema(c).dataType == StringType
     val lower =
-      if (isStr) substring(min(col(c)), 1, maxStrLen)
+      if (isStr) substring(min(col(c)), 1, MaxStrLen)
       else min(col(c))
     val upper =
       if (isStr) {
         val fn = udf((s: String) =>
-          if (s == null) null else truncatedUpper(s, maxStrLen).getOrElse(s))
+          if (s == null) null else truncatedUpper(s, MaxStrLen).getOrElse(s))
         fn(max(col(c)))
       } else max(col(c))
     Seq(lower.as(s"${c}__min"), upper.as(s"${c}__max"),
@@ -70,16 +82,15 @@ object ZoneMapIndex {
     * shuffle carries files x columns bound pairs, never data. The string
     * `udf` sits on the files-sized AGGREGATED frame (post-shuffle, one value
     * per file), not in the row-scan hot path. */
-  def build(table: DataFrame, cols: Seq[String], maxStrLen: Int = 32): DataFrame = {
+  def build(table: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "index at least one column")
-    require(maxStrLen >= 1, "maxStrLen must be >= 1")
     cols.foreach { c =>
       val dt = table.schema(c).dataType
       require(org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(dt),
         s"zone maps need an orderable column; $c is ${dt.sql}")
     }
     val aggs = count(lit(1)).cast("bigint").as("rows") +:
-      cols.flatMap(boundCols(table, _, maxStrLen))
+      cols.flatMap(boundCols(table, _))
     table.select((input_file_name().as("file") +: cols.map(col)): _*)
       .groupBy("file")
       .agg(aggs.head, aggs.tail: _*)
@@ -92,8 +103,7 @@ object ZoneMapIndex {
     * profiled (the append increment, not the table). The missing-file list
     * is collected driver-side — file-manifest-sized, the same budget the
     * scheduler itself spends listing the table. */
-  def refresh(table: DataFrame, index: DataFrame, cols: Seq[String],
-              maxStrLen: Int = 32): DataFrame = {
+  def refresh(table: DataFrame, index: DataFrame, cols: Seq[String]): DataFrame = {
     val spark = table.sparkSession
     val present = table.select(input_file_name().as("file")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -105,64 +115,6 @@ object ZoneMapIndex {
     if (missing.isEmpty) kept
     else kept.unionByName(
       build(spark.read.schema(table.schema).parquet(missing.toIndexedSeq: _*),
-        cols, maxStrLen))
-  }
-
-  /** Files that MIGHT contain a row with `c` in [lo, hi] (either bound
-    * optional; both-None means "any non-null value"). Index-sized work; the
-    * comparison runs in the column's own type. A file survives iff it has
-    * any non-null value (nulls < rows) and its bounds overlap the range. */
-  def candidateFiles(index: DataFrame, c: String,
-                     lo: Option[Any], hi: Option[Any]): Seq[String] = {
-    val hasValue = col(s"${c}__nulls") < col("rows")
-    val lowOk = lo.map(v => col(s"${c}__max") >= lit(v)).getOrElse(lit(true))
-    val hiOk = hi.map(v => col(s"${c}__min") <= lit(v)).getOrElse(lit(true))
-    index.filter(hasValue && lowOk && hiOk)
-      .select("file").distinct()
-      .collect().map(_.getString(0)).toSeq
-  }
-
-  /** Sideways-information-passing scan for a key-range-bounded JOIN (the
-    * zone-map analogue of dynamic partition pruning / a runtime min-max
-    * filter): fold the BUILD side's join keys to [min, max] — a two-value
-    * aggregate, metadata-sized by construction — and open only the probe
-    * files whose zone overlaps that range. Semantics-preserving for an
-    * inner equi-join: every build key lies inside [min, max], so the exact
-    * range re-filter [[rangeScan]] applies can never drop a matching probe
-    * row; false survivors are removed by the join itself. Pays off when the
-    * probe layout is clustered on the join key (Z-order / range-partitioned
-    * writes) and the build side is a bounded cohort — the common
-    * "small dim slice vs huge clustered fact" shape. Empty build side reads
-    * nothing.
-    *
-    * COST NOTE: unlike Spark's lazily-planned dynamic partition pruning this
-    * analogizes to, the bounds fold is an EAGER action at call time — the
-    * full build side runs here even if the returned frame is never consumed.
-    * Call it only when the result is definitely used. */
-  def keyBoundsPruneScan(index: DataFrame, c: String,
-                         buildKeys: DataFrame, buildKeyCol: String,
-                         schema: StructType): DataFrame = {
-    val spark = buildKeys.sparkSession
-    val b = buildKeys.agg(min(col(buildKeyCol)), max(col(buildKeyCol))).head()
-    if (b.isNullAt(0))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else rangeScan(spark, index, c, Some(b.get(0)), Some(b.get(1)), schema)
-  }
-
-  /** Range read through the index: open only candidate files, then re-apply
-    * the EXACT predicate (clears truncation slack and bound overlap). An
-    * empty candidate set reads nothing. */
-  def rangeScan(spark: SparkSession, index: DataFrame, c: String,
-                lo: Option[Any], hi: Option[Any], schema: StructType): DataFrame = {
-    val files = candidateFiles(index, c, lo, hi)
-    val base =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(files: _*)
-    val lowOk = lo.map(v => col(c) >= lit(v)).getOrElse(col(c).isNotNull)
-    val hiOk = hi.map(v => col(c) <= lit(v)).getOrElse(col(c).isNotNull)
-    base.filter(lowOk && hiOk)
+        cols))
   }
 }

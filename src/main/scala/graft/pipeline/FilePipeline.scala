@@ -115,24 +115,31 @@ object FilePipeline {
     * recovery parse ([[graft.sources.CsvRecovery]]). JSON always goes through
     * the validate/repair path ([[graft.sources.JsonRepair]]) because Spark's
     * permissive reader silently drops malformed JSONL lines — the exact row
-    * loss the reference's atomic guarantee forbids. */
-  def loadRaw(spark: SparkSession, path: String): DataFrame =
+    * loss the reference's atomic guarantee forbids.
+    *
+    * Returns the frame and the cache it reads from, when the load leaves one
+    * for the caller to release: the strict CSV path keeps its parse cached
+    * for the caller's actions (the recovery and JSON paths release theirs
+    * before returning). */
+  def loadRaw(spark: SparkSession, path: String): (DataFrame, Option[DataFrame]) =
     FormatDetector.detect(path) match {
       case Formats.Csv | Formats.Tsv =>
         val utf8 = graft.sources.Encoding.ensureUtf8(path).toString
-        val sep = DelimiterDetector.detectFile(spark, utf8)
+        val sep = DelimiterDetector.detectFile(spark, utf8).toString
         // only the atomic guarantee's deliberate failure routes to recovery;
         // infrastructure errors (missing file, FS faults) must surface as-is
-        try Readers.atomicCsv(spark, utf8, sep = sep.toString)
-        catch {
+        try {
+          val (df, cache) = Readers.atomicCsv(spark, utf8, sep = sep)
+          (df, Some(cache))
+        } catch {
           case _: IllegalStateException =>
-            graft.sources.CsvRecovery.recover(spark, utf8, sep = sep.toString)
+            (graft.sources.CsvRecovery.recover(spark, utf8, sep = sep), None)
         }
       case Formats.Json | Formats.Jsonl =>
-        graft.sources.JsonRepair.loadAtomic(
-          spark, graft.sources.Encoding.ensureUtf8(path).toString)
-      case Formats.Parquet => Readers.parquet(spark, path)
-      case Formats.Excel => graft.sources.Excel.read(spark, path)
+        (graft.sources.JsonRepair.loadAtomic(
+          spark, graft.sources.Encoding.ensureUtf8(path).toString), None)
+      case Formats.Parquet => (Readers.parquet(spark, path), None)
+      case Formats.Excel => (graft.sources.Excel.read(spark, path), None)
       case f => throw new IllegalArgumentException(s"unsupported format $f for $path")
     }
 
@@ -207,8 +214,12 @@ object FilePipeline {
     if (priorStatus.contains("loaded"))
       return Result(hash, "loaded", 0L, skipped = true)
     ledger.record(FileRecord(hash, path, table, "received", 0L))
+    // the strict CSV parse cache, released once the load has committed or
+    // failed; non-blocking, so the load does not wait on the block removal
+    var cache = Option.empty[DataFrame]
     try {
-      val raw = loadRaw(spark, path)
+      val (raw, parsed) = loadRaw(spark, path)
+      cache = parsed
       val named = ColumnNameNormalizer(raw)
       val p = profile(named, coercionThreshold)
       val nonEmpty = OverflowRepair.flag(named, p.phantom).na.drop("all")
@@ -265,6 +276,6 @@ object FilePipeline {
       case e: Exception =>
         ledger.record(FileRecord(hash, path, table, "failed", 0L))
         throw e
-    }
+    } finally cache.foreach(_.unpersist(blocking = false))
   }
 }

@@ -380,62 +380,53 @@ object Events {
       .select("event_id", "user_id", "value", "zv")
   }
 
-  /** Zone-map file-skipping ROUND TRIP ([[graft.lake.ZoneMapIndex]]): the
-    * events fact is written once per source dir range-clustered by `value`
-    * into 32 files (the layout zone maps exist to exploit — at lake scale
-    * each file is a value stripe), a per-file min/max sidecar is persisted
-    * NEXT TO the layout (parquet-backed, never a cached plan — the bench
-    * harness clears persistent RDDs between queries), and the gate SERVES a
-    * value-band aggregate through [[graft.lake.ZoneMapIndex.rangeScan]]:
-    * sidecar read -> driver-side file pruning -> candidate-file scan ->
-    * exact re-filter. The oracle aggregates the band straight off the
-    * events table — the physical layout, the sidecar and the pruning must
-    * be invisible in the verified output (no lost files, no double reads,
-    * no boundary-value slips at the stripe edges). */
-  /** Shared per-dir layout build for the two zone-map gates (value-clustered
-    * for the range gate, user_id-clustered for the key-bounds join gate) —
-    * whichever gate runs first builds both. */
-  private def zonemapRoot(spark: SparkSession, dir: String): String =
-    graft.core.TempLayouts.rootFor("graft_zonemap_", dir) { r =>
+  /** Per-dir layout shared by the four file-skipping gates: two
+    * [[graft.lake.PartitionedTable]]s in one root, both partitioned by
+    * event_type and range-clustered inside each partition (repartition
+    * carries the partition key FIRST, so no task sprays sliver files across
+    * partition dirs), with sidecars from [[graft.lake.AutoSkip.index]]:
+    *  - `events_t`, clustered by value: a zone map on value and a Bloom
+    *    filter on user_id;
+    *  - `events_u`, clustered by user_id (the join key of
+    *    [[keyRangeJoin]]): a zone map on user_id.
+    * Each gate is a plain `AutoSkip.read(...).filter(...)`; the FileIndex
+    * prunes from the filters Catalyst pushes down, and Spark re-applies them
+    * after the scan. Each oracle reads the events table straight, so the
+    * layout and the pruning must be invisible in the verified output: no
+    * lost stripe-edge rows, no double-counted files. */
+  private def skipRoot(spark: SparkSession, dir: String): String =
+    graft.core.TempLayouts.rootFor("graft_skip_", dir) { r =>
       val src = Tables.events(spark, dir)
         .select("event_id", "user_id", "event_type", "value")
-      src.repartitionByRange(32, col("value")).write.parquet(s"$r/events_v")
-      val layout = spark.read.parquet(s"$r/events_v")
-      graft.lake.ZoneMapIndex.build(layout, Seq("value"))
-        .repartition(1).write.parquet(s"$r/events_v__zonemap")
-      // second layout, clustered on the JOIN key, for the key-bounds gate:
-      // the "huge clustered fact vs bounded dim cohort" shape
-      src.repartitionByRange(32, col("user_id")).write.parquet(s"$r/events_u")
-      graft.lake.ZoneMapIndex.build(spark.read.parquet(s"$r/events_u"), Seq("user_id"))
-        .repartition(1).write.parquet(s"$r/events_u__zonemap")
+      def layout(t: String, clusterBy: String, zoneCols: Seq[String],
+                 bloomCols: Seq[String]): Unit = {
+        new graft.lake.PartitionedTable(r, Seq("event_type"))
+          .create(src.repartitionByRange(32, col("event_type"), col(clusterBy)), t)
+        graft.lake.AutoSkip.index(spark, r, t, zoneCols, bloomCols)
+      }
+      layout("events_t", "value", Seq("value"), Seq("user_id"))
+      layout("events_u", "user_id", Seq("user_id"), Seq.empty)
     }
-  def zonemapRange(spark: SparkSession, dir: String): DataFrame = {
-    val root = zonemapRoot(spark, dir)
-    val layout = spark.read.parquet(s"$root/events_v")
-    val idx = spark.read.parquet(s"$root/events_v__zonemap")
-    graft.lake.ZoneMapIndex.rangeScan(spark, idx, "value",
-        Some(120.5), Some(180.25), layout.schema)
+
+  /** Zone-map range read: a value band over `events_t`, pruned by the
+    * value zone map. */
+  def zonemapRange(spark: SparkSession, dir: String): DataFrame =
+    graft.lake.AutoSkip.read(spark, skipRoot(spark, dir), "events_t")
+      .filter(col("value") >= 120.5 && col("value") <= 180.25)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("bigint").as("n_events"),
         dsum(col("value")).as("sum_value"),
         min(col("event_id")).as("min_event_id"),
         max(col("event_id")).as("max_event_id"))
-  }
 
-  /** Key-bounds-pruned JOIN scan ([[graft.lake.ZoneMapIndex
-    * .keyBoundsPruneScan]]): the newest-signup active-user cohort (top decile
-    * of the event-observed user range — keys are assigned in signup order,
-    * so the cohort is a RANGE, the shape the prune exists for) joins the
-    * events fact through a
-    * user_id-clustered layout: the build side folds to [min, max] — a
-    * two-value aggregate — and only probe files whose user_id zone overlaps
-    * that range are opened; the exact join then clears the false survivors.
-    * The oracle is the PLAIN join — the pruning machinery must be invisible
-    * in the verified output, exactly like the salted/Bloom join gates. */
+  /** Key-bounds-pruned JOIN: the newest-signup active-user cohort (top
+    * decile of the event-observed user range — keys are assigned in signup
+    * order, so the cohort is a RANGE, the shape the prune exists for) joins
+    * `events_u` through [[withinKeyBounds]], so only files whose user_id
+    * zone overlaps the cohort's range are opened; the exact join then
+    * clears the false survivors. The oracle is the PLAIN join. */
   def keyRangeJoin(spark: SparkSession, dir: String): DataFrame = {
-    val root = zonemapRoot(spark, dir)
-    val layout = spark.read.parquet(s"$root/events_u")
-    val idx = spark.read.parquet(s"$root/events_u__zonemap")
+    val root = skipRoot(spark, dir)
     // cohort = newest decile of users WITH event activity (events cover only
     // the low custkey range, so the bound comes from the fact side's own max)
     val mx = Tables.events(spark, dir).agg(max(col("user_id")).as("mx"))
@@ -443,8 +434,8 @@ object Events {
       .filter(col("c_custkey") * 10 >= col("mx") * 9 && col("c_custkey") <= col("mx"))
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.lake.ZoneMapIndex.keyBoundsPruneScan(idx, "user_id",
-        cohort.select("user_id"), "user_id", layout.schema)
+    withinKeyBounds(graft.lake.AutoSkip.read(spark, root, "events_u"), "user_id",
+        cohort.select("user_id"))
       .join(cohort, "user_id")
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).cast("bigint").as("n_events"),
@@ -453,63 +444,37 @@ object Events {
         max(col("event_id")).as("max_event_id"))
   }
 
-  /** Users probed by the skipping-triad gate's point predicate. */
-  private val TriadUsers: Seq[Long] = (1L to 25L)
-
-  /** The full file-skipping TRIAD composed on ONE table
-    * ([[graft.lake.SkippingScan]]) — partition predicate through the
-    * manifest, range predicate through the zone-map sidecar, point predicate
-    * through the Bloom sidecar, intersected BEFORE any data file opens: the
-    * read shape a real lakehouse query runs, where the standalone gates each
-    * exercise one leg. The layout is a [[graft.lake.PartitionedTable]]
-    * partitioned by event_type and range-clustered by value inside each
-    * partition (repartition carries the partition key FIRST, so no task
-    * sprays sliver files across partition dirs). The oracle aggregates the
-    * same three predicates straight off the events table — pruning must be
-    * invisible: no lost stripe-edge rows, no double-counted files. */
-  private def triadRoot(spark: SparkSession, dir: String): String =
-    graft.core.TempLayouts.rootFor("graft_triad_", dir) { r =>
-      val src = Tables.events(spark, dir)
-        .select("event_id", "user_id", "event_type", "value")
-      val table = new graft.lake.PartitionedTable(r, Seq("event_type"))
-      table.create(src.repartitionByRange(32, col("event_type"), col("value")), "events_t")
-      val layout = table.read(spark, "events_t")
-      graft.lake.ZoneMapIndex.build(layout, Seq("value"))
-        .repartition(1).write.parquet(s"$r/events_t__zonemap")
-      graft.lake.BloomIndex.build(layout, "user_id")
-        .repartition(1).write.parquet(s"$r/events_t__bloom")
-      // table-attached sidecars for the PLANNER-integrated path
-      // ([[autoSkipRead]]) — same layout, engine-transparent pruning
-      graft.lake.AutoSkip.index(spark, r, "events_t", Seq("value"), Seq("user_id"))
-    }
-  def skippingTriad(spark: SparkSession, dir: String): DataFrame = {
-    val root = triadRoot(spark, dir)
-    val table = new graft.lake.PartitionedTable(root, Seq("event_type"))
-    val layout = table.read(spark, "events_t")
-    val zm = spark.read.parquet(s"$root/events_t__zonemap")
-    val bf = spark.read.parquet(s"$root/events_t__bloom")
-    graft.lake.SkippingScan.scan(spark, table, "events_t",
-        m => m("event_type") == "purchase" || m("event_type") == "view",
-        zm, "value", Some(50.0), Some(400.0),
-        bf, "user_id", TriadUsers.map(_.asInstanceOf[Any]), layout.schema)
-      .groupBy("event_type", "user_id")
-      .agg(count(lit(1)).cast("bigint").as("n_events"),
-        dsum(col("value")).as("sum_value"),
-        min(col("event_id")).as("min_event_id"),
-        max(col("event_id")).as("max_event_id"))
+  /** Sideways information passing for a key-range-bounded inner join (the
+    * zone-map analogue of dynamic partition pruning): fold the one-column
+    * build side `keys` to [min, max] — a two-value aggregate — and keep the
+    * `probe` rows whose `c` lies in that range. Over an
+    * [[graft.lake.AutoSkip.read]] frame the range prunes every file whose
+    * zone lies outside it. No match is lost, since every build key lies in
+    * [min, max]. An empty or all-null build side folds to NULL bounds and
+    * reads nothing. The bounds are cast to `c`'s own type, because a literal
+    * of another type reaches the FileIndex under a Cast and prunes nothing.
+    * The fold is an EAGER action, so call this only when the result is used. */
+  private[graft] def withinKeyBounds(probe: DataFrame, c: String,
+                                     keys: DataFrame): DataFrame = {
+    val k = col(keys.columns.head)
+    val b = keys.agg(min(k), max(k)).head()
+    val dt = probe.schema(c).dataType
+    probe.filter(col(c).between(lit(b.get(0)).cast(dt), lit(b.get(1)).cast(dt)))
   }
 
-  /** The SAME triad predicates as [[skippingTriad]], but as a PLAIN
-    * `read(...).filter(...)` — no index is named anywhere in the query. The
-    * [[graft.lake.AutoSkip]] FileIndex consults the manifest's partition
-    * values, the zone-map sidecar, and the Bloom sidecar from the filters
-    * Catalyst pushes down, so pruning is the ENGINE's job (the reference's
-    * model: terraform/bigquery_tables.tf:97-116 declares the layout and
-    * BigQuery prunes server-side; queries never change). The oracle is
-    * identical to the triad gate's — pruning must be invisible. */
-  def autoSkipRead(spark: SparkSession, dir: String): DataFrame = {
-    val root = triadRoot(spark, dir)
-    graft.lake.AutoSkip.read(spark, root, "events_t")
+  /** Users probed by the skipping-triad gates' point predicate. */
+  private val TriadUsers: Seq[Long] = (1L to 25L)
+
+  /** The full file-skipping TRIAD on `events_t`: a partition predicate on
+    * event_type, a range on value and a point set on user_id, each pruned
+    * by its own evidence (the manifest's partition values, the zone map,
+    * the Bloom filter) in one `listFiles` — the read shape a real lakehouse
+    * query runs. No index is named in the query (the reference's model:
+    * terraform/bigquery_tables.tf:97-116 declares the layout and BigQuery
+    * prunes server-side). Serves both `events_skipping_triad` and
+    * `events_autoskip_read`. */
+  def skippingTriad(spark: SparkSession, dir: String): DataFrame =
+    graft.lake.AutoSkip.read(spark, skipRoot(spark, dir), "events_t")
       .filter(col("event_type").isin("purchase", "view") &&
         col("value") >= 50.0 && col("value") <= 400.0 &&
         col("user_id").isin(TriadUsers: _*))
@@ -518,7 +483,6 @@ object Events {
         dsum(col("value")).as("sum_value"),
         min(col("event_id")).as("min_event_id"),
         max(col("event_id")).as("max_event_id"))
-  }
 
   /** The reference logger's table_routing aggregates
     * (services/logger/main.py:157-190) over a CONSTRUCTED multi-file run:
@@ -625,7 +589,7 @@ object Events {
     "events_zonemap_range" -> (zonemapRange _),
     "events_keyrange_join" -> (keyRangeJoin _),
     "events_skipping_triad" -> (skippingTriad _),
-    "events_autoskip_read" -> (autoSkipRead _),
+    "events_autoskip_read" -> (skippingTriad _),
     "events_changes_read"  -> (changesRead _),
     "events_topk_per_user" -> (topKPerUser _),
     "events_cube_rollup"   -> (cubeRollup _),

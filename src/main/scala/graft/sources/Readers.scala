@@ -203,9 +203,13 @@ object Readers {
     * tokens overflow the schema but discards the overflow — value loss the
     * row count cannot see — so the data pass re-reads with an explicit
     * `_corrupt_record` column: token-overflow rows land there and fail the
-    * load loudly (routing the file to [[CsvRecovery]] in the pipeline). */
+    * load loudly (routing the file to [[CsvRecovery]] in the pipeline).
+    * Returns the loaded frame and the cached parse it reads from, which the
+    * caller unpersists once the frame's last action has run (a failed load
+    * has released it already). */
   def atomicCsv(spark: SparkSession, path: String, sep: String = ",",
-                header: Boolean = true, multiLine: Boolean = false): DataFrame = {
+                header: Boolean = true,
+                multiLine: Boolean = false): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val cols = csvStrict(spark, path, sep = sep, header = header,
       multiLine = multiLine).schema.fieldNames
@@ -234,7 +238,7 @@ object Readers {
       throw new IllegalStateException(
         s"atomic load failed: $loaded rows loaded vs $rawLines source lines in $path")
     }
-    df.drop("_corrupt_record")
+    (df.drop("_corrupt_record"), df)
   }
 }
 

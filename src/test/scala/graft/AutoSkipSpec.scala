@@ -247,35 +247,26 @@ class AutoSkipSpec extends AnyFunSuite {
     assertSameRows(pruned, pred(plain))
   }
 
-  test("ParquetDirFormat tables get the same transparent pruning (readDir)") {
-    import spark.implicits._
-    val root = tempDir()
-    val lake = new graft.lake.ParquetDirFormat(root)
-    val rows = for {
-      cat <- Seq("a", "b"); k <- 0 until 4; i <- 0 until 100
-    } yield (cat, 1000L * k + i, s"id_${cat}_${1000L * k + i}")
-    lake.createPartitioned(rows.toDF("cat", "v", "id")
-      .repartitionByRange(8, col("v")), "t", Seq("cat"))
-    AutoSkip.indexDir(spark, root, "t", Seq("v"), Seq("id"))
-    val plain = lake.read(spark, "t")
-    val total = plain.inputFiles.length
-    val pred = (d: DataFrame) => d.filter(
-      col("cat") === "b" && col("v") >= 2000L && col("v") <= 2099L &&
-        col("id") === "id_b_2050")
-    val pruned = pred(AutoSkip.readDir(spark, root, "t"))
-    // column order differs under partitionBy (partition col moves last in
-    // the physical files but the declared schema pins it) — compare values
-    val a = pruned.select("cat", "v", "id").collect().map(_.toSeq).toSeq
-    val b = pred(plain).select("cat", "v", "id").collect().map(_.toSeq).toSeq
-    assert(a == b && a.size == 1)
-    val kept = keptOf(pruned)
-    assert(kept.nonEmpty && kept.size < total, s"kept ${kept.size} of $total")
-    assert(kept.forall(_.contains("cat=b")))
-    // overwrite commits a new version; a fresh handle tracks it (stale
-    // sidecar entries for dead files are simply never consulted)
-    lake.overwrite(rows.filter(_._1 == "a").toDF("cat", "v", "id"), "t")
-    val after = AutoSkip.readDir(spark, root, "t").filter(col("v") === 2050L)
-    assert(after.count() == lake.read(spark, "t").filter(col("v") === 2050L).count())
+  test("job-count guard: a range-only read over zone-map and Bloom sidecars") {
+    val (root, _) = build() // zone map on v, Bloom filter on id
+    val (rows, jobs) = TestSpark.jobsOf(
+      AutoSkip.read(spark, root, "t").filter(col("v") >= 2000L && col("v") <= 2099L).collect())
+    assert(rows.length == 200)
+    // job counts repeat exactly, so the pin is exact. No filter pins a point
+    // value on id, so the read resolves no Bloom sidecar; reading it and
+    // collecting its file list would add 3 jobs
+    val pinned = 4
+    assert(jobs == pinned, s"a range-only read ran $jobs Spark jobs, pinned at $pinned")
+  }
+
+  test("the skipping gates still prune their AutoSkip tables") {
+    for (gate <- Seq("events_zonemap_range", "events_keyrange_join", "events_skipping_triad")) {
+      val df = SparkEntry.queries(gate)(spark, TestSpark.sfDir)
+      assert(df.collect().nonEmpty, gate)
+      val idx = AutoSkip.fileIndexOf(df).get
+      assert(idx.lastKept.nonEmpty && idx.lastKept.size < idx.inputFiles.length,
+        s"$gate kept ${idx.lastKept.size} of ${idx.inputFiles.length} files")
+    }
   }
 
   test("superset under churn: racing appenders + compactor + refreshers never lose rows") {

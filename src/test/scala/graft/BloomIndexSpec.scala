@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.lake.BloomIndex
+import graft.lake.{AutoSkip, BloomIndex, PartitionedTable}
 
 class BloomIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -22,6 +22,17 @@ class BloomIndexSpec extends AnyFunSuite {
       .repartition(16, col("event_id"))
       .write.mode("overwrite").parquet(d)
     d
+  }
+
+  // the same rows as a PartitionedTable (one constant partition) with a
+  // Bloom sidecar on user_id, for reads through AutoSkip.read
+  private lazy val lakeRoot = {
+    val root = Files.createTempDirectory("graft-bloom-autoskip").toString
+    new PartitionedTable(root, Seq("p"))
+      .create(spark.read.parquet(dir).withColumn("p", lit("x"))
+        .repartition(16, col("event_id")), "t")
+    AutoSkip.index(spark, root, "t", zoneCols = Seq.empty, bloomCols = Seq("user_id"))
+    root
   }
 
   test("no false negatives: every file truly holding a value is a candidate") {
@@ -45,18 +56,21 @@ class BloomIndexSpec extends AnyFunSuite {
     // below the 16 files a stats-blind reader would open
     val ghosts = BloomIndex.candidateFiles(spark, idx, Seq(987654321L))
     assert(ghosts.length <= 8, s"expected heavy skipping, got ${ghosts.length}/16 files")
-    // lookup returns exactly the true rows (false positives cleared by the
-    // exact predicate), including for multi-value lookups
-    val got = BloomIndex.lookup(spark, idx, "user_id", Seq(777L, 987654321L),
-      table.schema)
-    val want = table.filter(col("user_id") === 777L)
+    // a point read through AutoSkip.read opens only the Bloom candidates
+    // and returns exactly the true rows (false positives cleared by the
+    // retained filter), including for multi-value lookups
+    val plain = PartitionedTable.open(lakeRoot, "t").read(spark, "t")
+    val total = plain.inputFiles.length
+    val got = AutoSkip.read(spark, lakeRoot, "t").filter(col("user_id").isin(777L, 987654321L))
+    val want = plain.filter(col("user_id") === 777L)
     assert(got.count() == want.count())
     assert(got.select(sum("event_id")).collect()(0).getLong(0) ==
       want.select(sum("event_id")).collect()(0).getLong(0))
-    // an all-absent lookup opens nothing and returns an empty, well-typed frame
-    val none = BloomIndex.lookup(spark, idx, "user_id", Seq(111222333L),
-      table.schema)
-    assert(none.count() == 0 && none.schema == table.schema)
+    assert(AutoSkip.fileIndexOf(got).get.lastKept.size < total)
+    // an absent key opens no file and returns an empty, well-typed frame
+    val none = AutoSkip.read(spark, lakeRoot, "t").filter(col("user_id") === 111222333L)
+    assert(none.count() == 0 && none.schema == plain.schema)
+    assert(AutoSkip.fileIndexOf(none).get.lastKept.isEmpty)
   }
 
   test("index is sidecar-sized; (bits, k) survive the lake round trip") {
@@ -101,8 +115,8 @@ class BloomIndexSpec extends AnyFunSuite {
     // the new value is found, and only in the appended file (no false negatives)
     val hits = BloomIndex.candidateFiles(spark, idx1, Seq(9007L))
     assert(hits.nonEmpty, "appended value must be indexed after refresh")
-    val rows = BloomIndex.lookup(spark, idx1, "id", Seq(9007L, 1003L), table.schema)
-      .collect().map(_.getLong(0)).sorted.toSeq
+    val rows = spark.read.parquet(BloomIndex.candidateFiles(spark, idx1, Seq(9007L, 1003L)): _*)
+      .filter(col("id").isin(9007L, 1003L)).collect().map(_.getLong(0)).sorted.toSeq
     assert(rows == Seq(1003L, 9007L))
     // refreshed sidecar still carries exactly one (bits, k) pair
     assert(idx1.select("bits", "k").distinct().count() == 1)

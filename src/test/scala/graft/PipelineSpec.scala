@@ -4,7 +4,6 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import graft.lake.{ParquetDirFormat, PartitionedTable}
 import graft.normalize.{ColumnNameNormalizer, OverflowRepair}
 import graft.operators.{Cleaning, Coercion, Heuristics}
@@ -130,7 +129,7 @@ class PipelineSpec extends AnyFunSuite {
     * by the measuring chain the fused profile replaces: OverflowRepair.repair
     * -> na.drop("all") -> Coercion.coerce -> count, one pass each. */
   private def chained(path: String): (Long, Long, DataFrame, Option[DataFrame]) = {
-    val named = ColumnNameNormalizer(FilePipeline.loadRaw(spark, path))
+    val named = ColumnNameNormalizer(FilePipeline.loadRaw(spark, path)._1)
     val coerced = Coercion.coerce(OverflowRepair.repair(named).na.drop("all"), 0.9)
     val cleaned = coerced.select(coerced.schema.fields.map { f =>
       if (f.dataType == org.apache.spark.sql.types.StringType)
@@ -201,41 +200,40 @@ class PipelineSpec extends AnyFunSuite {
     val ledger = new Ledger(root.resolve("ledger.tsv").toString)
     FilePipeline.processFile(spark, first.toString, "orders", lake, ledger)
 
-    val sc = spark.sparkContext
-    val group = "job-count-guard"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    @volatile var fenced = false
-    val listener = new SparkListener {
-      private def groupOf(p: java.util.Properties) =
-        Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (groupOf(e.properties).contains(group)) jobs.incrementAndGet()
-    }
-    // a listener sees events in post order: once the fence job's end
-    // arrives, every job of the load has been counted
-    val fence = new SparkListener {
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = fenced = true
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "one clean CSV load", interruptOnCancel = false)
-      val r = try FilePipeline.processFile(spark, second.toString, "orders", lake, ledger)
-              finally sc.clearJobGroup()
-      assert(r.rows == 200 && r.quarantinedRows == 0)
-      sc.addSparkListener(fence)
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!fenced && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(fenced, "listener fence timed out")
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.removeSparkListener(fence)
-    }
+    val (r, jobs) = TestSpark.jobsOf(
+      FilePipeline.processFile(spark, second.toString, "orders", lake, ledger))
+    assert(r.rows == 200 && r.quarantinedRows == 0)
     assert(lake.read(spark, "orders").count() == 400)
     // job counts repeat exactly, so the pin is exact: a rise means a load
     // gained a Spark job; a change that removes one on purpose lowers the pin
     val pinned = 7
-    assert(jobs.get() == pinned, s"a clean CSV load ran ${jobs.get()} Spark jobs, pinned at $pinned")
+    assert(jobs == pinned, s"a clean CSV load ran $jobs Spark jobs, pinned at $pinned")
+  }
+
+  test("a load releases its CSV parse cache: clean and CsvRecovery loads") {
+    val root = Files.createTempDirectory("graft-cache")
+    val clean = root.resolve("clean.csv")
+    Files.write(clean, "id,name,notes\n1,a,x\n2,b,y\n".getBytes)
+    // the unquoted comma overflows the strict parse, so this load falls back
+    // to CsvRecovery and quarantines the shifted row
+    val shifted = root.resolve("shifted.csv")
+    val rows = (1 to 9).map(i => s"$i,name$i,note$i") :+ "10,Bob,messy, extra"
+    Files.write(shifted, ("id,name,notes\n" + rows.mkString("\n") + "\n").getBytes)
+    val lake = new ParquetDirFormat(root.resolve("lake").toString)
+    val ledger = new Ledger(root.resolve("ledger.tsv").toString)
+    val sc = spark.sparkContext
+    for ((csv, quarantined) <- Seq(clean -> 0L, shifted -> 1L)) {
+      val before = sc.getPersistentRDDs.size
+      val r = FilePipeline.processFile(spark, csv.toString, "t", lake, ledger)
+      assert(r.status == "loaded" && r.quarantinedRows == quarantined, csv)
+      assert(sc.getPersistentRDDs.size == before,
+        s"$csv left ${sc.getPersistentRDDs.size - before} cached RDDs behind")
+    }
+    // a kept cache would also serve a file rewritten at the same path: the
+    // reader's plan matches it by path, so the new rows would never be read
+    Files.write(clean, "id,name,notes\n3,c,z\n4,d,w\n".getBytes)
+    FilePipeline.processFile(spark, clean.toString, "t2", lake, ledger)
+    assert(lake.read(spark, "t2").select("id").collect().map(_.get(0)).toSet == Set(3, 4))
   }
 
   test("PII name matching is token-exact, not substring") {

@@ -1,12 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.lake.{BloomIndex, PartitionedTable, SkippingScan, ZoneMapIndex}
+import graft.lake.{AutoSkip, PartitionedTable}
 
-/** Composed file-skipping triad pins: partition manifest ∩ zone map ∩ Bloom
-  * candidate intersection, only-candidates-opened, exact re-filter parity
-  * with a direct scan, and empty-intersection reads-nothing. */
+/** The composed file-skipping triad through [[AutoSkip.read]]: a partition
+  * predicate, a zone-map range and a Bloom point set prune in one
+  * `listFiles`. Pins: the triad keeps exactly the intersection of what each
+  * leg keeps alone, every leg prunes, a refreshed table stays exact and
+  * covered, and an empty intersection reads nothing. */
 class SkippingScanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -23,100 +26,94 @@ class SkippingScanSpec extends AnyFunSuite {
   }
 
   /** cat in {a, b}; per cat, v clustered into 4 known stripes of 100; id is
-    * v-correlated so Bloom candidates are a few stripes, not everything. */
-  private def build(): (PartitionedTable, org.apache.spark.sql.DataFrame,
-                        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    * v-correlated so Bloom candidates are a few stripes, not everything.
+    * Zone map on v, Bloom filter on id. */
+  private def build(): (String, PartitionedTable) = {
     import spark.implicits._
     val root = tempDir()
     val rows = for {
       cat <- Seq("a", "b"); k <- 0 until 4; i <- 0 until 100
     } yield (cat, 1000L * k + i, s"id_${cat}_${1000L * k + i}")
-    val src = rows.toDF("cat", "v", "id")
-      .repartitionByRange(8, col("cat"), col("v"))
     val table = new PartitionedTable(root, Seq("cat"))
-    table.create(src, "t")
-    val layout = table.read(spark, "t")
-    val zm = ZoneMapIndex.build(layout, Seq("v")).localCheckpoint(true)
-    val bf = BloomIndex.build(layout, "id").localCheckpoint(true)
-    (table, layout, zm, bf)
+    table.create(rows.toDF("cat", "v", "id").repartitionByRange(8, col("cat"), col("v")), "t")
+    AutoSkip.index(spark, root, "t", Seq("v"), Seq("id"))
+    (root, table)
   }
 
+  private def cat(c: String): Column = col("cat") === c
+  private def range(lo: Long, hi: Long): Column = col("v") >= lo && col("v") <= hi
+  private def points(ids: String*): Column = col("id").isin(ids: _*)
+
+  private def norm(f: String): String = new java.net.URI(f).getPath
+
+  /** The files (as URI paths) a pruned read of `pred` keeps, and its rows. */
+  private def read(root: String, pred: Column): (Set[String], Seq[String]) = {
+    val df = AutoSkip.read(spark, root, "t").filter(pred)
+    val rows = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    (AutoSkip.fileIndexOf(df).get.lastKept.map(norm).toSet, rows)
+  }
+
+  private def plainRows(table: PartitionedTable, pred: Column): Seq[String] =
+    table.read(spark, "t").filter(pred).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
   test("triad intersection opens only candidate files; result == direct filter") {
-    val (table, layout, zm, bf) = build()
-    val total = layout.inputFiles.length
-    val points: Seq[Any] = Seq("id_a_2010", "id_a_2020")
-    val candidates = SkippingScan.candidateFiles(spark, table, "t",
-      m => m("cat") == "a", zm, "v", Some(2000L), Some(2099L), bf, "id", points)
-    assert(candidates.nonEmpty && candidates.length < total,
-      s"triad must skip files: $candidates of $total")
-    val scan = SkippingScan.scan(spark, table, "t",
-      m => m("cat") == "a", zm, "v", Some(2000L), Some(2099L), bf, "id", points,
-      layout.schema)
-    // only candidate files are opened (candidates return the manifest's
-    // ORIGINAL strings — compare on the normalized URI path)
-    def norm(s: String) = { val u = new java.net.URI(s); if (u.getScheme != null) u.getPath else s }
-    val opened = scan.inputFiles.map(norm).toSet
-    assert(opened.subsetOf(candidates.map(norm).toSet) && opened.size < total)
+    val (root, table) = build()
+    val total = table.read(spark, "t").inputFiles.length
+    val (p, z, b) = (cat("a"), range(2000L, 2099L), points("id_a_2010", "id_a_2020"))
+    val (kept, rows) = read(root, p && z && b)
+    assert(kept.nonEmpty && kept.size < total, s"triad must skip files: ${kept.size} of $total")
+    // the triad keeps exactly what every leg alone keeps
+    assert(kept == (read(root, p)._1 & read(root, z)._1 & read(root, b)._1))
     // exactness vs the direct triple-predicate scan
-    val got = scan.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
-    val want = layout.filter(col("cat") === "a" && col("v").between(2000L, 2099L) &&
-        col("id").isin(points.map(_.toString): _*))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
-    assert(got == want && want.nonEmpty)
+    assert(rows == plainRows(table, p && z && b) && rows.size == 2)
   }
 
   test("each leg prunes: dropping any one predicate's index keeps more files") {
-    val (table, layout, zm, bf) = build()
-    val points: Seq[Any] = Seq("id_a_2010")
-    def candidates(cat: Map[String, String] => Boolean,
-                   lo: Option[Any], hi: Option[Any], pts: Seq[Any]) =
-      SkippingScan.candidateFiles(spark, table, "t", cat, zm, "v", lo, hi, bf, "id", pts).toSet
-    val tight = candidates(m => m("cat") == "a", Some(2000L), Some(2099L), points)
+    val (root, table) = build()
+    val total = table.read(spark, "t").inputFiles.length
+    val (p, z, b) = (cat("a"), range(2000L, 2099L), points("id_a_2010"))
+    val tight = read(root, p && z && b)._1
     // widen one leg at a time: each relaxation can only ADD files
-    assert(tight.subsetOf(candidates(_ => true, Some(2000L), Some(2099L), points)))
-    assert(tight.subsetOf(candidates(m => m("cat") == "a", None, None, points)))
-    assert(tight != candidates(_ => true, None, None,
-      points ++ (0 until 50).map(i => s"id_b_${1000 + i}": Any)),
+    for (relaxed <- Seq(z && b, p && b, p && z)) {
+      val wider = read(root, relaxed)._1
+      assert(tight.subsetOf(wider))
+    }
+    // and each leg alone prunes
+    for (leg <- Seq(p, z, b)) assert(read(root, leg)._1.size < total)
+    assert(tight != read(root, points(("id_a_2010" +: (0 until 50).map(i => s"id_b_${1000 + i}")): _*))._1,
       "fully relaxed triad must differ from the tight one")
   }
 
   test("append + sidecar refresh: the triad stays exact and sees the new files") {
     import spark.implicits._
-    val (table, layout0, zm0, bf0) = build()
-    // append a new cat=a stripe carrying fresh v range + fresh ids
-    val extra = (0 until 50).map(i => ("a", 9000L + i, s"id_a_${9000L + i}"))
-      .toDF("cat", "v", "id").repartition(1)
-    table.append(extra, "t")
-    val layout = table.read(spark, "t")
-    // refresh profiles ONLY the appended files; old rows pass through
-    val zm = ZoneMapIndex.refresh(layout, zm0, Seq("v")).localCheckpoint(true)
-    val bf = BloomIndex.refresh(layout, bf0, "id").localCheckpoint(true)
-    assert(zm.count() > zm0.count() && bf.select("file").distinct().count() >
-      bf0.select("file").distinct().count())
+    val (root, table) = build()
+    def files() = table.read(spark, "t").inputFiles.map(norm).toSet
+    val before = files()
+    // append a new cat=a stripe carrying fresh v range + fresh ids; the
+    // commit refreshes the sidecars
+    table.append(Seq.tabulate(50)(i => ("a", 9000L + i, s"id_a_${9000L + i}"))
+      .toDF("cat", "v", "id").repartition(1), "t")
+    val added = files() -- before
+    assert(added.nonEmpty)
     // a query into the NEW range/ids must find them through the triad
-    val scan = SkippingScan.scan(spark, table, "t",
-      m => m("cat") == "a", zm, "v", Some(9000L), Some(9049L),
-      bf, "id", Seq("id_a_9005", "id_a_9049"), layout.schema)
-    val got = scan.collect().map(_.getLong(1)).sorted.toSeq
-    assert(got == Seq(9005L, 9049L))
-    // and a stale-index query (un-refreshed sidecars) would MISS them —
-    // pinning that refresh is load-bearing, not a no-op
-    val stale = SkippingScan.candidateFiles(spark, table, "t",
-      m => m("cat") == "a", zm0, "v", Some(9000L), Some(9049L),
-      bf0, "id", Seq("id_a_9005"))
-    assert(stale.isEmpty, "stale sidecars must not know the appended stripe")
+    val fresh = cat("a") && range(9000L, 9049L) && points("id_a_9005", "id_a_9049")
+    val (kept, rows) = read(root, fresh)
+    assert(rows == plainRows(table, fresh) && rows.size == 2)
+    assert(kept.nonEmpty && kept.subsetOf(added))
+    // and a query into the OLD stripes prunes the new files: the refreshed
+    // sidecars cover them (an uncovered file is kept unconditionally)
+    val old = cat("a") && range(2000L, 2099L) && points("id_a_2010")
+    val (keptOld, rowsOld) = read(root, old)
+    assert(rowsOld == plainRows(table, old) && rowsOld.size == 1)
+    assert(keptOld.nonEmpty && keptOld.intersect(added).isEmpty)
   }
 
   test("empty intersection reads nothing; empty points match nothing") {
-    val (table, layout, zm, bf) = build()
+    val (root, _) = build()
     // partition says cat=a, range says stripe 3, points say an id from cat=b
-    // stripe 0 — Bloom admits only files that might hold it, intersection
-    // with the range leg is empty (distinct stripes)
-    val scan = SkippingScan.scan(spark, table, "t",
-      m => m("cat") == "a", zm, "v", Some(3000L), Some(3099L),
-      bf, "id", Seq("id_b_1"), layout.schema)
-    assert(scan.count() == 0L)
-    assert(SkippingScan.scan(spark, table, "t", _ => true, zm, "v", None, None,
-      bf, "id", Seq.empty, layout.schema).count() == 0L)
+    // stripe 0 — each leg keeps files, their intersection is empty
+    val (kept, rows) = read(root, cat("a") && range(3000L, 3099L) && points("id_b_1"))
+    assert(kept.isEmpty && rows.isEmpty)
+    assert(read(root, points())._2.isEmpty)
   }
 }

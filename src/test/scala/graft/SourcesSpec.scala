@@ -46,12 +46,12 @@ class SourcesSpec extends AnyFunSuite {
 
   test("atomic load passes on clean file") {
     val p = tmpFile("ok.csv", "a,b\n1,2\n3,4\n")
-    assert(Readers.atomicCsv(spark, p).count() == 2)
+    assert(Readers.atomicCsv(spark, p)._1.count() == 2)
   }
 
   test("atomic load tolerates blank lines (CSV parser skips them)") {
     val p = tmpFile("blank.csv", "a,b\n1,2\n\n   \n3,4\n")
-    assert(Readers.atomicCsv(spark, p).count() == 2)
+    assert(Readers.atomicCsv(spark, p)._1.count() == 2)
   }
 
   test("atomic load fails when multi-line records merge source lines") {
@@ -96,7 +96,7 @@ class SourcesSpec extends AnyFunSuite {
       assert(SourceLines.countNonBlank(spark, p.toString) == nonBlank, name)
       // atomicCsv's guard holds on each file: its driver-side count agrees
       // with the rows the CSV parser loads
-      assert(Readers.atomicCsv(spark, p.toString, sep = sep).count() == nonBlank - 1, name)
+      assert(Readers.atomicCsv(spark, p.toString, sep = sep)._1.count() == nonBlank - 1, name)
     }
     val empty = dir.resolve("empty.csv")
     Files.write(empty, Array.emptyByteArray)
