@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.types._
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
 
 /** PLANNER-INTEGRATED data skipping: a [[FileIndex]] that consults the
   * manifest's partition values, the [[ZoneMapIndex]] sidecar, and the
@@ -172,8 +174,8 @@ object AutoSkip {
     * this lake. */
   def read(spark: SparkSession, root: String, t: String): DataFrame = {
     val table = PartitionedTable.open(root, t)
-    val schema = table.read(spark, t).schema
     val withId = table.dataFileStatuses(t)
+    val schema = footerSchema(spark, withId.map(_._2)).getOrElse(table.read(spark, t).schema)
     // partition values from the layout's path mapping: exact bounds
     // (min = max = value) for STRING partition columns; Hive's default-
     // partition marker means "this column is null here". Non-string
@@ -212,10 +214,8 @@ object AutoSkip {
       scala.util.Try {
         if (!lake.exists(bloomTable(f.name))) None
         else {
-          val idx = lake.read(spark, bloomTable(f.name))
-          val covered = idx.select("file").distinct()
-            .collect().map(r => pathOf(r.getString(0))).toSet
-          Some(BloomSidecar(idx, covered))
+          val s = BloomIndex.sidecar(lake.read(spark, bloomTable(f.name)))
+          Some(BloomSidecar(s, s.files.map(pathOf)))
         }
       }.toOption.flatten
 
@@ -226,6 +226,31 @@ object AutoSkip {
       new ParquetFileFormat, Map.empty[String, String])(spark)
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .baseRelationToDataFrame(relation)
+  }
+
+  /** The schema a merged parquet read of `files` yields, from their footers
+    * read on the driver instead of by a Spark job. Spark merges the files'
+    * schemas in the order of their paths: the first file's columns in its
+    * order, then each column a later file adds, all nullable. Files of one
+    * table may order their columns differently (a write keeps its frame's
+    * order), so the table's SCHEMA file cannot stand in. None — the
+    * merged read decides — when there is no file, a footer carries no Spark
+    * schema, or two files type a column differently. */
+  private def footerSchema(spark: SparkSession, files: Seq[FileStatus]): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schemas = files.sortBy(_.getPath.toString).map { st =>
+      Option(ParquetFileReader.readFooter(conf, st, ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        .getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+    }
+    if (schemas.isEmpty || schemas.contains(None)) None
+    else {
+      val all = schemas.flatten.flatMap(_.fields)
+      val fields = all.distinctBy(_.name)
+      val typed = fields.map(f => f.name -> f.dataType).toMap
+      if (all.forall(f => typed(f.name) == f.dataType)) Some(StructType(fields).toNullable)
+      else None
+    }
   }
 
   /** The [[SidecarFileIndex]] behind a frame [[read]] produced (after any
@@ -244,8 +269,8 @@ object AutoSkip {
     * min/max with nulls >= rows means "no non-null value in this file". */
   private[graft] final case class ColZone(min: Any, max: Any, nulls: Long, rows: Long)
 
-  /** One column's Bloom sidecar and the files it covers. */
-  private[graft] final case class BloomSidecar(index: DataFrame, covered: Set[String])
+  /** One column's Bloom sidecar and the files it covers, as path keys. */
+  private[graft] final case class BloomSidecar(sidecar: BloomIndex.Sidecar, covered: Set[String])
 
   /** Types whose JVM toString equals Spark's CAST(x AS STRING) — the
     * canonical form [[BloomIndex]] hashes. Restricting bloom pruning to
@@ -323,7 +348,7 @@ object AutoSkip {
         pointValues(filters, f.name, f.dataType).flatMap { vs =>
           blooms.getOrElseUpdate(f.name, bloomF(f)).map { b =>
             b -> bloomCache.getOrElseUpdate((f.name, vs),
-              BloomIndex.candidateFiles(spark, b.index, vs.toSeq.sorted)
+              BloomIndex.candidateFiles(spark, b.sidecar, vs.toSeq.sorted)
                 .map(pathOf).toSet)
           }
         }

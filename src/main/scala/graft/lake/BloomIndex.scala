@@ -1,7 +1,8 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Measure
 
 /** Per-file Bloom-filter sidecar for point-lookup file skipping — the lake
   * analogue of Delta's bloom filter index, for columns footer min/max stats
@@ -70,22 +71,28 @@ object BloomIndex {
       .withColumn("k", lit(k))
   }
 
-  /** Recover the (bits, k) the index was BUILT with — never trust a caller
-    * default on the read path. Index-sized distinct (bounded: the sidecar is
-    * files x bits/64 rows), and a mixed-parameter index fails loudly instead
-    * of returning silent false negatives. */
-  private def storedParams(index: DataFrame): (Int, Int) = {
+  /** A sidecar resolved for lookups: the files it covers and the (bits, k)
+    * it was BUILT with. */
+  final case class Sidecar(index: DataFrame, files: Set[String], bits: Int, k: Int)
+
+  /** Resolve `index` in one index-sized aggregate (the sidecar is files x
+    * bits/64 rows): its covered files and its stored (bits, k) — never trust
+    * a caller default on the read path. A mixed-parameter index fails loudly
+    * instead of returning silent false negatives. */
+  def sidecar(index: DataFrame): Sidecar = {
     require(index.columns.contains("bits") && index.columns.contains("k"),
       "index carries no (bits, k) metadata (a pre-r9 legacy sidecar) — " +
         "rebuild it with BloomIndex.build; the deliberate loud break beats " +
         "trusting a caller default that may silently false-negative")
-    val ps = index.select(col("bits"), col("k")).distinct().collect()
+    val m = Measure.row(index,
+      Seq(collect_set(col("file")), collect_set(struct(col("bits"), col("k")))))
+    val ps = m.getSeq[Row](1)
     require(ps.length == 1,
       s"index carries ${ps.length} distinct (bits, k) pairs — refusing to guess; " +
         "rebuild the index under one parameter set")
-    val (bits, k) = (ps(0).getInt(0), ps(0).getInt(1))
+    val (bits, k) = (ps.head.getInt(0), ps.head.getInt(1))
     requireParams(bits, k)
-    (bits, k)
+    Sidecar(index, m.getSeq[String](0).toSet, bits, k)
   }
 
   /** Incremental sidecar maintenance after appends/compaction — same set
@@ -95,7 +102,7 @@ object BloomIndex {
     * come from the existing index, so the refreshed sidecar stays
     * single-parameter by construction. */
   def refresh(table: DataFrame, index: DataFrame, c: String): DataFrame = {
-    val (bits, k) = storedParams(index)
+    val Sidecar(_, _, bits, k) = sidecar(index)
     val spark = table.sparkSession
     val present = table.select(input_file_name().as("file")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -117,9 +124,14 @@ object BloomIndex {
     * every file truly containing a value is returned. Hash parameters come
     * from the index itself (see [[build]]). */
   def candidateFiles(spark: SparkSession, index: DataFrame,
-                     values: Seq[Any]): Seq[String] = {
+                     values: Seq[Any]): Seq[String] =
+    if (values.isEmpty) Seq.empty else candidateFiles(spark, sidecar(index), values)
+
+  /** [[candidateFiles]] over a sidecar already resolved: one membership
+    * join, no parameter pass. */
+  def candidateFiles(spark: SparkSession, s: Sidecar, values: Seq[Any]): Seq[String] = {
     if (values.isEmpty) return Seq.empty
-    val (bits, k) = storedParams(index)
+    val Sidecar(index, _, bits, k) = s
     import spark.implicits._
     val vals = values.map(_.toString).toDF("__v").na.drop().distinct()
     val positions = vals.select(col("__v"),

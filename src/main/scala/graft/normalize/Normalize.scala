@@ -2,6 +2,7 @@ package graft.normalize
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.core.Measure
 
 /** Column-name normalization to lowercase snake_case with camelCase expansion
   * and duplicate suffixes (reference: datagrunt_agent/core/column_normalizer.py:16-63).
@@ -77,7 +78,6 @@ object OverflowRepair {
 
   def repair(df: DataFrame, threshold: Double = Threshold): DataFrame = {
     val cols = df.columns.toSeq
-    val m = measures(cols)
-    flag(df, phantom(cols, df.agg(m.head, m.tail: _*).head(), threshold))
+    flag(df, phantom(cols, Measure.row(df, measures(cols)), threshold))
   }
 }

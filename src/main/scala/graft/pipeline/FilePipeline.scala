@@ -3,12 +3,14 @@ package graft.pipeline
 import java.io.OutputStream
 import java.nio.file.{Files, Paths}
 import java.security.{DigestInputStream, MessageDigest}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Measure
 import graft.lake.TableFormat
 import graft.normalize.{ColumnNameNormalizer, OverflowRepair}
 import graft.operators.{Cleaning, Coercion}
-import graft.sources.{DelimiterDetector, FormatDetector, Formats, Readers}
+import graft.sources.{CsvRecovery, DelimiterDetector, Encoding, FormatDetector, Formats,
+  JsonRepair, Readers}
 
 /** Per-file processing status, rank-monotonic like the reference's Firestore
   * ledger (services/logger/main.py:14-19 STATUS_RANK): a file's status can
@@ -117,29 +119,34 @@ object FilePipeline {
     * permissive reader silently drops malformed JSONL lines — the exact row
     * loss the reference's atomic guarantee forbids.
     *
-    * Returns the frame and the cache it reads from, when the load leaves one
-    * for the caller to release: the strict CSV path keeps its parse cached
-    * for the caller's actions (the recovery and JSON paths release theirs
-    * before returning). */
-  def loadRaw(spark: SparkSession, path: String): (DataFrame, Option[DataFrame]) =
+    * The strict CSV check runs here in an aggregate of its own;
+    * [[processFile]] runs the same parse and check with the check's measure
+    * inside its load profile instead. Nothing is left cached. */
+  def loadRaw(spark: SparkSession, path: String): DataFrame =
+    parse(spark, path) { strict =>
+      strict.check(Measure.row(strict.frame, strict.measures))
+      strict.data
+    }(identity)
+
+  /** Load `path` by detected format. `strict` receives a strict CSV parse
+    * whose atomic check is still to run; if the check fails, `raw` receives
+    * the [[CsvRecovery]] parse instead. Only the check's deliberate failure
+    * routes to recovery; infrastructure errors (missing file, FS faults)
+    * surface as-is. `raw` receives every other format's checked frame. */
+  private def parse[T](spark: SparkSession, path: String)(strict: Readers.StrictCsv => T)(
+      raw: DataFrame => T): T =
     FormatDetector.detect(path) match {
       case Formats.Csv | Formats.Tsv =>
-        val utf8 = graft.sources.Encoding.ensureUtf8(path).toString
+        val utf8 = Encoding.ensureUtf8(path).toString
         val sep = DelimiterDetector.detectFile(spark, utf8).toString
-        // only the atomic guarantee's deliberate failure routes to recovery;
-        // infrastructure errors (missing file, FS faults) must surface as-is
-        try {
-          val (df, cache) = Readers.atomicCsv(spark, utf8, sep = sep)
-          (df, Some(cache))
-        } catch {
-          case _: IllegalStateException =>
-            (graft.sources.CsvRecovery.recover(spark, utf8, sep = sep), None)
+        try strict(Readers.strictCsv(spark, utf8, sep, header = true, multiLine = false))
+        catch {
+          case _: IllegalStateException => raw(CsvRecovery.recover(spark, utf8, sep = sep))
         }
       case Formats.Json | Formats.Jsonl =>
-        (graft.sources.JsonRepair.loadAtomic(
-          spark, graft.sources.Encoding.ensureUtf8(path).toString), None)
-      case Formats.Parquet => (Readers.parquet(spark, path), None)
-      case Formats.Excel => (graft.sources.Excel.read(spark, path), None)
+        raw(JsonRepair.loadAtomic(spark, Encoding.ensureUtf8(path).toString))
+      case Formats.Parquet => raw(Readers.parquet(spark, path))
+      case Formats.Excel => raw(graft.sources.Excel.read(spark, path))
       case f => throw new IllegalArgumentException(s"unsupported format $f for $path")
     }
 
@@ -179,8 +186,14 @@ object FilePipeline {
     *    columns are all null are clean. A frame without a flag loses its
     *    all-null rows. Both are counts of rows whose last k columns are null,
     *    taken for every k because the phantom run is known only after the
-    *    pass. */
-  private def profile(named: DataFrame, coercionThreshold: Double): Profile = {
+    *    pass.
+    *
+    * The same aggregate carries `checks`, the measures a strict CSV parse's
+    * atomic check reads, so a clean CSV load checks and profiles its file in
+    * one job: it runs over `measured`, which holds `named`'s columns and the
+    * columns `checks` read. Returns the profile and the aggregate's row. */
+  private def profile(named: DataFrame, measured: DataFrame, coercionThreshold: Double,
+                      checks: Seq[Column]): (Profile, Row) = {
     val cols = named.columns.toSeq
     val strings = Coercion.stringColumns(named)
     // index of the row's last non-null column, -1 for an all-null row
@@ -193,8 +206,8 @@ object FilePipeline {
       if (flagged) Seq(count(when(!col("is_shifted"), 1)).as("__clean"),
                        count(when(col("is_shifted"), 1)).as("__shifted"))
       else Seq.empty
-    val aggs = OverflowRepair.measures(cols) ++ Coercion.measures(strings) ++ trailingNull ++ split
-    val m = named.agg(aggs.head, aggs.tail: _*).head()
+    val m = Measure.row(measured,
+      OverflowRepair.measures(cols) ++ Coercion.measures(strings) ++ trailingNull ++ split ++ checks)
     val phantom = OverflowRepair.phantom(cols, m, OverflowRepair.Threshold)
     val total = m.getAs[Long]("__total")
     def nullLast(k: Int): Long = m.getAs[Long](s"__null_last_$k")
@@ -202,8 +215,28 @@ object FilePipeline {
       if (phantom.nonEmpty) (nullLast(phantom.length), total - nullLast(phantom.length))
       else if (flagged) (m.getAs[Long]("__clean"), m.getAs[Long]("__shifted"))
       else (total - nullLast(cols.length), 0L)
-    Profile(phantom, Coercion.targets(Coercion.evidence(strings, m), coercionThreshold),
-      rows, quarantined)
+    (Profile(phantom, Coercion.targets(Coercion.evidence(strings, m), coercionThreshold),
+      rows, quarantined), m)
+  }
+
+  /** The file's raw frame with normalized names, and its profile. A strict
+    * CSV parse is checked on the profile's own row; one that fails the
+    * check is recovered and profiled again. */
+  private def loadProfiled(spark: SparkSession, path: String,
+                           coercionThreshold: Double): (DataFrame, Profile) = {
+    def profiled(raw: DataFrame): (DataFrame, Profile) = {
+      val named = ColumnNameNormalizer(raw)
+      (named, profile(named, named, coercionThreshold, Seq.empty)._1)
+    }
+    parse(spark, path) { strict =>
+      // normalized names never start with '_', so none meets the capture
+      val measured = strict.frame.toDF(
+        ColumnNameNormalizer.normalizeAll(strict.data.columns.toSeq) :+ Readers.Corrupt: _*)
+      val named = measured.drop(Readers.Corrupt)
+      val (p, m) = profile(named, measured, coercionThreshold, Seq(Readers.CorruptCount))
+      strict.check(m)
+      (named, p)
+    }(profiled)
   }
 
   def processFile(spark: SparkSession, path: String, table: String,
@@ -214,14 +247,8 @@ object FilePipeline {
     if (priorStatus.contains("loaded"))
       return Result(hash, "loaded", 0L, skipped = true)
     ledger.record(FileRecord(hash, path, table, "received", 0L))
-    // the strict CSV parse cache, released once the load has committed or
-    // failed; non-blocking, so the load does not wait on the block removal
-    var cache = Option.empty[DataFrame]
     try {
-      val (raw, parsed) = loadRaw(spark, path)
-      cache = parsed
-      val named = ColumnNameNormalizer(raw)
-      val p = profile(named, coercionThreshold)
+      val (named, p) = loadProfiled(spark, path, coercionThreshold)
       val nonEmpty = OverflowRepair.flag(named, p.phantom).na.drop("all")
       val coerced = Coercion.cast(nonEmpty, p.targets)
       val cleaned = coerced.select(coerced.schema.fields.map { f =>
@@ -276,6 +303,6 @@ object FilePipeline {
       case e: Exception =>
         ledger.record(FileRecord(hash, path, table, "failed", 0L))
         throw e
-    } finally cache.foreach(_.unpersist(blocking = false))
+    }
   }
 }

@@ -1,7 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.core.Measure
 
 /** File-format detection + raw readers, mirroring the reference ingestion
   * engine (datagrunt_agent/core/file_detector.py, sql/ingestion/load_*.sql).
@@ -97,6 +102,9 @@ object SourceLines {
 
   def head(spark: SparkSession, path: String, n: Int): Seq[String] =
     withLines(spark, path)(_.take(n).toVector)
+
+  def fold[T](spark: SparkSession, path: String, zero: T)(f: (T, String) => T): T =
+    withLines(spark, path)(_.foldLeft(zero)(f))
 
   /** Fold over the lines that are not blank after `String.trim`: the lines
     * the CSV parser can turn into records. */
@@ -197,48 +205,101 @@ object Readers {
   def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Atomic-load guarantee (reference tools/ingestion.py:537-557): the loaded
-    * row count must equal the source line count (minus header), AND no row may
-    * be silently truncated. Spark's permissive CSV keeps a row whose extra
-    * tokens overflow the schema but discards the overflow — value loss the
-    * row count cannot see — so the data pass re-reads with an explicit
-    * `_corrupt_record` column: token-overflow rows land there and fail the
-    * load loudly (routing the file to [[CsvRecovery]] in the pipeline).
-    * Returns the loaded frame and the cached parse it reads from, which the
-    * caller unpersists once the frame's last action has run (a failed load
-    * has released it already). */
-  def atomicCsv(spark: SparkSession, path: String, sep: String = ",",
-                header: Boolean = true,
-                multiLine: Boolean = false): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val cols = csvStrict(spark, path, sep = sep, header = header,
-      multiLine = multiLine).schema.fieldNames
-    val checkedSchema = StructType(
-      cols.map(c => StructField(c, StringType)) :+ StructField("_corrupt_record", StringType))
-    val df = spark.read
-      .option("sep", sep).option("quote", "\"").option("escape", "\\")
-      .option("header", header).option("mode", "PERMISSIVE")
-      .option("multiLine", multiLine).option("nullValue", "")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(checkedSchema).csv(path)
-      .cache()
-    val counts = df.agg(count(lit(1)), count(col("_corrupt_record"))).head()
-    val (loaded, corrupt) = (counts.getLong(0), counts.getLong(1))
-    if (corrupt > 0) {
-      df.unpersist()
-      throw new IllegalStateException(
-        s"atomic load failed: $corrupt malformed rows (token overflow or bad " +
-          s"quoting) in $path")
+  /** The column the strict parse routes a malformed row's text to. */
+  val Corrupt = "_corrupt_record"
+
+  /** The count of malformed rows [[StrictCsv.check]] reads. */
+  val CorruptCount: Column = count(col(Corrupt)).as("__corrupt")
+
+  /** A strict CSV parse whose atomic check has not run yet. `frame` holds the
+    * header's columns, all strings, and [[Corrupt]]; `sourceRows` counts the
+    * source lines that can become records, header excluded. Nothing is
+    * cached: every action on the frame parses the file again. */
+  final case class StrictCsv(path: String, frame: DataFrame, sourceRows: Long) {
+    def data: DataFrame = frame.drop(Corrupt)
+
+    /** [[check]]'s measures over `frame` alone. Spark refuses a query of a
+      * raw CSV file that reads only the capture column, so they count every
+      * column's values too. */
+    def measures: Seq[Column] =
+      Seq(count(lit(1)).as("__total"), CorruptCount) ++ data.columns.map(c => count(col(c)))
+
+    /** Atomic-load guarantee (reference tools/ingestion.py:537-557): the
+      * loaded row count must equal the source line count (minus header), AND
+      * no row may be silently truncated. Spark's permissive CSV keeps a row
+      * whose extra tokens overflow the schema but discards the overflow —
+      * value loss the row count cannot see — so the parse carries an
+      * explicit [[Corrupt]] column: token-overflow rows land there and fail
+      * the load loudly (routing the file to [[CsvRecovery]] in the
+      * pipeline). `measured` is an aggregate row over `frame` that holds
+      * [[CorruptCount]] and the row count as `__total`. */
+    def check(measured: Row): Unit = {
+      val (loaded, corrupt) = (measured.getAs[Long]("__total"), measured.getAs[Long]("__corrupt"))
+      if (corrupt > 0)
+        throw new IllegalStateException(
+          s"atomic load failed: $corrupt malformed rows (token overflow or bad " +
+            s"quoting) in $path")
+      if (loaded != sourceRows)
+        throw new IllegalStateException(
+          s"atomic load failed: $loaded rows loaded vs $sourceRows source lines in $path")
     }
+  }
+
+  /** Parse `path` strictly, with the header names and the source line count
+    * taken on the driver in one pass over the file's lines (see
+    * [[csvHeader]]); no Spark job runs. A file without a non-blank line has
+    * no columns to parse: it fails the atomic check here. */
+  def strictCsv(spark: SparkSession, path: String, sep: String, header: Boolean,
+                multiLine: Boolean): StrictCsv = {
+    val (names, lines) = csvHeader(spark, path, sep, header, multiLine)
+    if (names.isEmpty)
+      throw new IllegalStateException(s"atomic load failed: no non-blank line in $path")
+    val schema = StructType(
+      names.map(StructField(_, StringType)) :+ StructField(Corrupt, StringType))
+    val frame = spark.read
+      .options(csvOptions(sep, header, multiLine))
+      .option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", Corrupt)
+      .schema(schema).csv(path)
     // the CSV parser silently skips blank/whitespace-only lines; count only
     // lines that can become records so legitimate files don't fail the check
-    val rawLines = SourceLines.countNonBlank(spark, path) - (if (header) 1L else 0L)
-    if (loaded != rawLines) {
-      df.unpersist()
-      throw new IllegalStateException(
-        s"atomic load failed: $loaded rows loaded vs $rawLines source lines in $path")
+    StrictCsv(path, frame, lines - (if (header) 1L else 0L))
+  }
+
+  /** The strict parse of [[atomicCsv]] and [[strictCsv]]: [[csvStrict]]'s
+    * quote, escape and null settings. */
+  private def csvOptions(sep: String, header: Boolean, multiLine: Boolean): Map[String, String] =
+    Map("sep" -> sep, "quote" -> "\"", "escape" -> "\\", "header" -> header.toString,
+      "multiLine" -> multiLine.toString, "nullValue" -> "")
+
+  /** The column names `csvStrict(...).schema` infers, and the number of
+    * lines that are not blank after `String.trim`, from one driver pass.
+    * Spark infers the names from the first line that is not empty after
+    * trimming spaces; it parses that line with the reader's own univocity
+    * settings and makes the names safe: an empty or null-value name becomes
+    * `_c<i>`, and a duplicate name (case-insensitive unless
+    * `spark.sql.caseSensitive`) gets its index appended. A header must sit
+    * on one line. */
+  private def csvHeader(spark: SparkSession, path: String, sep: String, header: Boolean,
+                        multiLine: Boolean): (Seq[String], Long) = {
+    val (first, lines) = SourceLines.fold(spark, path, (Option.empty[String], 0L)) {
+      case ((first, n), l) =>
+        (first.orElse(Some(l).filter(_.exists(_ != ' '))), if (l.trim.nonEmpty) n + 1 else n)
     }
-    (df.drop("_corrupt_record"), df)
+    val options = new CSVOptions(csvOptions(sep, header, multiLine), true,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val names = first.flatMap(l => Option(new CsvParser(options.asParserSettings).parseLine(l)))
+      .map(CSVUtils.makeSafeHeader(_, spark.conf.get("spark.sql.caseSensitive").toBoolean, options))
+    (names.toSeq.flatten, lines)
+  }
+
+  /** The strict parse, checked by its own aggregate: a clean file's frame,
+    * or an `IllegalStateException` for a file that breaks the atomic-load
+    * guarantee (see [[StrictCsv.check]]). */
+  def atomicCsv(spark: SparkSession, path: String, sep: String = ",",
+                header: Boolean = true, multiLine: Boolean = false): DataFrame = {
+    val strict = strictCsv(spark, path, sep, header, multiLine)
+    strict.check(Measure.row(strict.frame, strict.measures))
+    strict.data
   }
 }
 

@@ -4,6 +4,7 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.core.Measure
 import graft.normalize.OverflowRepair
 
 /** CSV recovery path (reference tools/ingestion.py:481-511, 1028-1074):
@@ -17,7 +18,10 @@ import graft.normalize.OverflowRepair
   * lines once (line count, header, token width — as the fast path's atomic
   * check does) and one small score row per config. The number of configs is
   * a constant 4, so recovery costs ~5 passes over the one file being
-  * recovered — the same multiple the reference pays.
+  * recovered — the same multiple the reference pays. Nothing is cached: a
+  * cached relation would run as a query stage of its own, one job more per
+  * read, while a parse of one small file is one split and its score is one
+  * job (see [[graft.core.Measure]]).
   */
 object CsvRecovery {
 
@@ -74,14 +78,13 @@ object CsvRecovery {
           .option("nullValue", "").option("enforceSchema", true)
           .schema(schema).csv(path)
           .toDF(names: _*)
-          .cache()
         val extras = names.drop(base)
-        val agg = df.agg(count(lit(1)).as("__rows"),
-          extras.map(c => count(col(c)).as(s"nn_$c")) ++
-            (if (extras.nonEmpty)
-               Seq(count(when(extras.map(c => col(c).isNotNull).reduce(_ || _), lit(1)))
-                 .as("__shifted"))
-             else Seq(lit(0L).as("__shifted"))): _*).head()
+        val agg = Measure.row(df, count(lit(1)).as("__rows") +:
+          extras.map(c => count(col(c)).as(s"nn_$c")) :+
+          (if (extras.nonEmpty)
+             count(when(extras.map(c => col(c).isNotNull).reduce(_ || _), lit(1)))
+               .as("__shifted")
+           else lit(0L).as("__shifted")))
         val rows = agg.getAs[Long]("__rows")
         val spilled = extras.count(c => agg.getAs[Long](s"nn_$c") > 0)
         val allNull = extras.filter(c => agg.getAs[Long](s"nn_$c") == 0)
@@ -93,20 +96,11 @@ object CsvRecovery {
     // fewest data-bearing padding columns, then closest row count, then
     // fewest shifted rows; ties resolve to the earliest (most standard) config
     val best = attempts.minBy(s => (s.spilledCols, math.abs(s.rows - srcRows), s.shiftedRows))
-    attempts.filterNot(_ eq best).foreach(_.df.unpersist())
-    if (best.rows != srcRows) {
-      best.df.unpersist()
+    if (best.rows != srcRows)
       throw new IllegalStateException(
         s"csv recovery failed atomic check: best strategy ${best.config.label} " +
           s"loaded ${best.rows} rows vs $srcRows source lines in $path")
-    }
-    val repaired = OverflowRepair.repair(
-      best.df.drop(best.allNullExtras: _*), overflowThreshold)
-    // OverflowRepair's measuring agg has run; release the parse cache so a
-    // long-draining inbox doesn't pin one full-file cache per recovered file
-    // (downstream actions re-read the file — file-scale, not table-scale)
-    best.df.unpersist()
-    repaired
+    OverflowRepair.repair(best.df.drop(best.allNullExtras: _*), overflowThreshold)
   }
 }
 
@@ -119,7 +113,8 @@ object CsvRecovery {
   *
   * Scale: validation and repair are per-line projections over a distributed
   * text scan (`try_parse_json` + regexp), then one distributed JSON parse of
-  * the repaired dataset. Nothing is collected for JSONL; array documents are
+  * the repaired dataset, each re-reading the file rather than a cache (as
+  * in [[CsvRecovery]]). Nothing is collected for JSONL; array documents are
   * driver-side by design (the reference uses arrays for report-sized files
   * only) with an explicit size guard.
   */
@@ -151,23 +146,17 @@ object JsonRepair {
       .toDF("line")
       .withColumn("fixed",
         when(isObject(col("line")), col("line")).otherwise(repair(col("line"))))
-      .cache()
-    val counts = checked.agg(count(lit(1)), count(when(!isObject(col("fixed")), 1))).head()
+    val counts = Measure.row(checked, Seq(count(lit(1)), count(when(!isObject(col("fixed")), 1))))
     val (n, bad) = (counts.getLong(0), counts.getLong(1))
-    if (bad > 0) {
-      checked.unpersist()
+    if (bad > 0)
       throw new IllegalStateException(
         s"json repair failed: $bad of $n lines are not parseable JSON objects " +
           s"in $path (atomic guarantee: no silent row loss)")
-    }
     val out = spark.read.json(checked.select("fixed").as[String])
-    if (out.columns.contains("_corrupt_record")) {
-      checked.unpersist()
+    if (out.columns.contains("_corrupt_record"))
       throw new IllegalStateException(
         s"json atomic check failed: reader flagged corrupt records in $path")
-    }
-    val loaded = out.count()
-    checked.unpersist()
+    val loaded = Measure.row(out, Seq(count(lit(1)))).getLong(0)
     if (loaded != n)
       throw new IllegalStateException(
         s"json atomic check failed: $loaded rows loaded vs $n source lines in $path")

@@ -253,10 +253,47 @@ class AutoSkipSpec extends AnyFunSuite {
       AutoSkip.read(spark, root, "t").filter(col("v") >= 2000L && col("v") <= 2099L).collect())
     assert(rows.length == 200)
     // job counts repeat exactly, so the pin is exact. No filter pins a point
-    // value on id, so the read resolves no Bloom sidecar; reading it and
-    // collecting its file list would add 3 jobs
-    val pinned = 4
+    // value on id, so the read resolves no Bloom sidecar, and the handle
+    // takes the table schema from the SCHEMA file, not from a footer read
+    val pinned = 3
     assert(jobs == pinned, s"a range-only read ran $jobs Spark jobs, pinned at $pinned")
+  }
+
+  test("job-count guard: a point read through the Bloom sidecar") {
+    val (root, _) = build() // zone map on v, Bloom filter on id
+    val (rows, jobs) = TestSpark.jobsOf(
+      AutoSkip.read(spark, root, "t").filter(col("id") === "id_a_2010").collect())
+    assert(rows.length == 1)
+    // exact pin: the Bloom sidecar resolves its covered files and its
+    // (bits, k) in one aggregate, and the membership join reuses them
+    val pinned = 9
+    assert(jobs == pinned, s"a point read ran $jobs Spark jobs, pinned at $pinned")
+  }
+
+  test("the read handle's schema is the table's read schema") {
+    import spark.implicits._
+    val root = tempDir()
+    val table = new PartitionedTable(root, Seq("cat"))
+    // names, order and nullability: a parquet read makes every column
+    // nullable, and takes its order from the first file it lists
+    def same(step: String): Unit =
+      assert(AutoSkip.read(spark, root, "t").schema == table.read(spark, "t").schema, step)
+    table.create(Seq(("b", 1L, "x")).toDF("cat", "v", "id"), "t")
+    same("create")
+    // a write keeps its frame's column order, and partition a's file sorts
+    // first by path, so the SCHEMA file's order is not the read's
+    table.append(Seq(("y", 2.5, 2L, "a")).toDF("id", "score", "v", "cat"), "t")
+    same("additive append")
+    table.append(Seq(("b", 3L, "z")).toDF("cat", "v", "id"), "t")
+    table.compact(spark, "t")
+    same("compact")
+    table.upsert(Seq(("a", 1L, "x", 1.5, true)).toDF("cat", "v", "id", "score", "flag"),
+      "t", Seq("id"))
+    same("upsert adding a column")
+    table.overwrite(Seq((3, "c")).toDF("w", "cat"), "t")
+    same("overwrite")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "t", "SCHEMA"))
+    same("no SCHEMA file")
   }
 
   test("the skipping gates still prune their AutoSkip tables") {

@@ -90,7 +90,7 @@ class ExcelSpec extends AnyFunSuite {
     import spark.implicits._
     val path = tmp("routed.xlsx")
     Excel.write(Seq(("1", "a"), ("2", "b")).toDF("id", "v"), path)
-    val df = graft.pipeline.FilePipeline.loadRaw(spark, path)._1
+    val df = graft.pipeline.FilePipeline.loadRaw(spark, path)
     assert(df.count() == 2)
     assert(df.columns.toSeq == Seq("id", "v"))
   }
@@ -99,7 +99,7 @@ class ExcelSpec extends AnyFunSuite {
     import spark.implicits._
     val byExt = tmp("routed.xls")
     graft.sources.ExcelLegacy.write(Seq(("9", "z")).toDF("id", "v"), byExt)
-    val df = graft.pipeline.FilePipeline.loadRaw(spark, byExt)._1
+    val df = graft.pipeline.FilePipeline.loadRaw(spark, byExt)
     assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("9", "z")))
     // extension-less: format detection must fall through to the OLE2 magic
     val noExt = tmp("routed_xls_blob")

@@ -129,7 +129,7 @@ class PipelineSpec extends AnyFunSuite {
     * by the measuring chain the fused profile replaces: OverflowRepair.repair
     * -> na.drop("all") -> Coercion.coerce -> count, one pass each. */
   private def chained(path: String): (Long, Long, DataFrame, Option[DataFrame]) = {
-    val named = ColumnNameNormalizer(FilePipeline.loadRaw(spark, path)._1)
+    val named = ColumnNameNormalizer(FilePipeline.loadRaw(spark, path))
     val coerced = Coercion.coerce(OverflowRepair.repair(named).na.drop("all"), 0.9)
     val cleaned = coerced.select(coerced.schema.fields.map { f =>
       if (f.dataType == org.apache.spark.sql.types.StringType)
@@ -205,9 +205,35 @@ class PipelineSpec extends AnyFunSuite {
     assert(r.rows == 200 && r.quarantinedRows == 0)
     assert(lake.read(spark, "orders").count() == 400)
     // job counts repeat exactly, so the pin is exact: a rise means a load
-    // gained a Spark job; a change that removes one on purpose lowers the pin
-    val pinned = 7
+    // gained a Spark job; a change that removes one on purpose lowers the pin.
+    // The two: the load profile, which carries the atomic check, and the
+    // staged write
+    val pinned = 2
     assert(jobs == pinned, s"a clean CSV load ran $jobs Spark jobs, pinned at $pinned")
+  }
+
+  test("job-count guard: a CSV load that falls back to CsvRecovery") {
+    val root = Files.createTempDirectory("graft-jobs-recovery")
+    // the last row's unquoted comma overflows the strict parse
+    def shifted(from: Int): String =
+      "id,grp,notes\n" + (from until from + 199).map(i => s"$i,g${i % 3},note $i").mkString("\n") +
+        s"\n${from + 199},g0,messy, extra\n"
+    val first = root.resolve("shifted-1.csv")
+    val second = root.resolve("shifted-2.csv")
+    Files.write(first, shifted(1).getBytes("UTF-8"))
+    Files.write(second, shifted(1001).getBytes("UTF-8"))
+    val lake = new PartitionedTable(root.resolve("lake").toString, Seq("grp"))
+    val ledger = new Ledger(root.resolve("ledger.tsv").toString)
+    FilePipeline.processFile(spark, first.toString, "t", lake, ledger)
+
+    val (r, jobs) = TestSpark.jobsOf(
+      FilePipeline.processFile(spark, second.toString, "t", lake, ledger))
+    assert(r.rows == 199 && r.quarantinedRows == 1)
+    assert(lake.read(spark, FilePipeline.quarantineTable("t")).count() == 2)
+    // exact pin: the failed strict profile, the 4 scored recovery parses,
+    // the overflow measure, the recovered profile and the two staged writes
+    val pinned = 9
+    assert(jobs == pinned, s"a recovered CSV load ran $jobs Spark jobs, pinned at $pinned")
   }
 
   test("a load releases its CSV parse cache: clean and CsvRecovery loads") {

@@ -54,7 +54,7 @@ class RecoverySpec extends AnyFunSuite {
 
   test("clean csv through loadRaw still uses the strict fast path (no is_shifted)") {
     val path = write("clean.csv", "id,name\n1,a\n2,b\n")
-    val df = graft.pipeline.FilePipeline.loadRaw(spark, path)._1
+    val df = graft.pipeline.FilePipeline.loadRaw(spark, path)
     assert(df.count() == 2)
     assert(!df.columns.contains("is_shifted"))
   }

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{DelimiterDetector, FormatDetector, Formats, Readers, Sinks, SourceLines}
+import graft.pipeline.FilePipeline
+import graft.sources.{DelimiterDetector, Encoding, FormatDetector, Formats, Readers, Sinks,
+  SourceLines}
 
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -46,12 +48,12 @@ class SourcesSpec extends AnyFunSuite {
 
   test("atomic load passes on clean file") {
     val p = tmpFile("ok.csv", "a,b\n1,2\n3,4\n")
-    assert(Readers.atomicCsv(spark, p)._1.count() == 2)
+    assert(Readers.atomicCsv(spark, p).count() == 2)
   }
 
   test("atomic load tolerates blank lines (CSV parser skips them)") {
     val p = tmpFile("blank.csv", "a,b\n1,2\n\n   \n3,4\n")
-    assert(Readers.atomicCsv(spark, p)._1.count() == 2)
+    assert(Readers.atomicCsv(spark, p).count() == 2)
   }
 
   test("atomic load fails when multi-line records merge source lines") {
@@ -96,12 +98,44 @@ class SourcesSpec extends AnyFunSuite {
       assert(SourceLines.countNonBlank(spark, p.toString) == nonBlank, name)
       // atomicCsv's guard holds on each file: its driver-side count agrees
       // with the rows the CSV parser loads
-      assert(Readers.atomicCsv(spark, p.toString, sep = sep)._1.count() == nonBlank - 1, name)
+      assert(Readers.atomicCsv(spark, p.toString, sep = sep).count() == nonBlank - 1, name)
     }
     val empty = dir.resolve("empty.csv")
     Files.write(empty, Array.emptyByteArray)
     assert(SourceLines.head(spark, empty.toString, 100).isEmpty)
     assert(SourceLines.countNonBlank(spark, empty.toString) == 0L)
+  }
+
+  test("driver-side header names equal csvStrict's inferred schema") {
+    val cases: Seq[(String, Array[Byte], String)] = Seq(
+      ("quoted", "\"a,b\",\"say \"\"hi\"\"\",c\n1,2,3\n", ","),
+      ("case_dups", "Id,id,ID,x,x\n1,2,3,4,5\n", ","),
+      ("empty_names", "a,,c,\n1,2,3,4\n", ","),
+      ("padded", " a , b ,c \n1,2,3\n", ","),
+      ("tab", "a\tb b\t\tc\n1\t2\t3\t4\n", "\t"),
+      ("blank_before", "\n   \n\na,b\n1,2\n", ","),
+      ("tab_line_before", "\t\na,b\n1,2\n", ","),
+      ("header_only", "a,b\n", ",")
+    ).map { case (n, c, sep) => (n, c.getBytes("UTF-8"), sep) } :+
+      ("bom", Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ "x,y\n1,2\n".getBytes("UTF-8"), ",")
+    val dir = Files.createTempDirectory("graft-header")
+    for (caseSensitive <- Seq("false", "true"); (name, content, sep) <- cases) {
+      val raw = dir.resolve(s"$name.csv")
+      Files.write(raw, content)
+      val p = Encoding.ensureUtf8(raw.toString).toString
+      spark.conf.set("spark.sql.caseSensitive", caseSensitive)
+      try {
+        val driver = Readers.strictCsv(spark, p, sep, header = true, multiLine = false)
+          .data.columns.toSeq
+        assert(driver == Readers.csvStrict(spark, p, sep = sep).schema.fieldNames.toSeq,
+          s"$name, caseSensitive=$caseSensitive")
+      } finally spark.conf.unset("spark.sql.caseSensitive")
+    }
+    // a file without a non-blank line still ends in CsvRecovery's error
+    val empty = dir.resolve("empty.csv")
+    Files.write(empty, "\n  \n".getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](FilePipeline.loadRaw(spark, empty.toString))
+    assert(e.getMessage.contains("no non-blank line"), e.getMessage)
   }
 
   test("json sniff: array vs jsonl") {
