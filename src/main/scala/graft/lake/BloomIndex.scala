@@ -25,6 +25,12 @@ import graft.core.Measure
   * a looked-up value always survives; false positives only cost extra file
   * opens, never wrong results, because Spark re-applies the exact predicate
   * after the scan.
+  *
+  * Maintenance is [[AutoSkip.index]]'s and the lake's commit hook's: one
+  * driver-side difference between the files a [[Sidecar]] covers and the
+  * manifest's live files keeps the rows of live files, drops the rest, and
+  * runs [[build]] over only the uncovered live files under the stored
+  * (bits, k).
   */
 object BloomIndex {
 
@@ -93,28 +99,6 @@ object BloomIndex {
     val (bits, k) = (ps.head.getInt(0), ps.head.getInt(1))
     requireParams(bits, k)
     Sidecar(index, m.getSeq[String](0).toSet, bits, k)
-  }
-
-  /** Incremental sidecar maintenance after appends/compaction — same set
-    * algebra as [[ZoneMapIndex.refresh]]: drop rows for rewritten files,
-    * keep covered files untouched, build filters ONLY for missing files
-    * (read directly — the append increment, not the table). Hash parameters
-    * come from the existing index, so the refreshed sidecar stays
-    * single-parameter by construction. */
-  def refresh(table: DataFrame, index: DataFrame, c: String): DataFrame = {
-    val Sidecar(_, _, bits, k) = sidecar(index)
-    val spark = table.sparkSession
-    val present = table.select(input_file_name().as("file")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kept = index.join(present, Seq("file"), "left_semi")
-    val missing = present
-      .join(index.select("file").distinct(), Seq("file"), "left_anti")
-      .collect().map(_.getString(0))
-    present.unpersist()
-    if (missing.isEmpty) kept
-    else kept.unionByName(
-      build(spark.read.schema(table.schema).parquet(missing.toIndexedSeq: _*),
-        c, bits, k))
   }
 
   /** Files that MIGHT contain at least one of `values` in column `c`: a

@@ -323,38 +323,6 @@ private[lake] final class LakeFs(root: String) {
   }
 }
 
-/** Shared path-identity helpers: every sidecar keys files by
-  * `input_file_name()` URIs while manifests list Hadoop paths — both
-  * normalize to the URI path component; and partition directories use
-  * Spark/Hive %xx escaping. One copy, so the normalization caveats (e.g.
-  * never hand a scheme-stripped path back to a scan) cannot drift between
-  * consumers. */
-private[lake] object LakePaths {
-  /** URI path component of a file identifier (scheme-insensitive KEY —
-    * never feed the result back to a scan; keep the original string). */
-  def pathOf(s: String): String =
-    try {
-      val u = new java.net.URI(s)
-      if (u.getScheme != null) u.getPath else s
-    } catch { case _: Exception => s }
-
-  /** Inverse of Spark/Hive partition-path escaping (%xx sequences). */
-  def unescapePathName(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 3 <= s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-}
-
 private[lake] object LakeFs {
   // JVM-wide checksum-disabled FileSystem per (scheme/authority, fs-conf
   // fingerprint): bounded by the number of distinct stores (times their few
@@ -530,8 +498,9 @@ class ParquetDirFormat(root: String) extends TableFormat {
     * pointer (Iceberg's expire_snapshots), RETAINING the `retainLast` most
     * recent predecessors (0 = drop every superseded snapshot). Readers
     * pinned to expired snapshots lose them — call on a maintenance
-    * schedule, not per commit (the sidecar auto-refresh applies its own
-    * bounded retention, [[AutoSkip.CommitRefreshRetain]]). */
+    * schedule, not per commit (the Bloom sidecars' refresh after each data
+    * commit applies its own bounded retention,
+    * [[AutoSkip.CommitRefreshRetain]]). */
   def expireSnapshots(table: String, retainLast: Int = 0): Seq[Int] = {
     val cur = currentVersion(table).getOrElse(return Seq.empty)
     val old = versions(table).filter(_ < cur).sorted.dropRight(retainLast)
@@ -624,11 +593,10 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     * regardless of spec (the shadow-column layout), so no read path depends
     * on which spec wrote a file. Mixed-spec correctness notes: [[upsert]]'s
     * keys-determine-partition shortcut disables itself while any old-spec
-    * entry remains, and [[AutoSkip.read]] prunes per file from its own
-    * entry's values (a column absent from an old spec simply contributes no
-    * partition evidence — superset). Racing writers are benign: a stage in
-    * flight under the old spec commits old-spec ids, which are exactly the
-    * mixed state this supports. */
+    * entry remains, and [[AutoSkip.read]] prunes per file from the file's
+    * own footer, which no spec change touches. Racing writers are benign: a
+    * stage in flight under the old spec commits old-spec ids, which are
+    * exactly the mixed state this supports. */
   def evolvePartitionSpec(t: String, newCols: Seq[String]): Unit = {
     require(newCols.nonEmpty, "partition spec needs at least one column")
     require(exists(t), s"no such table: $t")
@@ -714,7 +682,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
       val cur = currentVersion(t)
       val entries = rebase(cur.map(_ => manifestAt(t)._2).getOrElse(Seq.empty))
       if (casCommit(t, cur, entries)) {
-        AutoSkip.refreshAfterCommit(spark, root, t, read(spark, t))
+        AutoSkip.refreshAfterCommit(spark, root, t)
         return
       }
       attempts += 1
@@ -740,7 +708,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
           s"${currentVersion(t).map("v" + _).getOrElse("nothing")} is now current; " +
           "this commit is aborted and its staged directories are unreferenced " +
           "(expireUnreferenced cleans them) — retry the operation")
-    AutoSkip.refreshAfterCommit(spark, root, t, read(spark, t))
+    AutoSkip.refreshAfterCommit(spark, root, t)
   }
 
   /** Stage-write `df` partitioned by shadow columns, move each staged
@@ -814,8 +782,8 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
 
   /** (partitionId, FileStatus) for every data file in the current manifest
     * snapshot — the raw material for a [[AutoSkip.SidecarFileIndex]], which
-    * needs sizes and partition identities, not just paths. Manifest-sized
-    * listing work; no data file is read. */
+    * needs sizes and Hadoop paths, not path strings. Manifest-sized listing
+    * work; no data file is read. */
   def dataFileStatuses(t: String): Seq[(String, FileStatus)] =
     manifest(t).flatMap { case (id, dirs) =>
       dirs.flatMap(rel => io.listFilesRecursive(s"${dataDir(t)}/$rel"))
@@ -830,7 +798,21 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
       k.stripPrefix(Shadow) -> unescapePathName(v)
     }.toMap
 
-  private def unescapePathName(s: String): String = LakePaths.unescapePathName(s)
+  /** Inverse of Spark/Hive partition-path escaping (%xx sequences). */
+  private def unescapePathName(s: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '%' && i + 3 <= s.length) {
+        try {
+          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
+          i += 3
+        } catch { case _: NumberFormatException => sb.append(c); i += 1 }
+      } else { sb.append(c); i += 1 }
+    }
+    sb.toString
+  }
 
   override def create(df: DataFrame, t: String): Unit = {
     require(!exists(t), s"table already exists: $t")

@@ -384,32 +384,32 @@ object Events {
     * [[graft.lake.PartitionedTable]]s in one root, both partitioned by
     * event_type and range-clustered inside each partition (repartition
     * carries the partition key FIRST, so no task sprays sliver files across
-    * partition dirs), with sidecars from [[graft.lake.AutoSkip.index]]:
-    *  - `events_t`, clustered by value: a zone map on value and a Bloom
-    *    filter on user_id;
+    * partition dirs):
+    *  - `events_t`, clustered by value, with a Bloom sidecar on user_id from
+    *    [[graft.lake.AutoSkip.index]];
     *  - `events_u`, clustered by user_id (the join key of
-    *    [[keyRangeJoin]]): a zone map on user_id.
-    * Each gate is a plain `AutoSkip.read(...).filter(...)`; the FileIndex
-    * prunes from the filters Catalyst pushes down, and Spark re-applies them
-    * after the scan. Each oracle reads the events table straight, so the
-    * layout and the pruning must be invisible in the verified output: no
-    * lost stripe-edge rows, no double-counted files. */
+    *    [[keyRangeJoin]]).
+    * Range evidence on value and user_id comes from the data files' own
+    * footers, so it needs no index call. Each gate is a plain
+    * `AutoSkip.read(...).filter(...)`; the FileIndex prunes from the filters
+    * Catalyst pushes down, and Spark re-applies them after the scan. Each
+    * oracle reads the events table straight, so the layout and the pruning
+    * must be invisible in the verified output: no lost stripe-edge rows, no
+    * double-counted files. */
   private def skipRoot(spark: SparkSession, dir: String): String =
     graft.core.TempLayouts.rootFor("graft_skip_", dir) { r =>
       val src = Tables.events(spark, dir)
         .select("event_id", "user_id", "event_type", "value")
-      def layout(t: String, clusterBy: String, zoneCols: Seq[String],
-                 bloomCols: Seq[String]): Unit = {
+      def layout(t: String, clusterBy: String): Unit =
         new graft.lake.PartitionedTable(r, Seq("event_type"))
           .create(src.repartitionByRange(32, col("event_type"), col(clusterBy)), t)
-        graft.lake.AutoSkip.index(spark, r, t, zoneCols, bloomCols)
-      }
-      layout("events_t", "value", Seq("value"), Seq("user_id"))
-      layout("events_u", "user_id", Seq("user_id"), Seq.empty)
+      layout("events_t", "value")
+      layout("events_u", "user_id")
+      graft.lake.AutoSkip.index(spark, r, "events_t", Seq.empty, Seq("user_id"))
     }
 
-  /** Zone-map range read: a value band over `events_t`, pruned by the
-    * value zone map. */
+  /** Zone-map range read: a value band over `events_t`, pruned by the data
+    * files' footer bounds on value. */
   def zonemapRange(spark: SparkSession, dir: String): DataFrame =
     graft.lake.AutoSkip.read(spark, skipRoot(spark, dir), "events_t")
       .filter(col("value") >= 120.5 && col("value") <= 180.25)
@@ -467,8 +467,8 @@ object Events {
 
   /** The full file-skipping TRIAD on `events_t`: a partition predicate on
     * event_type, a range on value and a point set on user_id, each pruned
-    * by its own evidence (the manifest's partition values, the zone map,
-    * the Bloom filter) in one `listFiles` — the read shape a real lakehouse
+    * by its own evidence (the footers' event_type and value bounds, the
+    * Bloom filter) in one `listFiles` — the read shape a real lakehouse
     * query runs. No index is named in the query (the reference's model:
     * terraform/bigquery_tables.tf:97-116 declares the layout and BigQuery
     * prunes server-side). Serves both `events_skipping_triad` and

@@ -174,7 +174,7 @@ class AutoSkipSpec extends AnyFunSuite {
     // not grow one snapshot per table commit
     for (i <- 0 until 8)
       table.append(Seq(("a", 9100L + i, s"id_gen_$i")).toDF("cat", "v", "id"), "t")
-    val gens = new graft.lake.ParquetDirFormat(s"$root/t/idx").versions("zonemap")
+    val gens = new graft.lake.ParquetDirFormat(s"$root/t/idx").versions("bloom__id")
     assert(gens.size <= AutoSkip.CommitRefreshRetain + 1,
       s"sidecar generations must stay bounded, saw ${gens.size}: $gens")
   }
@@ -248,14 +248,15 @@ class AutoSkipSpec extends AnyFunSuite {
   }
 
   test("job-count guard: a range-only read over zone-map and Bloom sidecars") {
-    val (root, _) = build() // zone map on v, Bloom filter on id
+    val (root, _) = build() // footer zones on every column, Bloom filter on id
     val (rows, jobs) = TestSpark.jobsOf(
       AutoSkip.read(spark, root, "t").filter(col("v") >= 2000L && col("v") <= 2099L).collect())
     assert(rows.length == 200)
-    // job counts repeat exactly, so the pin is exact. No filter pins a point
-    // value on id, so the read resolves no Bloom sidecar, and the handle
-    // takes the table schema from the SCHEMA file, not from a footer read
-    val pinned = 3
+    // job counts repeat exactly, so the pin is exact. The schema and the
+    // zones come from footers read on the driver, and no filter pins a
+    // point value on id, so the read resolves no Bloom sidecar: the one job
+    // is the collect
+    val pinned = 1
     assert(jobs == pinned, s"a range-only read ran $jobs Spark jobs, pinned at $pinned")
   }
 
@@ -266,8 +267,50 @@ class AutoSkipSpec extends AnyFunSuite {
     assert(rows.length == 1)
     // exact pin: the Bloom sidecar resolves its covered files and its
     // (bits, k) in one aggregate, and the membership join reuses them
-    val pinned = 9
+    val pinned = 7
     assert(jobs == pinned, s"a point read ran $jobs Spark jobs, pinned at $pinned")
+  }
+
+  test("escaped partition values: pruned reads keep exactly the holding files after every commit") {
+    import spark.implicits._
+    // a tab, a space and a '%' in a partition value: Spark escapes the tab
+    // and the '%' in the directory name (s=%09P, s=a%25b), which a file's
+    // URI escapes once more. Every commit refreshes the Bloom sidecar on id
+    val root = tempDir()
+    val table = new PartitionedTable(root, Seq("s"))
+    val parts = Seq("\tP", " P", "a%b", "plain")
+    // per file: a band of v, and ids interleaved over all files so only
+    // the Bloom sidecar tells the files apart on id
+    def batch(round: Int) = (for ((s, si) <- parts.zipWithIndex; i <- 0 until 20)
+      yield (s, 10000L * round + 100L * si + i, f"u${round * 1000 + parts.size * i + si}%05d"))
+      .toDF("s", "v", "id").repartition(1)
+    def check(step: String): Unit = {
+      val plain = table.read(spark, "t")
+      val perFile = plain.groupBy(input_file_name().as("f"))
+        .agg(min("v").as("lo"), max("v").as("hi"), first("id").as("id")).collect()
+        .map(r => (AutoSkip.fileKey(r.getString(0)), r.getLong(1), r.getLong(2), r.getString(3)))
+      def keys(df: DataFrame) =
+        keptOf(df).map(p => AutoSkip.fileKey(new org.apache.hadoop.fs.Path(p).toUri.toString)).toSet
+      for ((file, _, _, id) <- perFile) {
+        val point = AutoSkip.read(spark, root, "t").filter(col("id") === id)
+        assertSameRows(point, plain.filter(col("id") === id))
+        assert(keys(point) == Set(file), s"$step: point read on $id kept ${keys(point)}")
+      }
+      val (lo, hi) = (150L, 250L)
+      val range = AutoSkip.read(spark, root, "t").filter(col("v").between(lo, hi))
+      assertSameRows(range, plain.filter(col("v").between(lo, hi)))
+      assert(keys(range) == perFile.filter(f => f._2 <= hi && f._3 >= lo).map(_._1).toSet,
+        s"$step: range read kept ${keys(range)}")
+    }
+    table.create(batch(0), "t")
+    AutoSkip.index(spark, root, "t", Seq("v"), Seq("id"))
+    check("create")
+    table.append(batch(1), "t")
+    check("first append")
+    table.append(batch(2), "t")
+    check("second append")
+    table.compact(spark, "t")
+    check("compact")
   }
 
   test("the read handle's schema is the table's read schema") {

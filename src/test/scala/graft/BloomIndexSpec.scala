@@ -101,26 +101,34 @@ class BloomIndexSpec extends AnyFunSuite {
 
   test("refresh: appended files get filters under the stored (bits, k), stale drop") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloomref_").toString
-    (0 until 2).foreach { k =>
-      (0 until 50).map(i => 1000L * k + i).toDF("id").coalesce(1)
-        .write.mode("append").parquet(dir)
-    }
-    val idx0 = BloomIndex.build(spark.read.parquet(dir), "id", bits = 1 << 10, k = 2)
-      .localCheckpoint(true)
-    (0 until 50).map(i => 9000L + i).toDF("id").coalesce(1)
-      .write.mode("append").parquet(dir)
-    val table = spark.read.parquet(dir)
-    val idx1 = BloomIndex.refresh(table, idx0, "id").localCheckpoint(true)
-    // the new value is found, and only in the appended file (no false negatives)
-    val hits = BloomIndex.candidateFiles(spark, idx1, Seq(9007L))
-    assert(hits.nonEmpty, "appended value must be indexed after refresh")
-    val rows = spark.read.parquet(BloomIndex.candidateFiles(spark, idx1, Seq(9007L, 1003L)): _*)
-      .filter(col("id").isin(9007L, 1003L)).collect().map(_.getLong(0)).sorted.toSeq
-    assert(rows == Seq(1003L, 9007L))
-    // refreshed sidecar still carries exactly one (bits, k) pair
-    assert(idx1.select("bits", "k").distinct().count() == 1)
-    // no-op refresh is stable
-    assert(BloomIndex.refresh(table, idx1, "id").count() == idx1.count())
+    val root = Files.createTempDirectory("graft_bloomref_").toString
+    val table = new PartitionedTable(root, Seq("p"))
+    def frame(from: Long) = (0 until 50).map(i => (from + i, "x")).toDF("id", "p").coalesce(1)
+    table.create(frame(0L), "t")
+    table.append(frame(1000L), "t")
+    // a sidecar under NON-default (bits, k) at the layout AutoSkip.index uses
+    val idx = new graft.lake.ParquetDirFormat(s"$root/t/idx")
+    idx.create(BloomIndex.build(table.read(spark, "t"), "id", bits = 1 << 10, k = 2), "bloom__id")
+    def sidecar() = BloomIndex.sidecar(idx.read(spark, "bloom__id"))
+    def live() = table.dataFileStatuses("t").map(_._2.getPath.toUri.getPath).toSet
+    // the append's commit refreshes the sidecar: the new file is covered
+    // under the stored parameters, and the covered set is the live one
+    table.append(frame(9000L), "t")
+    val s1 = sidecar()
+    assert((s1.bits, s1.k) == (1 << 10, 2) && s1.files.map(AutoSkip.fileKey) == live())
+    assert(BloomIndex.candidateFiles(spark, s1, Seq(9007L)).nonEmpty,
+      "appended value must be indexed after refresh")
+    val got = AutoSkip.read(spark, root, "t").filter(col("id").isin(9007L, 1003L))
+    assert(got.collect().map(_.getAs[Long]("id")).sorted.toSeq == Seq(1003L, 9007L))
+    // an index call on a current sidecar commits nothing
+    val gens = idx.versions("bloom__id")
+    AutoSkip.index(spark, root, "t", zoneCols = Seq.empty, bloomCols = Seq("id"))
+    assert(idx.versions("bloom__id") == gens)
+    // compaction rewrites every file: rows of the old files drop, the new
+    // file is covered, still under one (bits, k) pair
+    table.compact(spark, "t")
+    val s2 = sidecar()
+    assert((s2.bits, s2.k) == (1 << 10, 2) && s2.files.map(AutoSkip.fileKey) == live())
+    assert(s2.index.select("bits", "k").distinct().count() == 1)
   }
 }

@@ -212,6 +212,39 @@ class PipelineSpec extends AnyFunSuite {
     assert(jobs == pinned, s"a clean CSV load ran $jobs Spark jobs, pinned at $pinned")
   }
 
+  test("job-count guard: a clean CSV load into a zone- and Bloom-indexed PartitionedTable") {
+    val root = Files.createTempDirectory("graft-jobs-indexed")
+    def orders(from: Int): String =
+      "o_orderkey,o_custkey,o_orderstatus,o_totalprice,o_orderdate,o_comment\n" +
+        (from until from + 200).map { i =>
+          s"$i,${i % 37}, ${"FOP"(i % 3)} ,${i * 1.25},2024-01-${"%02d".format(i % 28 + 1)},note $i"
+        }.mkString("\n") + "\n"
+    val first = root.resolve("orders-1.csv")
+    val second = root.resolve("orders-2.csv")
+    Files.write(first, orders(1).getBytes("UTF-8"))
+    Files.write(second, orders(1001).getBytes("UTF-8"))
+    val lakeRoot = root.resolve("lake").toString
+    val lake = new PartitionedTable(lakeRoot, Seq("o_orderstatus"))
+    val ledger = new Ledger(root.resolve("ledger.tsv").toString)
+    FilePipeline.processFile(spark, first.toString, "orders", lake, ledger)
+    graft.lake.AutoSkip.index(spark, lakeRoot, "orders", Seq("o_orderkey", "o_totalprice"),
+      Seq("o_custkey"))
+
+    val (r, jobs) = TestSpark.jobsOf(
+      FilePipeline.processFile(spark, second.toString, "orders", lake, ledger))
+    assert(r.rows == 200 && r.quarantinedRows == 0)
+    // the commit hook brought the Bloom sidecar to the live file list
+    val sidecar = graft.lake.BloomIndex.sidecar(
+      new ParquetDirFormat(s"$lakeRoot/orders/idx").read(spark, "bloom__o_custkey"))
+    assert(sidecar.files.map(graft.lake.AutoSkip.fileKey) ==
+      lake.dataFileStatuses("orders").map(_._2.getPath.toUri.getPath).toSet)
+    // exact pin: the un-indexed load's 2 jobs, plus the commit hook's Bloom
+    // refresh — the sidecar's covered-files aggregate and the build of the
+    // new files' filters, written as the sidecar's next generation
+    val pinned = 6
+    assert(jobs == pinned, s"an indexed clean CSV load ran $jobs Spark jobs, pinned at $pinned")
+  }
+
   test("job-count guard: a CSV load that falls back to CsvRecovery") {
     val root = Files.createTempDirectory("graft-jobs-recovery")
     // the last row's unquoted comma overflows the strict parse

@@ -1,13 +1,19 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import graft.lake.{AutoSkip, PartitionedTable, ZoneMapIndex}
+import org.apache.spark.sql.types._
+import graft.lake.{AutoSkip, PartitionedTable}
 
-/** Zone-map sidecar pins: per-file bounds, range pruning superset guarantee,
-  * actual file skipping through [[AutoSkip.read]], typed (non-rounded) int64
-  * bounds, Iceberg-style string upper-bound truncation, null semantics. */
+/** Range evidence pins: [[AutoSkip.read]] bounds every file from its own
+  * Parquet footer. Exact typed bounds per file, equal to a per-file scan
+  * for every mapped type; range pruning through the FileIndex with the
+  * superset guarantee; null semantics; and the footers that give no
+  * evidence (a NaN, an over-long string, an INT96 timestamp), whose files
+  * must be kept. */
 class ZoneMapSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -23,17 +29,17 @@ class ZoneMapSpec extends AnyFunSuite {
     root
   }
 
-  /** A [[PartitionedTable]] `t` (one constant partition `p`) committed one
-    * file per frame, zone-indexed on `zoneCols`. */
-  private def lakeOf(frames: Seq[DataFrame], zoneCols: Seq[String]): String = {
+  /** A [[PartitionedTable]] `t` partitioned by `p` (the constant "x" where a
+    * frame carries none), committed one file per frame. */
+  private def lakeOf(frames: Seq[DataFrame]): (String, PartitionedTable) = {
     val root = tempDir()
     val table = new PartitionedTable(root, Seq("p"))
-    frames.map(_.withColumn("p", lit("x")).coalesce(1)).zipWithIndex.foreach {
-      case (f, 0) => table.create(f, "t")
-      case (f, _) => table.append(f, "t")
-    }
-    AutoSkip.index(spark, root, "t", zoneCols)
-    root
+    frames.map(f => (if (f.columns.contains("p")) f else f.withColumn("p", lit("x"))).coalesce(1))
+      .zipWithIndex.foreach {
+        case (f, 0) => table.create(f, "t")
+        case (f, _) => table.append(f, "t")
+      }
+    (root, table)
   }
 
   /** [[lakeOf]] of 4 files with disjoint known ranges: file k holds v in
@@ -42,40 +48,133 @@ class ZoneMapSpec extends AnyFunSuite {
     import spark.implicits._
     lakeOf((0 until 4).map { k =>
       (0 until 100).map(i => (1000L * k + i, s"name_${1000 * k + i}")).toDF("v", "s")
-    }, Seq("v", "s"))
+    })._1
   }
 
   private def keptOf(df: DataFrame): Seq[String] = AutoSkip.fileIndexOf(df).get.lastKept
 
-  /** 4 files with disjoint known ranges: file k holds v in [1000k, 1000k+99]. */
-  private def writeRanged(): String = {
-    import spark.implicits._
-    val dir = tempDir()
-    (0 until 4).foreach { k =>
-      (0 until 100).map(i => (1000L * k + i, s"name_${1000 * k + i}"))
-        .toDF("v", "s").coalesce(1)
-        .write.mode("append").parquet(dir)
-    }
-    dir
+  /** The footer evidence a read handle holds, by file key. */
+  private def zonesOf(root: String): Map[String, Map[String, AutoSkip.ColZone]] =
+    AutoSkip.fileIndexOf(AutoSkip.read(spark, root, "t")).get.zones
+
+  private def keyOfKept(path: String): String =
+    AutoSkip.fileKey(new org.apache.hadoop.fs.Path(path).toUri.toString)
+
+  /** The same evidence built by a scan: per file, each column's min, max,
+    * null count and row count, in catalyst values. */
+  private def scanZones(root: String, cols: Seq[String]): Map[String, Map[String, AutoSkip.ColZone]] = {
+    val df = PartitionedTable.open(root, "t").read(spark, "t")
+    val aggs = count(lit(1)).as("__rows") +: cols.flatMap(c => Seq(min(col(c)), max(col(c)),
+      sum(when(col(c).isNull, 1L).otherwise(0L))))
+    df.groupBy(input_file_name().as("__file")).agg(aggs.head, aggs.tail: _*).collect().map { r =>
+      val rows = r.getLong(1)
+      AutoSkip.fileKey(r.getString(0)) -> cols.zipWithIndex.map { case (c, i) =>
+        val conv = CatalystTypeConverters.createToCatalystConverter(df.schema(c).dataType)
+        c -> AutoSkip.ColZone(conv(r.get(2 + 3 * i)), conv(r.get(3 + 3 * i)), r.getLong(4 + 3 * i), rows)
+      }.toMap
+    }.toMap
+  }
+
+  /** Equal under the column's own Spark ordering (so -0.0 equals 0.0). */
+  private def sameZone(dt: DataType, a: AutoSkip.ColZone, b: AutoSkip.ColZone): Boolean = {
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    def eq(x: Any, y: Any) = if (x == null || y == null) x == null && y == null else ord.equiv(x, y)
+    eq(a.min, b.min) && eq(a.max, b.max) && a.nulls == b.nulls && a.rows == b.rows
   }
 
   test("build: one row per file, exact typed bounds, null accounting") {
     import spark.implicits._
-    val dir = writeRanged()
-    val idx = ZoneMapIndex.build(spark.read.parquet(dir), Seq("v", "s"))
-    val rows = idx.collect()
-    assert(rows.length == 4, "one sidecar row per file")
-    rows.foreach { r =>
-      val mn = r.getAs[Long]("v__min"); val mx = r.getAs[Long]("v__max")
+    val root = rangedLake()
+    val zones = zonesOf(root)
+    assert(zones.size == 4, "one evidence entry per file")
+    zones.values.foreach { z =>
+      val v = z("v")
+      val (mn, mx) = (v.min.asInstanceOf[Long], v.max.asInstanceOf[Long])
       assert(mx - mn == 99L && mn % 1000 == 0, s"bounds $mn..$mx not a file range")
-      assert(r.getAs[Long]("rows") == 100L && r.getAs[Long]("v__nulls") == 0L)
+      assert(v.rows == 100L && v.nulls == 0L)
     }
-    // int64 bounds exceeding double precision survive exactly (no rounding)
-    val bigDir = tempDir()
+    // int64 bounds exceeding double precision survive exactly (no rounding),
+    // and nulls are counted per column
     val big = (1L << 53) + 1L
-    Seq(big, big + 3L).toDF("v").coalesce(1).write.mode("append").parquet(bigDir)
-    val bigIdx = ZoneMapIndex.build(spark.read.parquet(bigDir), Seq("v")).collect()
-    assert(bigIdx.head.getAs[Long]("v__min") == big, "2^53+1 must not round")
+    val (bigRoot, _) = lakeOf(Seq(Seq(Some(big), Some(big + 3L), None).toDF("v")))
+    val z = zonesOf(bigRoot).values.head("v")
+    assert(z.min == big && z.max == big + 3L, "2^53+1 must not round")
+    assert(z.nulls == 1L && z.rows == 3L)
+  }
+
+  test("footer zones equal a per-file scan for every mapped type; NaN, long strings and INT96 keep their file") {
+    val schema = StructType(Seq(
+      StructField("tag", StringType), StructField("p", StringType),
+      StructField("l", LongType), StructField("i", IntegerType),
+      StructField("sh", ShortType), StructField("b", ByteType),
+      StructField("dt", DateType), StructField("s", StringType),
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("dec9", DecimalType(9, 2)), StructField("dec18", DecimalType(18, 4)),
+      StructField("dec30", DecimalType(30, 5)), StructField("bo", BooleanType),
+      StructField("ntz", TimestampNTZType), StructField("ts", TimestampType)))
+    val cols = schema.fieldNames.toSeq.filterNot(_ == "tag")
+    def row(tag: String, p: String, n: Long, s: String, d: Double, f: Float): Row = Row(
+      tag, p, n * 1000003L, n.toInt * 7, (n * 3).toShort, n.toByte,
+      java.time.LocalDate.of(2024, 1, 1).plusDays(n), s, d, f,
+      new java.math.BigDecimal(n).movePointLeft(2), new java.math.BigDecimal(n * 100001L).movePointLeft(4),
+      new java.math.BigDecimal(n).multiply(new java.math.BigDecimal("1e20")).movePointLeft(5),
+      n % 2 == 0, java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusSeconds(n * 3601L),
+      java.time.Instant.parse("2024-01-01T00:00:00Z").plusSeconds(n * 7L))
+    def frame(rows: Row*): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val long = "z" * 5000
+    val (root, table) = lakeOf(Seq(
+      // negatives, multi-byte and astral strings
+      frame(row("mixed", "x", -5L, "é", -2.5, -1.5f), row("mixed", "x", 9L, "日本", 3.25, 7.5f),
+        row("mixed", "x", 2L, "\uD83D\uDE00", 1.0, 0.5f), row("mixed", "x", -1L, "a", 0.0, 0.0f)),
+      frame(row("zeros", "x", 1L, "b", -0.0, -0.0f), row("zeros", "x", 3L, "c", 0.0, 0.0f)),
+      frame(row("default_part", null, 4L, "d", 4.0, 4.0f), row("default_part", null, 6L, "e", 6.0, 6.0f)),
+      frame(row("tab_part", "\tP", 7L, "\tq", 7.0, 7.0f), row("tab_part", "\tP", 8L, " q", 8.0, 8.0f)),
+      frame(Row.fromSeq("all_null" +: "x" +: Seq.fill(schema.length - 2)(null)),
+        Row.fromSeq("all_null" +: "x" +: Seq.fill(schema.length - 2)(null))),
+      frame(row("nan", "x", 10L, "f", Double.NaN, Float.NaN), row("nan", "x", 11L, "g", 1.0, 1.0f)),
+      frame(row("long", "x", 12L, long, 12.0, 12.0f), row("long", "x", 13L, "h", 13.0, 13.0f))))
+    val plain = table.read(spark, "t")
+    val fileOf = plain.groupBy(input_file_name()).agg(first("tag")).collect()
+      .map(r => r.getString(1) -> AutoSkip.fileKey(r.getString(0))).toMap
+    assert(fileOf.size == 7, fileOf.toString)
+    val zones = zonesOf(root)
+    val scanned = scanZones(root, cols)
+    // Spark writes TimestampType as INT96 unless told otherwise; INT96 has
+    // no defined order, so its footer gives no evidence
+    val int96 = spark.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+    val noEvidence = Set("nan" -> "d", "nan" -> "f", "long" -> "s") ++
+      (if (int96) fileOf.keys.map(_ -> "ts") else Nil)
+    for ((tag, key) <- fileOf; c <- cols) {
+      val got = zones(key).get(c)
+      if (noEvidence(tag -> c)) assert(got.isEmpty, s"$tag.$c must give no evidence: $got")
+      else assert(got.exists(sameZone(schema(c).dataType, _, scanned(key)(c))),
+        s"$tag.$c: footer $got, scan ${scanned(key)(c)}")
+    }
+    assert(zones(fileOf("default_part"))("p") == AutoSkip.ColZone(null, null, 2L, 2L))
+    assert(zones(fileOf("all_null"))("l") == AutoSkip.ColZone(null, null, 2L, 2L))
+    // the kept files answer exactly: NaN sorts above every double in Spark,
+    // so a range above all finite values must still find the NaN row
+    def check(pred: org.apache.spark.sql.Column, rows: Long, mustKeep: String*): Unit = {
+      val df = AutoSkip.read(spark, root, "t").filter(pred)
+      val got = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      assert(got == plain.filter(pred).collect().map(_.toSeq.mkString("|")).sorted.toSeq, pred.toString)
+      assert(got.size == rows, s"$pred: ${got.size} rows")
+      val kept = keptOf(df).map(keyOfKept).toSet
+      mustKeep.foreach(t => assert(kept(fileOf(t)), s"$pred must keep the $t file"))
+    }
+    check(col("d") > 1e9, 1L, "nan")
+    check(col("f") > 1e9f, 1L, "nan")
+    check(col("s") === long, 1L, "long")
+    check(col("d") === 0.0, 3L, "mixed", "zeros")
+    check(col("ts") === java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:28Z")), 1L)
+    check(col("p").isNull, 2L, "default_part")
+    check(col("p") === "\tP", 2L, "tab_part")
+    // the partition evidence is exact: those two reads keep one file each
+    val tabPart = AutoSkip.read(spark, root, "t").filter(col("p") === "\tP")
+    assert(tabPart.count() == 2L && keptOf(tabPart).size == 1)
+    val nullPart = AutoSkip.read(spark, root, "t").filter(col("p").isNull)
+    assert(nullPart.count() == 2L && keptOf(nullPart).size == 1)
   }
 
   test("range read prunes files and keeps the superset; the pruned read is exact") {
@@ -101,91 +200,69 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(low.count() == 6L && keptOf(low).size == 1)
   }
 
-  test("string bounds: truncation keeps the superset; upper bound increments") {
-    // unit pins on the truncation rule
-    assert(ZoneMapIndex.truncatedUpper("short", 10).contains("short"))
-    assert(ZoneMapIndex.truncatedUpper("abcdef", 3).contains("abd"), "last kept unit +1")
-    assert(ZoneMapIndex.truncatedUpper("ab\uFFFFzz", 3).contains("ac"),
-      "skip unincrementable tail unit")
-    assert(ZoneMapIndex.truncatedUpper("\uFFFF\uFFFF\uFFFFx", 3).isEmpty,
-      "all-FFFF prefix has no short upper bound")
-    assert(ZoneMapIndex.truncatedUpper("ab\uD83D\uDE00z", 3).contains("ac"),
-      "a surrogate half is never incremented or kept alone")
-    assert(ZoneMapIndex.truncatedUpper("a\uD7FFzz", 2).contains("a\uE000"),
-      "U+D7FF steps over the surrogate range")
+  test("string bounds: footer strings bound exactly; unboundable strings keep their file") {
     import spark.implicits._
-    // bounds keep 32 characters: every value below is longer
     val (lo, hi) = ("prefix_" + "a" * 40, "prefix_" + "z" * 40)
     val ffff = "\uFFFF" * 40
-    // a surrogate pair straddles the 32-unit cut
     val emoji = "a" * 31 + "\uD83D\uDE00" + "tail"
-    val root = lakeOf(Seq(Seq(lo, hi).toDF("s"), Seq(ffff).toDF("s"), Seq(emoji).toDF("s")),
-      Seq("s"))
-    val bounds = new graft.lake.ParquetDirFormat(s"$root/t/idx").read(spark, "zonemap")
-      .collect().map(r => (r.getAs[String]("s__min"), r.getAs[String]("s__max"))).toSet
-    // lower bound: the 32-unit prefix; upper bound: the prefix with its last
-    // unit incremented; an all-U+FFFF prefix has no short upper bound, so the
-    // full string is kept; the surrogate pair is kept whole by the lower
-    // bound (32 code points) and never split by the upper one
-    assert(bounds == Set(("prefix_" + "a" * 25, "prefix_" + "z" * 24 + "{"),
-      (ffff.take(32), ffff), (emoji.take(33), "a" * 30 + "b")), bounds.toString)
-    // every real value still falls inside its file's truncated bounds: a
-    // point probe keeps exactly the file holding it and reads the value
-    for (v <- Seq(lo, hi, ffff, emoji)) {
+    // parquet keeps a chunk's min and max only while together they fit in
+    // 4 KB: `mid` is bounded, `huge` is not
+    val (mid, huge) = ("m" * 1500, "n" * 3000)
+    val (root, _) = lakeOf(Seq(Seq(lo, hi).toDF("s"), Seq(ffff).toDF("s"), Seq(emoji).toDF("s"),
+      Seq(mid).toDF("s"), Seq(huge).toDF("s")))
+    val bounds = zonesOf(root).values.map(_.get("s").map(z => (z.min.toString, z.max.toString)))
+    assert(bounds.toSet == Set(Some((lo, hi)), Some((ffff, ffff)), Some((emoji, emoji)),
+      Some((mid, mid)), None), bounds.toString)
+    // a point probe keeps the file holding the value, plus the one file
+    // with no evidence; the probe for `huge` keeps that file alone
+    for (v <- Seq(lo, hi, ffff, emoji, mid, huge)) {
       val df = AutoSkip.read(spark, root, "t").filter(col("s") === v)
       assert(df.collect().map(_.getAs[String]("s")).toSeq == Seq(v))
-      assert(keptOf(df).size == 1, s"${v.take(10)}: kept ${keptOf(df).size} of 3")
+      assert(keptOf(df).size == (if (v == huge) 1 else 2), s"${v.take(10)}: kept ${keptOf(df).size} of 5")
     }
   }
 
   test("null semantics: all-null files prune, mixed files survive") {
     import spark.implicits._
-    val root = lakeOf(Seq(Seq[Option[Long]](None, None).toDF("v"),
-      Seq[Option[Long]](Some(7L), None).toDF("v")), Seq("v"))
+    val (root, _) = lakeOf(Seq(Seq[Option[Long]](None, None).toDF("v"),
+      Seq[Option[Long]](Some(7L), None).toDF("v")))
     // range probes never match NULL, so the all-null file is skippable
     val range = AutoSkip.read(spark, root, "t").filter(col("v") >= 0L && col("v") <= 100L)
     assert(range.collect().map(_.getAs[Long]("v")).toSeq == Seq(7L))
     assert(keptOf(range).size == 1)
     val notNull = AutoSkip.read(spark, root, "t").filter(col("v").isNotNull)
     assert(notNull.count() == 1L && keptOf(notNull).size == 1)
-    // non-orderable columns refuse loudly
-    val m = Seq((1L, Map("a" -> 1))).toDF("v", "m")
-    intercept[IllegalArgumentException](ZoneMapIndex.build(m, Seq("m")))
+    // index() refuses a range column that is missing or not orderable
+    val (mapRoot, _) = lakeOf(Seq(Seq((1L, Map("a" -> 1))).toDF("v", "m")))
+    intercept[IllegalArgumentException](AutoSkip.index(spark, mapRoot, "t", Seq("m")))
+    intercept[IllegalArgumentException](AutoSkip.index(spark, mapRoot, "t", Seq("absent")))
+    AutoSkip.index(spark, mapRoot, "t", Seq("v"))
   }
 
-  test("refresh: appended files profile incrementally, rewritten files drop") {
+  test("footer zones follow commits: appended files are bounded, rewritten files drop") {
     import spark.implicits._
-    val dir = tempDir()
-    (0 until 2).foreach { k =>
-      (0 until 50).map(i => 1000L * k + i).toDF("v").coalesce(1)
-        .write.mode("append").parquet(dir)
-    }
-    val idx0 = ZoneMapIndex.build(spark.read.parquet(dir), Seq("v"))
-      .localCheckpoint(true)
-    assert(idx0.count() == 2)
-    // append two more files: refresh profiles ONLY them and keeps the rest
-    (2 until 4).foreach { k =>
-      (0 until 50).map(i => 1000L * k + i).toDF("v").coalesce(1)
-        .write.mode("append").parquet(dir)
-    }
-    val idx1 = ZoneMapIndex.refresh(spark.read.parquet(dir), idx0, Seq("v"))
-      .localCheckpoint(true)
-    assert(idx1.count() == 4)
-    assert(idx1.filter(col("v__min") <= 3010L && col("v__max") >= 3000L).count() == 1)
-    // the two original sidecar rows survive byte-identical
-    val keep0 = idx0.collect().map(_.toSeq.toString).toSet
-    val keep1 = idx1.collect().map(_.toSeq.toString).toSet
-    assert(keep0.subsetOf(keep1), "existing rows must pass through untouched")
-    // compaction: rewrite the whole table into one file — stale rows drop
-    val dir2 = tempDir()
-    spark.read.parquet(dir).coalesce(1).write.mode("append").parquet(dir2)
-    val idx2 = ZoneMapIndex.refresh(spark.read.parquet(dir2), idx1, Seq("v"))
-    val r = idx2.collect()
-    assert(r.length == 1 && r.head.getAs[Long]("rows") == 200L,
-      "compacted layout leaves one fresh row, no stale files")
-    // no-op refresh returns the index unchanged
-    assert(ZoneMapIndex.refresh(spark.read.parquet(dir2), idx2, Seq("v"))
-      .collect().map(_.toSeq.toString).toSet == r.map(_.toSeq.toString).toSet)
+    def frame(k: Int) = (0 until 50).map(i => (1000L * k + i, "x")).toDF("v", "p").coalesce(1)
+    val (root, table) = lakeOf(Seq(frame(0), frame(1)))
+    val z0 = zonesOf(root)
+    assert(z0.size == 2)
+    // two appended files: a new handle bounds them and keeps the rest as is
+    (2 until 4).foreach(k => table.append(frame(k), "t"))
+    val z1 = zonesOf(root)
+    assert(z1.size == 4)
+    assert(z1.values.count { z =>
+      z("v").min.asInstanceOf[Long] <= 3010L && z("v").max.asInstanceOf[Long] >= 3000L
+    } == 1)
+    assert(z0.toSet.subsetOf(z1.toSet), "existing files keep their evidence")
+    // compaction rewrites every file: only the new files carry evidence, and
+    // it equals a scan of them
+    table.compact(spark, "t")
+    val z2 = zonesOf(root)
+    assert(z2.keySet.intersect(z1.keySet).isEmpty && z2.values.map(_("v").rows).sum == 200L)
+    val scanned = scanZones(root, Seq("v"))
+    assert(z2.keySet == scanned.keySet &&
+      z2.forall { case (k, z) => sameZone(LongType, z("v"), scanned(k)("v")) })
+    val df = AutoSkip.read(spark, root, "t").filter(col("v") >= 3000L && col("v") <= 3010L)
+    assert(df.count() == 11L)
   }
 
   test("key-bounds prune: bounded build cohort opens only overlapping files, join-exact") {
