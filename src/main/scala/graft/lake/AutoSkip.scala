@@ -3,26 +3,30 @@ package graft.lake
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
+import org.apache.parquet.filter2.compat.RowGroupFilter.FilterLevel
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 /** PLANNER-INTEGRATED data skipping: a [[FileIndex]] that prunes on each
-  * data file's own Parquet footer statistics and on the [[BloomIndex]]
-  * sidecar, from the filters Spark itself pushes down — so a plain
+  * data file's own Parquet footer statistics and Bloom filters, from the
+  * filters Spark itself pushes down — so a plain
   * `AutoSkip.read(spark, root, t).filter(...)` prunes files for ANY
   * predicate, without the caller naming an index (the reference gets this
   * transparently from its engine: pmgraham/biglake-iceberg-pipeline
@@ -33,7 +37,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * [[graft.queries.Events]] go through it too.
   *
   * How it plugs into Spark: [[read]] returns a DataFrame over a
-  * `HadoopFsRelation` whose location is a [[SidecarFileIndex]]. Catalyst
+  * `HadoopFsRelation` whose location is a [[FooterFileIndex]]. Catalyst
   * optimizes the query normally; `FileSourceStrategy` hands the pushed-down
   * data filters to `FileIndex.listFiles`, which keeps only files whose
   * evidence admits a match. The physical plan RETAINS the full filter, so
@@ -44,200 +48,81 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * on the driver per read handle (no Spark job), gives both the handle's
   * schema and each column's [min, max], nulls and rows, folded over its row
   * groups. Partition columns live in the data files ([[PartitionedTable]]'s
-  * shadow layout), so the footer bounds them too. The evidence cannot go
-  * stale: data files are immutable, and the footer is written with them.
+  * shadow layout), so the footer bounds them too.
   *
-  * Point evidence: one Bloom sidecar per indexed column. Superset guarantee
-  * under churn: commits add or remove whole files, never rewrite in place,
-  * and a file the sidecar does not cover is kept UNCONDITIONALLY. So a stale
-  * sidecar — mid-refresh, racing an append or compaction, missing entirely,
-  * torn — can only cost extra file opens, never rows. The pruning decision
-  * per file: (no footer evidence OR bounds overlap) AND (no bloom evidence
-  * OR bloom admits).
+  * Point evidence: the files' own Parquet Bloom filters and dictionaries.
+  * [[index]] declares the Bloom columns of a table; every later write of
+  * the table writes one filter per column chunk. A point conjunct on the
+  * read side becomes a parquet filter predicate that parquet-mr's own
+  * row-group filter tests, on the driver, against each file the bounds
+  * kept: a file goes only when no row group survives. A chunk without a
+  * filter or a dictionary gives no evidence and is kept.
   *
-  * Cost at scale: one footer read per live file per read handle — the
-  * driver already lists every live file to plan the scan, and a footer is
-  * a few KB at the file's tail. The Bloom membership test runs as one
-  * index-sized Spark job per distinct point-value set, never touching data
-  * files. */
+  * The evidence cannot go stale: data files are immutable, and the footer,
+  * the dictionaries and the filters are written with them. Cost at scale:
+  * one footer read per live file per read handle, and one reader open per
+  * bounds-kept file for a read that pins a point value. */
 object AutoSkip {
 
   /** The one key a data file is known by on the read path: the decoded
     * path component of its URI. Both sides take the URI form — a manifest
-    * listing's `getPath.toUri`, a sidecar's `input_file_name()` string — so
-    * a `%`-escaped partition directory (`s=%09P`) keys alike on both. */
+    * listing's `getPath.toUri`, an `input_file_name()` string — so a
+    * `%`-escaped partition directory (`s=%09P`) keys alike on both. */
   private[graft] def fileKey(uri: String): String = new java.net.URI(uri).getPath
   private def fileKey(st: FileStatus): String = st.getPath.toUri.getPath
 
-  private def idxLake(root: String, t: String) =
-    new ParquetDirFormat(s"$root/$t/idx")
-  private def bloomTable(c: String) = s"bloom__$c"
-
-  // serialize in-process refreshers per table: two concurrent index() calls
-  // racing the SAME next version of the sidecar lake could tear each other's
-  // snapshot write (ParquetDirFormat is single-writer; the DATA lake's CAS
-  // protocol is PartitionedTable's). Cross-process races stay benign — a
-  // torn generation reads as "no sidecar" and costs pruning, never rows.
-  private val refreshLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  /** Check the table's range columns and build (or refresh) one Bloom
-    * filter per `bloomCols` entry. Range evidence comes from the data
-    * files' footers, so nothing is stored for `zoneCols`: each must exist
-    * and be orderable. The Bloom sidecars are VERSIONED
-    * [[ParquetDirFormat]] tables under the table directory, so every later
-    * [[read]] finds them without being told. Each refresh that changes a
-    * sidecar commits a NEW immutable snapshot and old generations are
-    * retained (see [[expireIndexGenerations]]), so a read handle opened
-    * against any committed generation stays stable under concurrent
-    * refreshes — the superset guarantee needs no coordination. */
+  /** Check the table's range columns and declare its Bloom columns. Range
+    * evidence comes from the data files' footers, so nothing is stored for
+    * `zoneCols`: each must exist and be orderable. `bloomCols` join the
+    * table's declared set ([[PartitionedTable.bloomColumns]]), which every
+    * later write honours; then the manifest entries holding a file whose
+    * declared chunks lack point evidence are rewritten in one commit. A
+    * table already covered commits nothing. The rewrite is read-modify-write,
+    * like [[PartitionedTable.compact]]: a racing commit aborts it with a
+    * ConcurrentModificationException, and the caller retries. */
   def index(spark: SparkSession, root: String, t: String,
             zoneCols: Seq[String], bloomCols: Seq[String] = Seq.empty): Unit = {
     val table = PartitionedTable.open(root, t)
-    val files = table.dataFileStatuses(t).map(_._2)
-    if (zoneCols.nonEmpty) {
-      val schema = footerSchema(footers(spark, files)).getOrElse(table.read(spark, t).schema)
+    val listed = table.dataFileStatuses(t)
+    val files = footers(spark, listed.map(_._2))
+    if (zoneCols.nonEmpty || bloomCols.nonEmpty) {
+      val schema = footerSchema(files).getOrElse(table.read(spark, t).schema)
       zoneCols.foreach { c =>
         val dt = schema(c).dataType
         require(RowOrdering.isOrderable(dt),
           s"range skipping needs an orderable column; $c is ${dt.sql}")
       }
+      bloomCols.foreach(c => require(schema.fieldNames.contains(c), s"no column $c to filter on"))
     }
-    refreshBlooms(spark, root, t, table, files, bloomCols)
+    table.declareBloom(t, bloomCols)
+    val declared = table.bloomColumns(t).toSet
+    val uncovered = listed.zip(files).collect {
+      case ((id, _), (_, meta)) if !covered(meta, declared) => id
+    }.toSet
+    if (uncovered.nonEmpty) table.rewriteEntries(spark, t, "bloom")(_ => uncovered)
   }
 
-  /** Bring each `cols` Bloom sidecar to the live file list `files`: one
-    * driver-side set difference between the files the sidecar covers and
-    * the live ones. Rows of live files are kept, rows of files no longer
-    * live drop, and only uncovered live files are read — by their
-    * `FileStatus`, never by a path string — under the sidecar's stored
-    * (bits, k). A sidecar already current commits nothing. */
-  private def refreshBlooms(spark: SparkSession, root: String, t: String,
-                            table: PartitionedTable, files: Seq[FileStatus],
-                            cols: Seq[String]): Unit =
-    refreshLocks.getOrElseUpdate(s"$root/$t", new Object).synchronized {
-      val lake = idxLake(root, t)
-      val live = files.map(fileKey).toSet
-      cols.foreach { c =>
-        val name = bloomTable(c)
-        val current =
-          if (lake.exists(name)) Some(BloomIndex.sidecar(lake.read(spark, name))) else None
-        val covered = current.fold(Set.empty[String])(_.files.filter(f => live(fileKey(f))))
-        val coveredKeys = covered.map(fileKey)
-        val uncovered = files.filterNot(st => coveredKeys(fileKey(st)))
-        if (current.forall(s => uncovered.nonEmpty || covered.size < s.files.size)) {
-          def built = {
-            val schema = footerSchema(footers(spark, uncovered))
-              .filter(_.fieldNames.contains(c)).getOrElse(table.read(spark, t).schema)
-            val scan = frameOver(spark, new SidecarFileIndex(spark, new HPath(s"$root/$t"),
-              uncovered, Map.empty, Seq.empty, _ => None), StructType(Seq(schema(c))))
-            current.fold(BloomIndex.build(scan, c))(s => BloomIndex.build(scan, c, s.bits, s.k))
-          }
-          val snap = current match {
-            case None => built
-            case Some(s) =>
-              val kept = s.index.filter(col("file").isin(covered.toSeq: _*))
-              if (uncovered.isEmpty) kept else kept.unionByName(built)
-          }
-          lake.overwrite(snap.coalesce(1), name)
-        }
-      }
-    }
-
-  /** Maintenance: drop superseded sidecar generations, RETAINING the
-    * `retainLast` most recent predecessors of the current one (each refresh
-    * that changes a sidecar commits a new generation, so in-flight read
-    * handles opened up to `retainLast` refreshes ago keep their snapshot;
-    * older handles degrade to unpruned-but-correct reads via the superset
-    * guarantee). The write-transparent refresh ([[refreshAfterCommit]])
-    * applies this policy automatically so per-commit refreshes cannot
-    * accumulate one sidecar snapshot per table commit forever; call
-    * directly for a tighter schedule. */
-  def expireIndexGenerations(root: String, t: String, retainLast: Int = 0): Unit = {
-    val lake = idxLake(root, t)
-    lake.tables().filter(_.startsWith("bloom__"))
-      .foreach(lake.expireSnapshots(_, retainLast))
-  }
-
-  /** How many superseded sidecar generations a write-transparent refresh
-    * retains (see [[expireIndexGenerations]]). */
-  val CommitRefreshRetain = 3
-
-  /** WRITE-transparent sidecar maintenance — the commit hook
-    * [[PartitionedTable]] calls after a successful data commit: iff the
-    * table has Bloom sidecars (someone called [[index]] with Bloom columns
-    * at least once), refresh them against the just-committed manifest's
-    * file list, discovering the indexed columns from the `bloom__<c>` table
-    * names. A plain `append` → plain [[read]] therefore prunes the NEW
-    * files with no `index()` call in user code — the reference's engines
-    * maintain statistics on every load the same way (BigQuery keeps Iceberg
-    * metadata itself, terraform/bigquery_tables.tf:97-116; DuckDB computes
-    * zone maps at write time).
-    *
-    * Cost: one index-sized aggregate per Bloom column to learn the covered
-    * files, then a read of only the live files the sidecar does not cover.
-    * For APPENDS that is the increment just written; for REWRITE verbs
-    * (overwrite/compact/z-order/heavy upserts) it is what the commit
-    * rewrote — proportional to the commit's own write volume, never to an
-    * untouched remainder. Un-indexed tables pay one directory listing. Old
-    * generations beyond [[CommitRefreshRetain]] are expired here too, so
-    * steady-state sidecar storage is O(retain), not O(commits). Failure
-    * NEVER fails the data commit (it already landed): any error degrades to
-    * a stale sidecar, which the superset guarantee makes
-    * correct-but-unpruned. The sidecars themselves live in a
-    * [[ParquetDirFormat]] lake, whose commits never call this hook. */
-  private[lake] def refreshAfterCommit(spark: SparkSession, root: String, t: String): Unit =
-    try {
-      val bloomCols = scala.util.Try(idxLake(root, t).tables()).getOrElse(Seq.empty)
-        .filter(_.startsWith("bloom__")).map(_.stripPrefix("bloom__"))
-      if (bloomCols.nonEmpty) {
-        val table = PartitionedTable.open(root, t)
-        refreshBlooms(spark, root, t, table, table.dataFileStatuses(t).map(_._2), bloomCols)
-        expireIndexGenerations(root, t, CommitRefreshRetain)
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"sidecar refresh after commit on $root/$t failed " +
-          s"(reads stay correct, pruning may lag until the next refresh): $e")
-    }
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  /** Does every chunk of a `cols` column the file holds carry point
+    * evidence: a Bloom filter, or a dictionary that encodes all its pages?
+    * parquet-mr writes no filter for a chunk its dictionary fully encodes. */
+  private def covered(meta: ParquetMetadata, cols: Set[String]): Boolean =
+    meta.getBlocks.asScala.forall(_.getColumns.asScala.forall { cc =>
+      val path = cc.getPath.toArray
+      !(path.length == 1 && cols(path(0))) || cc.getBloomFilterOffset >= 0 ||
+        Option(cc.getEncodingStats).exists(s => s.hasDictionaryPages && !s.hasNonDictionaryEncodedPages)
+    })
 
   /** Open the table for reading THROUGH its evidence: any filter later
-    * applied to the returned frame prunes files automatically. Missing or
-    * unreadable sidecars degrade to an unpruned (still correct) scan. The
-    * handle snapshots the manifest at call time, like every other read in
-    * this lake. */
+    * applied to the returned frame prunes files automatically. The handle
+    * snapshots the manifest at call time, like every other read in this
+    * lake. */
   def read(spark: SparkSession, root: String, t: String): DataFrame = {
     val table = PartitionedTable.open(root, t)
     val files = footers(spark, table.dataFileStatuses(t).map(_._2))
     val schema = footerSchema(files).getOrElse(table.read(spark, t).schema)
-    val zones = files.map { case (st, meta) => fileKey(st) -> footerZones(meta, schema) }.toMap
-
-    // a column's Bloom sidecar resolves through the VERSIONED index lake:
-    // the handle pins one committed immutable generation, resolved LAZILY on
-    // the first listFiles that pins a point value on that column (a read
-    // must not pay a Spark job for a sidecar it cannot use). Existence-gated
-    // (no probe cost for indexes never built); a torn/unreadable sidecar
-    // degrades to "no pruning" via the Try.
-    val lake = idxLake(root, t)
-    val bloomF: StructField => Option[BloomSidecar] = f =>
-      scala.util.Try {
-        if (!lake.exists(bloomTable(f.name))) None
-        else {
-          val s = BloomIndex.sidecar(lake.read(spark, bloomTable(f.name)))
-          Some(BloomSidecar(s, s.files.map(fileKey)))
-        }
-      }.toOption.flatten
-
-    frameOver(spark, new SidecarFileIndex(spark, new HPath(s"$root/$t"),
-      files.map(_._1), zones, schema.fields.toSeq.filter(f => bloomSafeType(f.dataType)),
-      bloomF), schema)
-  }
-
-  private def frameOver(spark: SparkSession, index: FileIndex, schema: StructType): DataFrame = {
-    val relation = HadoopFsRelation(index, new StructType(), schema, None,
-      new ParquetFileFormat, Map.empty[String, String])(spark)
+    val relation = HadoopFsRelation(
+      new FooterFileIndex(spark, new HPath(s"$root/$t"), files, schema),
+      new StructType(), schema, None, new ParquetFileFormat, Map.empty[String, String])(spark)
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .baseRelationToDataFrame(relation)
   }
@@ -341,15 +226,15 @@ object AutoSkip {
     }
   }
 
-  /** The [[SidecarFileIndex]] behind a frame [[read]] produced (after any
+  /** The [[FooterFileIndex]] behind a frame [[read]] produced (after any
     * number of filters/projections/joins; the first one in the plan) — lets
     * specs assert which files the last action actually opened via
-    * [[SidecarFileIndex.lastKept]]. */
-  private[graft] def fileIndexOf(df: DataFrame): Option[SidecarFileIndex] =
+    * [[FooterFileIndex.lastKept]]. */
+  private[graft] def fileIndexOf(df: DataFrame): Option[FooterFileIndex] =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.relation
     }.collect { case h: HadoopFsRelation => h.location }
-      .collectFirst { case s: SidecarFileIndex => s }
+      .collectFirst { case s: FooterFileIndex => s }
 
   /** Per-file, per-column pruning evidence in CATALYST-INTERNAL values
     * (UTF8String for strings, raw primitives elsewhere) so comparisons run
@@ -357,35 +242,28 @@ object AutoSkip {
     * min/max with nulls >= rows means "no non-null value in this file". */
   private[graft] final case class ColZone(min: Any, max: Any, nulls: Long, rows: Long)
 
-  /** One column's Bloom sidecar and the files it covers, as file keys. */
-  private[graft] final case class BloomSidecar(sidecar: BloomIndex.Sidecar, covered: Set[String])
+  /** The row-group tests a point predicate runs: dictionary, then Bloom. */
+  private val PointLevels = java.util.List.of(FilterLevel.DICTIONARY, FilterLevel.BLOOMFILTER)
 
-  /** Types whose JVM toString equals Spark's CAST(x AS STRING) — the
-    * canonical form [[BloomIndex]] hashes. Restricting bloom pruning to
-    * these types is what keeps a rendering mismatch from becoming a false
-    * negative (= lost rows). */
-  private def bloomSafeType(dt: DataType): Boolean = dt match {
-    case StringType | IntegerType | LongType | ShortType | ByteType => true
-    case _ => false
-  }
-
-  /** The [[FileIndex]] doing the transparent pruning. Its partition schema
-    * is empty on purpose: partition columns live IN the data files
-    * (PartitionedTable's shadow-column layout), so every predicate arrives
-    * as a data filter, Spark re-applies all of them after the scan, and one
-    * bounds mechanism covers partition and range evidence uniformly.
-    * `zones` maps a [[fileKey]] to its footer evidence; `bloomCols` are the
-    * columns a Bloom sidecar may exist for; `bloomF` resolves one, at most
-    * once per column per handle. */
-  private[graft] final class SidecarFileIndex(
-      spark: SparkSession, root: HPath, allFiles: Seq[FileStatus],
-      private[graft] val zones: Map[String, Map[String, ColZone]],
-      bloomCols: Seq[StructField],
-      bloomF: StructField => Option[BloomSidecar])
+  /** The [[FileIndex]] doing the transparent pruning, over the live files
+    * and their footers. Its partition schema is empty on purpose: partition
+    * columns live IN the data files (PartitionedTable's shadow-column
+    * layout), so every predicate arrives as a data filter, Spark re-applies
+    * all of them after the scan, and one bounds mechanism covers partition
+    * and range evidence uniformly. `zones` maps a [[fileKey]] to its footer
+    * bounds. */
+  private[graft] final class FooterFileIndex(
+      spark: SparkSession, root: HPath, files: Seq[(FileStatus, ParquetMetadata)],
+      schema: StructType)
     extends FileIndex {
 
-    private val blooms =
-      scala.collection.concurrent.TrieMap.empty[String, Option[BloomSidecar]]
+    private val allFiles = files.map(_._1)
+    private[graft] val zones: Map[String, Map[String, ColZone]] =
+      files.map { case (st, meta) => fileKey(st) -> footerZones(meta, schema) }.toMap
+
+    // built once per handle: building them per open costs ~17 ms a file
+    private lazy val conf = spark.sparkContext.hadoopConfiguration
+    private lazy val readOptions = HadoopReadOptions.builder(conf).build()
 
     /** Last pruning outcome, for specs asserting which files a query opened. */
     @volatile var lastKept: Seq[String] = allFiles.map(_.getPath.toString)
@@ -396,34 +274,14 @@ object AutoSkip {
     override def inputFiles: Array[String] = allFiles.map(_.getPath.toString).toArray
     override def refresh(): Unit = () // snapshot handle — reopen via AutoSkip.read
 
-    // one bloom membership job per distinct (column, value-set) per handle
-    private val bloomCache =
-      scala.collection.concurrent.TrieMap.empty[(String, Set[String]), Set[String]]
-
     override def listFiles(partitionFilters: Seq[Expression],
                            dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
       val filters = partitionFilters ++ dataFilters
-      if (filters.isEmpty) {
-        // nothing can prune — answer from the listing alone, never forcing
-        // a sidecar read
-        lastKept = allFiles.map(_.getPath.toString)
-        return Seq(PartitionDirectory(InternalRow.empty, allFiles.toArray))
-      }
-      val bloomKeeps: Seq[(BloomSidecar, Set[String])] = bloomCols.flatMap { f =>
-        pointValues(filters, f.name, f.dataType).flatMap { vs =>
-          blooms.getOrElseUpdate(f.name, bloomF(f)).map { b =>
-            b -> bloomCache.getOrElseUpdate((f.name, vs),
-              BloomIndex.candidateFiles(spark, b.sidecar, vs.toSeq.sorted)
-                .map(fileKey).toSet)
-          }
-        }
-      }
-      val kept = allFiles.filter { st =>
-        val key = fileKey(st)
-        val bounds = zones.getOrElse(key, Map.empty)
-        filters.forall(f => keepByBounds(bounds, f)) &&
-          bloomKeeps.forall { case (b, cand) => !b.covered(key) || cand(key) }
-      }
+      val points = filters.flatMap(pointConjunct)
+      val kept = files.filter { case (st, meta) =>
+        val bounds = zones.getOrElse(fileKey(st), Map.empty)
+        filters.forall(f => keepByBounds(bounds, f)) && (points.isEmpty || mayHold(st, meta, points))
+      }.map(_._1)
       lastKept = kept.map(_.getPath.toString)
       Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
     }
@@ -478,26 +336,64 @@ object AutoSkip {
           }
       }
 
-    /** Point values a TOP-LEVEL conjunct pins `c` to, rendered in the
-      * canonical string form the Bloom sidecar hashes; None when no such
-      * conjunct exists (no bloom pruning for this query). */
-    private def pointValues(filters: Seq[Expression], c: String,
-                            dt: DataType): Option[Set[String]] = {
-      def render(v: Any): Option[String] =
-        Option(v).map(x => CatalystTypeConverters.convertToScala(x, dt).toString)
-      val sets = filters.flatMap {
-        case EqualTo(a: AttributeReference, Literal(v, ldt))
-          if a.name == c && ldt == dt => render(v).map(Set(_))
-        case EqualTo(Literal(v, ldt), a: AttributeReference)
-          if a.name == c && ldt == dt => render(v).map(Set(_))
+    /** A top-level conjunct pinning a column to point values — `EqualTo`,
+      * `In` or `InSet` over literals of the column's own type, on a column
+      * of [[pointType]] — as (column, type, non-null values). A dotted
+      * name would read as a nested parquet path, so it gives no evidence. */
+    private def pointConjunct(e: Expression): Option[(String, DataType, Set[Any])] = {
+      def pinned(a: AttributeReference, vs: Iterable[Any]) =
+        Some((a.name, a.dataType, vs.filter(_ != null).toSet))
+          .filter(p => pointType(p._2) && !p._1.contains('.') && p._3.nonEmpty)
+      e match {
+        case EqualTo(a: AttributeReference, Literal(v, dt)) if dt == a.dataType => pinned(a, Seq(v))
+        case EqualTo(Literal(v, dt), a: AttributeReference) if dt == a.dataType => pinned(a, Seq(v))
         case In(a: AttributeReference, vs)
-          if a.name == c && vs.forall { case Literal(_, ldt) => ldt == dt; case _ => false } =>
-          Some(vs.flatMap { case Literal(v, _) => render(v) }.toSet)
-        case InSet(a: AttributeReference, vs) if a.name == c =>
-          Some(vs.flatMap(render).toSet)
+          if vs.forall { case Literal(_, dt) => dt == a.dataType; case _ => false } =>
+          pinned(a, vs.map(_.asInstanceOf[Literal].value))
+        case InSet(a: AttributeReference, vs) => pinned(a, vs)
         case _ => None
       }
-      if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
     }
+
+    /** Might the file hold a row meeting every point conjunct? parquet-mr's
+      * row-group filter answers from the file's dictionaries and Bloom
+      * filters; the file goes only when no row group survives. Conjuncts on
+      * a column the file's own schema lacks or types differently give no
+      * evidence, and any failure to read keeps the file. */
+    private def mayHold(st: FileStatus, meta: ParquetMetadata,
+                        points: Seq[(String, DataType, Set[Any])]): Boolean = {
+      val own = sparkSchemaOf(meta).map(_.fields.map(f => f.name -> f.dataType).toMap)
+        .getOrElse(Map.empty)
+      val preds = points.collect { case (c, dt, vs) if own.get(c).contains(dt) => inPredicate(c, dt, vs) }
+      preds.reduceOption(FilterApi.and).forall { pred =>
+        scala.util.Try {
+          val in = HadoopInputFile.fromStatus(st, conf)
+          val reader = ParquetFileReader.open(in, meta, readOptions, in.newStream())
+          try !RowGroupFilter.filterRowGroups(PointLevels, FilterCompat.get(pred),
+            meta.getBlocks, reader).isEmpty
+          finally reader.close()
+        }.getOrElse(true)
+      }
+    }
+  }
+
+  /** Column types whose point values map one-to-one onto the parquet
+    * physical values a dictionary or Bloom filter holds. */
+  private def pointType(dt: DataType): Boolean = dt match {
+    case StringType | IntegerType | LongType | ShortType | ByteType => true
+    case _ => false
+  }
+
+  /** `c IN vs` as a parquet predicate over the column's physical values:
+    * strings as their UTF-8 bytes, the small integers as INT32. */
+  private def inPredicate(c: String, dt: DataType, vs: Set[Any]): FilterPredicate = dt match {
+    case StringType =>
+      FilterApi.in(FilterApi.binaryColumn(c),
+        vs.map(v => Binary.fromConstantByteArray(v.asInstanceOf[UTF8String].getBytes)).asJava)
+    case LongType =>
+      FilterApi.in(FilterApi.longColumn(c), vs.map(v => Long.box(v.asInstanceOf[Long])).asJava)
+    case _ =>
+      FilterApi.in(FilterApi.intColumn(c),
+        vs.map(v => Int.box(v.asInstanceOf[Number].intValue)).asJava)
   }
 }

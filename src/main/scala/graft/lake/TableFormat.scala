@@ -498,9 +498,7 @@ class ParquetDirFormat(root: String) extends TableFormat {
     * pointer (Iceberg's expire_snapshots), RETAINING the `retainLast` most
     * recent predecessors (0 = drop every superseded snapshot). Readers
     * pinned to expired snapshots lose them — call on a maintenance
-    * schedule, not per commit (the Bloom sidecars' refresh after each data
-    * commit applies its own bounded retention,
-    * [[AutoSkip.CommitRefreshRetain]]). */
+    * schedule, not per commit. */
   def expireSnapshots(table: String, retainLast: Int = 0): Seq[Int] = {
     val cur = currentVersion(table).getOrElse(return Seq.empty)
     val old = versions(table).filter(_ < cur).sorted.dropRight(retainLast)
@@ -525,6 +523,8 @@ class ParquetDirFormat(root: String) extends TableFormat {
   * Layout:
   * {{{
   *   <root>/<table>/PARTITION          partition column names
+  *   <root>/<table>/SCHEMA             the table schema, as Spark JSON
+  *   <root>/<table>/BLOOM              declared Bloom columns (optional)
   *   <root>/<table>/LAST               current-version HINT (commit point is
   *                                     the manifest file itself, CAS-created)
   *   <root>/<table>/m/MANIFEST.v<N>    lines: <partitionId>\t<dir>,<dir>,...
@@ -675,16 +675,13 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     * Iceberg-style: on losing the CAS, re-read the winner's entries and
     * rebase via `rebase` — two racing appenders thus BOTH land (neither
     * lost) instead of last-writer-wins. */
-  private def commitRebase(t: String, spark: SparkSession)(
+  private def commitRebase(t: String)(
       rebase: Seq[(String, Seq[String])] => Seq[(String, Seq[String])]): Unit = {
     var attempts = 0
     while (attempts < 32) {
       val cur = currentVersion(t)
       val entries = rebase(cur.map(_ => manifestAt(t)._2).getOrElse(Seq.empty))
-      if (casCommit(t, cur, entries)) {
-        AutoSkip.refreshAfterCommit(spark, root, t)
-        return
-      }
+      if (casCommit(t, cur, entries)) return
       attempts += 1
     }
     throw new IllegalStateException(
@@ -698,7 +695,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     * become unreferenced; expireUnreferenced cleans them) and the CALLER
     * retries the whole operation: Iceberg's validation-failure semantics.
     * `base` = None expects the table to not exist yet (create). */
-  private def commitExpect(t: String, spark: SparkSession, base: Option[Int],
+  private def commitExpect(t: String, base: Option[Int],
                            entries: Seq[(String, Seq[String])]): Unit = {
     val cur = currentVersion(t)
     if (cur != base || !casCommit(t, base, entries))
@@ -708,11 +705,30 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
           s"${currentVersion(t).map("v" + _).getOrElse("nothing")} is now current; " +
           "this commit is aborted and its staged directories are unreferenced " +
           "(expireUnreferenced cleans them) — retry the operation")
-    AutoSkip.refreshAfterCommit(spark, root, t)
+  }
+
+  private def bloomFile(t: String) = s"${tableDir(t)}/BLOOM"
+
+  /** The table's declared Bloom columns: every stage writes a Parquet Bloom
+    * filter for each, into every column chunk whose dictionary does not
+    * encode all its pages (see [[AutoSkip.index]], which declares them). */
+  def bloomColumns(t: String): Seq[String] =
+    if (!io.exists(bloomFile(t))) Seq.empty
+    else io.readString(bloomFile(t)).trim.split(",").toSeq.filter(_.nonEmpty)
+
+  /** Add `cols` to the declared Bloom columns; files already written keep
+    * what they carry until a rewrite ([[rewriteEntries]]). */
+  private[lake] def declareBloom(t: String, cols: Seq[String]): Unit = {
+    val cur = bloomColumns(t)
+    val all = (cur ++ cols).distinct
+    if (all != cur) io.writeString(bloomFile(t), all.mkString(","))
   }
 
   /** Stage-write `df` partitioned by shadow columns, move each staged
-    * partition dir under `p/<id>/v<N>-<i>/`, return (id -> relative dir). */
+    * partition dir under `p/<id>/v<N>-<i>/`, return (id -> relative dir).
+    * The write enables the declared Bloom columns' filters as options of
+    * its own, never as session conf, each capped at 8 KB (parquet's 1 MB
+    * default would dwarf a small file). */
   private def stage(df: DataFrame, t: String, tag: String): Seq[(String, String)] = {
     // names carry a per-staging nonce, not the target version: two RACING
     // writers staging against the same base must land disjoint directories
@@ -721,7 +737,8 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     val staging = s"${tableDir(t)}/.staging-$tag-$next"
     val spec = specOf(t) // stages always write under the CURRENT spec
     val shadowed = spec.foldLeft(df)((d, c) => d.withColumn(Shadow + c, col(c)))
-    shadowed.write.mode(SaveMode.Overwrite)
+    shadowed.write.options(bloomColumns(t).map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap)
+      .option("parquet.bloom.filter.max.bytes", 8192L).mode(SaveMode.Overwrite)
       .partitionBy(spec.map(Shadow + _): _*).parquet(staging)
     // discover the partition directories Spark wrote (canonical escaping);
     // only `name=value` segments count — _SUCCESS/_temporary never match
@@ -781,7 +798,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
   }
 
   /** (partitionId, FileStatus) for every data file in the current manifest
-    * snapshot — the raw material for a [[AutoSkip.SidecarFileIndex]], which
+    * snapshot — the raw material for a [[AutoSkip.FooterFileIndex]], which
     * needs sizes and Hadoop paths, not path strings. Manifest-sized listing
     * work; no data file is read. */
   def dataFileStatuses(t: String): Seq[(String, FileStatus)] =
@@ -821,7 +838,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     // schema survives independently of data files, so an empty create (or a
     // later overwrite-to-empty) still reads/appends with the right columns
     io.writeString(schemaFile(t), df.schema.json)
-    commitExpect(t, df.sparkSession, None, mergeEntries(Seq.empty, stage(df, t, "create")))
+    commitExpect(t, None, mergeEntries(Seq.empty, stage(df, t, "create")))
   }
 
   /** Fold newly staged (id, dir) pairs into existing entries: touched
@@ -845,7 +862,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     val target = storedSchema(t).getOrElse(read(df.sparkSession, t).schema)
     val aligned = Align.to(df, target.map(f => f.name -> f.dataType).toMap)
     val staged = stage(aligned, t, "append")
-    commitRebase(t, df.sparkSession)(cur => mergeEntries(cur, staged))
+    commitRebase(t)(cur => mergeEntries(cur, staged))
     healSchemaFile(t, target, aligned.schema)
   }
 
@@ -858,7 +875,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     * not leave SCHEMA describing data that never became current). Racing
     * writers adding DIFFERENT columns are last-writer-wins here — data
     * reads are unaffected (mergeSchema) and the next evolving write heals
-    * the file, the sidecar-style degradation. */
+    * the file. */
   private def healSchemaFile(t: String,
                              target: StructType,
                              aligned: StructType): Unit = {
@@ -871,7 +888,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
   override def overwrite(df: DataFrame, t: String): Unit = {
     if (!exists(t)) { create(df, t); return }
     val staged = stage(df, t, "overwrite")
-    commitRebase(t, df.sparkSession)(_ => mergeEntries(Seq.empty, staged))
+    commitRebase(t)(_ => mergeEntries(Seq.empty, staged))
     // only after the commit landed: an aborted commit must not leave SCHEMA
     // describing data that never became current
     io.writeString(schemaFile(t), df.schema.json)
@@ -912,9 +929,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     val untouched0 = existing.filterNot(e => touched.contains(e._1))
     // null-safe key matching throughout (<=>): NULL source keys must delete
     // the target's NULL-key rows, not duplicate them
-    val srcKeys = aligned.select(keys.map(k => col(k).as(s"__k_$k")): _*).distinct()
-    def keyCond(df: DataFrame) =
-      keys.map(k => df(k) <=> srcKeys(s"__k_$k")).reduce(_ && _)
+    val srcKeys = keyFrame(aligned, keys)
     // the keys-determine-partition shortcut is only sound when EVERY
     // remaining entry is under the current spec: an old-spec partition can
     // hold a staged key even when the new spec's columns are all keys.
@@ -925,25 +940,18 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
       id.split("/").toSeq.map(_.split("=", 2)(0).stripPrefix(Shadow))
     val allCurrentSpec = untouched0.forall(e => idCols(e._1) == spec)
     val hitIds: Set[String] =
-      if ((spec.forall(keys.contains) && allCurrentSpec) || untouched0.isEmpty)
-        Set.empty
-      else {
-        val scan = readDirs(spark, t, untouched0.flatMap(_._2))
-          .select(keys.map(col) :+ input_file_name().as("__file"): _*)
-        scan.join(srcKeys, keys.map(k => scan(k) <=> srcKeys(s"__k_$k")).reduce(_ && _), "left_semi")
-          .select("__file").distinct().collect()
-          .map(r => idOfFilePath(t, r.getString(0))).toSet
-      }
+      if ((spec.forall(keys.contains) && allCurrentSpec) || untouched0.isEmpty) Set.empty
+      else keyHitIds(spark, t, untouched0, keys, srcKeys)
     val rewriteIds = touched ++ hitIds
     val rewriteOldDirs = existing.filter(e => rewriteIds.contains(e._1)).flatMap(_._2)
     val stagedKept =
       if (rewriteOldDirs.isEmpty) Seq.empty
       else {
         val old = readDirs(spark, t, rewriteOldDirs)
-        stage(old.join(srcKeys, keyCond(old), "left_anti"), t, "upsert-kept")
+        stage(old.join(srcKeys, keyMatch(old, srcKeys, keys), "left_anti"), t, "upsert-kept")
       }
     val untouched = existing.filterNot(e => rewriteIds.contains(e._1))
-    commitExpect(t, spark, Some(baseV), mergeEntries(untouched, stagedNew ++ stagedKept))
+    commitExpect(t, Some(baseV), mergeEntries(untouched, stagedNew ++ stagedKept))
     healSchemaFile(t, target.schema, aligned.schema)
   }
 
@@ -973,31 +981,19 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     val stagedNew = stage(aligned, t, "cdc-new")
     val touched = stagedNew.map(_._1).distinct.toSet
     val untouched0 = existing.filterNot(e => touched.contains(e._1))
-    val allKeys = dels.select(keys.map(col): _*)
-      .unionByName(ups.select(keys.map(col): _*))
-      .select(keys.map(k => col(k).as(s"__k_$k")): _*).distinct()
-    val hitIds: Set[String] =
-      if (untouched0.isEmpty) Set.empty
-      else {
-        val scan = readDirs(spark, t, untouched0.flatMap(_._2))
-          .select(keys.map(col) :+ input_file_name().as("__file"): _*)
-        scan.join(allKeys,
-          keys.map(k => scan(k) <=> allKeys(s"__k_$k")).reduce(_ && _), "left_semi")
-          .select("__file").distinct().collect()
-          .map(r => idOfFilePath(t, r.getString(0))).toSet
-      }
+    val allKeys = keyFrame(dels.select(keys.map(col): _*).unionByName(ups.select(keys.map(col): _*)), keys)
+    val hitIds =
+      if (untouched0.isEmpty) Set.empty[String] else keyHitIds(spark, t, untouched0, keys, allKeys)
     val rewriteIds = touched ++ hitIds
     val rewriteOldDirs = existing.filter(e => rewriteIds.contains(e._1)).flatMap(_._2)
     val stagedKept =
       if (rewriteOldDirs.isEmpty) Seq.empty
       else {
         val old = readDirs(spark, t, rewriteOldDirs)
-        stage(old.join(allKeys,
-          keys.map(k => old(k) <=> allKeys(s"__k_$k")).reduce(_ && _), "left_anti"),
-          t, "cdc-kept")
+        stage(old.join(allKeys, keyMatch(old, allKeys, keys), "left_anti"), t, "cdc-kept")
       }
     val untouched = existing.filterNot(e => rewriteIds.contains(e._1))
-    commitExpect(t, spark, Some(baseV), mergeEntries(untouched, stagedNew ++ stagedKept))
+    commitExpect(t, Some(baseV), mergeEntries(untouched, stagedNew ++ stagedKept))
     healSchemaFile(t, target.schema, aligned.schema)
   }
 
@@ -1009,19 +1005,34 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     val spark = keyRows.sparkSession
     val (baseV, entries) = manifestAt(t)
     if (entries.isEmpty) return
-    val srcKeys = keyRows.select(keys.map(k => col(k).as(s"__k_$k")): _*).distinct()
-    val scan = readDirs(spark, t, entries.flatMap(_._2))
-      .select(keys.map(col) :+ input_file_name().as("__file"): _*)
-    val hitIds = scan
-      .join(srcKeys, keys.map(k => scan(k) <=> srcKeys(s"__k_$k")).reduce(_ && _), "left_semi")
-      .select("__file").distinct().collect()
-      .map(r => idOfFilePath(t, r.getString(0))).toSet
+    val srcKeys = keyFrame(keyRows, keys)
+    val hitIds = keyHitIds(spark, t, entries, keys, srcKeys)
     if (hitIds.isEmpty) return
     val old = readDirs(spark, t, entries.filter(e => hitIds.contains(e._1)).flatMap(_._2))
-    val kept = old.join(srcKeys,
-      keys.map(k => old(k) <=> srcKeys(s"__k_$k")).reduce(_ && _), "left_anti")
-    commitExpect(t, spark, Some(baseV), mergeEntries(entries.filterNot(e => hitIds.contains(e._1)),
+    val kept = old.join(srcKeys, keyMatch(old, srcKeys, keys), "left_anti")
+    commitExpect(t, Some(baseV), mergeEntries(entries.filterNot(e => hitIds.contains(e._1)),
       stage(kept, t, "delete-keys")))
+  }
+
+  /** The distinct key tuples of `df`, renamed `__k_<key>` so they join the
+    * target without ambiguity. */
+  private def keyFrame(df: DataFrame, keys: Seq[String]): DataFrame =
+    df.select(keys.map(k => col(k).as(s"__k_$k")): _*).distinct()
+
+  /** Null-safe (`<=>`) match of `df`'s keys against a [[keyFrame]]: a NULL
+    * key must meet the target's NULL-key rows, not duplicate them. */
+  private def keyMatch(df: DataFrame, keyed: DataFrame, keys: Seq[String]): Column =
+    keys.map(k => df(k) <=> keyed(s"__k_$k")).reduce(_ && _)
+
+  /** Ids of the partitions among `entries` holding a key tuple of `keyed`:
+    * a key-columns-only (column-pruned) semi-join, read back by file. */
+  private def keyHitIds(spark: SparkSession, t: String, entries: Seq[(String, Seq[String])],
+                        keys: Seq[String], keyed: DataFrame): Set[String] = {
+    val scan = readDirs(spark, t, entries.flatMap(_._2))
+      .select(keys.map(col) :+ input_file_name().as("__file"): _*)
+    scan.join(keyed, keyMatch(scan, keyed, keys), "left_semi")
+      .select("__file").distinct().collect()
+      .map(r => idOfFilePath(t, r.getString(0))).toSet
   }
 
   /** Partition-scoped DELETE WHERE: one probe scan — column-pruned to the
@@ -1045,19 +1056,29 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
     val rewriteDirs = entries.filter(e => hitIds.contains(e._1)).flatMap(_._2)
     val kept = readDirs(spark, t, rewriteDirs).filter(!coalesce(pred, lit(false)))
     val staged = stage(kept, t, "delete")
-    commitExpect(t, spark, Some(baseV),
+    commitExpect(t, Some(baseV),
       mergeEntries(entries.filterNot(e => hitIds.contains(e._1)), staged))
     deleted
   }
 
   /** Rewrite multi-directory partitions into one directory each; partitions
     * already compact are referenced, not rewritten. */
-  def compact(spark: SparkSession, t: String): Unit = {
+  def compact(spark: SparkSession, t: String): Unit =
+    rewriteEntries(spark, t, "compact")(_.collect { case (id, dirs) if dirs.length > 1 => id }.toSet)
+
+  /** Rewrite the current manifest's entries whose ids `pick` names, each
+    * into the directories one stage writes under the current spec, in one
+    * commit; every other entry is committed by reference. Nothing is
+    * committed when `pick` names none. Compaction and the Bloom declaration
+    * ([[AutoSkip.index]]) share it. */
+  private[lake] def rewriteEntries(spark: SparkSession, t: String, tag: String)(
+      pick: Seq[(String, Seq[String])] => Set[String]): Unit = {
     val (baseV, entries) = manifestAt(t)
-    val (multi, single) = entries.partition(_._2.length > 1)
-    if (multi.isEmpty) return
-    val staged = stage(readDirs(spark, t, multi.flatMap(_._2)), t, "compact")
-    commitExpect(t, spark, Some(baseV), mergeEntries(single, staged))
+    val ids = pick(entries)
+    val (rewrite, keep) = entries.partition(e => ids.contains(e._1))
+    if (rewrite.isEmpty) return
+    commitExpect(t, Some(baseV),
+      mergeEntries(keep, stage(readDirs(spark, t, rewrite.flatMap(_._2)), t, tag)))
   }
 
   /** OPTIMIZE ... ZORDER BY: rewrite the whole table with files clustered on
@@ -1085,7 +1106,7 @@ class PartitionedTable(root: String, partitionCols: Seq[String]) extends TableFo
       .repartitionByRange(nTasks, keyCols: _*)
       .sortWithinPartitions(keyCols: _*)
       .drop(zc)
-    commitExpect(t, spark, Some(baseV), mergeEntries(Seq.empty, stage(arranged, t, "zorder")))
+    commitExpect(t, Some(baseV), mergeEntries(Seq.empty, stage(arranged, t, "zorder")))
   }
 
   /** Delete data directories no longer referenced by the current manifest and

@@ -119,22 +119,23 @@ object FilePipeline {
     * permissive reader silently drops malformed JSONL lines — the exact row
     * loss the reference's atomic guarantee forbids.
     *
-    * The strict CSV check runs here in an aggregate of its own;
-    * [[processFile]] runs the same parse and check with the check's measure
-    * inside its load profile instead. Nothing is left cached. */
+    * The strict CSV and the JSONL checks run here in aggregates of their
+    * own; [[processFile]] runs the same parses and checks with the checks'
+    * measures inside its load profile instead. Nothing is left cached. */
   def loadRaw(spark: SparkSession, path: String): DataFrame =
     parse(spark, path) { strict =>
       strict.check(Measure.row(strict.frame, strict.measures))
       strict.data
-    }(identity)
+    }(_.checked)(identity)
 
   /** Load `path` by detected format. `strict` receives a strict CSV parse
     * whose atomic check is still to run; if the check fails, `raw` receives
     * the [[CsvRecovery]] parse instead. Only the check's deliberate failure
     * routes to recovery; infrastructure errors (missing file, FS faults)
-    * surface as-is. `raw` receives every other format's checked frame. */
+    * surface as-is. `jsonl` receives a JSONL parse whose loaded-rows check
+    * is still to run, and `raw` every other format's checked frame. */
   private def parse[T](spark: SparkSession, path: String)(strict: Readers.StrictCsv => T)(
-      raw: DataFrame => T): T =
+      jsonl: JsonRepair.Jsonl => T)(raw: DataFrame => T): T =
     FormatDetector.detect(path) match {
       case Formats.Csv | Formats.Tsv =>
         val utf8 = Encoding.ensureUtf8(path).toString
@@ -144,7 +145,9 @@ object FilePipeline {
           case _: IllegalStateException => raw(CsvRecovery.recover(spark, utf8, sep = sep))
         }
       case Formats.Json | Formats.Jsonl =>
-        raw(JsonRepair.loadAtomic(spark, Encoding.ensureUtf8(path).toString))
+        val utf8 = Encoding.ensureUtf8(path).toString
+        if (JsonRepair.isArrayDocument(utf8)) raw(JsonRepair.arrayAtomic(spark, utf8))
+        else jsonl(JsonRepair.jsonlParse(spark, utf8))
       case Formats.Parquet => raw(Readers.parquet(spark, path))
       case Formats.Excel => raw(graft.sources.Excel.read(spark, path))
       case f => throw new IllegalArgumentException(s"unsupported format $f for $path")
@@ -220,8 +223,9 @@ object FilePipeline {
   }
 
   /** The file's raw frame with normalized names, and its profile. A strict
-    * CSV parse is checked on the profile's own row; one that fails the
-    * check is recovered and profiled again. */
+    * CSV parse and a JSONL parse are checked on the profile's own row (its
+    * `__total` is the loaded-row count); a CSV that fails the check is
+    * recovered and profiled again. */
   private def loadProfiled(spark: SparkSession, path: String,
                            coercionThreshold: Double): (DataFrame, Profile) = {
     def profiled(raw: DataFrame): (DataFrame, Profile) = {
@@ -235,6 +239,11 @@ object FilePipeline {
       val named = measured.drop(Readers.Corrupt)
       val (p, m) = profile(named, measured, coercionThreshold, Seq(Readers.CorruptCount))
       strict.check(m)
+      (named, p)
+    } { jsonl =>
+      val named = ColumnNameNormalizer(jsonl.frame)
+      val (p, m) = profile(named, named, coercionThreshold, Seq.empty)
+      jsonl.check(m)
       (named, p)
     }(profiled)
   }

@@ -385,8 +385,11 @@ object Events {
     * event_type and range-clustered inside each partition (repartition
     * carries the partition key FIRST, so no task sprays sliver files across
     * partition dirs):
-    *  - `events_t`, clustered by value, with a Bloom sidecar on user_id from
-    *    [[graft.lake.AutoSkip.index]];
+    *  - `events_t`, clustered by value, with Parquet Bloom filters on
+    *    user_id: it is created empty, declares user_id through
+    *    [[graft.lake.AutoSkip.index]], then takes its one clustered write,
+    *    so the filters are written with the data and the layout is never
+    *    rewritten;
     *  - `events_u`, clustered by user_id (the join key of
     *    [[keyRangeJoin]]).
     * Range evidence on value and user_id comes from the data files' own
@@ -400,12 +403,13 @@ object Events {
     graft.core.TempLayouts.rootFor("graft_skip_", dir) { r =>
       val src = Tables.events(spark, dir)
         .select("event_id", "user_id", "event_type", "value")
-      def layout(t: String, clusterBy: String): Unit =
-        new graft.lake.PartitionedTable(r, Seq("event_type"))
-          .create(src.repartitionByRange(32, col("event_type"), col(clusterBy)), t)
-      layout("events_t", "value")
-      layout("events_u", "user_id")
+      val table = new graft.lake.PartitionedTable(r, Seq("event_type"))
+      def clustered(clusterBy: String) =
+        src.repartitionByRange(32, col("event_type"), col(clusterBy))
+      table.create(src.limit(0), "events_t")
       graft.lake.AutoSkip.index(spark, r, "events_t", Seq.empty, Seq("user_id"))
+      table.append(clustered("value"), "events_t")
+      table.create(clustered("user_id"), "events_u")
     }
 
   /** Zone-map range read: a value band over `events_t`, pruned by the data

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.util.regex.Pattern
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.core.Measure
@@ -130,14 +130,39 @@ object JsonRepair {
   private def repairString(s: String): String =
     s.replaceAll(",\\s*([}\\]])", "$1").replaceAll("'([^']*)'", "\"$1\"")
 
+  /** A JSONL parse whose loaded-rows check has not run yet: `frame` holds
+    * the parsed records, `sourceRows` counts the file's non-blank lines.
+    * Nothing is cached: every action on the frame parses the file again. */
+  final case class Jsonl(path: String, frame: DataFrame, sourceRows: Long) {
+    /** Atomic-load guarantee: loaded rows == source lines. `measured` is an
+      * aggregate row over `frame` that holds the row count as `__total`. */
+    def check(measured: Row): Unit = {
+      val loaded = measured.getAs[Long]("__total")
+      if (loaded != sourceRows)
+        throw new IllegalStateException(
+          s"json atomic check failed: $loaded rows loaded vs $sourceRows source lines in $path")
+    }
+
+    /** The frame, checked by an aggregate of its own. */
+    def checked: DataFrame = {
+      check(Measure.row(frame, Seq(count(lit(1)).as("__total"))))
+      frame
+    }
+  }
+
   /** JSONL load: validate every line, repair failures, fail loudly if any
-    * line remains unparseable, and assert loaded rows == source lines.
+    * line remains unparseable, and assert loaded rows == source lines. */
+  def jsonlAtomic(spark: SparkSession, path: String): DataFrame = jsonlParse(spark, path).checked
+
+  /** [[jsonlAtomic]] up to its loaded-rows check, which the caller runs
+    * (see [[Jsonl.check]]): a load can read the count off an aggregate it
+    * runs anyway.
     *
     * Validation requires each line to be a JSON OBJECT, not merely valid
     * JSON: a bare scalar would pass `try_parse_json` yet land as a junk
     * all-null row, and a top-level array would explode into several rows —
     * both silent corruptions the atomicity contract forbids. */
-  def jsonlAtomic(spark: SparkSession, path: String): DataFrame = {
+  def jsonlParse(spark: SparkSession, path: String): Jsonl = {
     import spark.implicits._
     def isObject(c: Column): Column =
       try_parse_json(c).isNotNull && ltrim(c).startsWith("{")
@@ -156,11 +181,7 @@ object JsonRepair {
     if (out.columns.contains("_corrupt_record"))
       throw new IllegalStateException(
         s"json atomic check failed: reader flagged corrupt records in $path")
-    val loaded = Measure.row(out, Seq(count(lit(1)))).getLong(0)
-    if (loaded != n)
-      throw new IllegalStateException(
-        s"json atomic check failed: $loaded rows loaded vs $n source lines in $path")
-    out
+    Jsonl(path, out, n)
   }
 
   /** JSON array document load with repair. Array exports are report-sized in
@@ -182,8 +203,9 @@ object JsonRepair {
     out
   }
 
-  /** Route by the array-vs-lines sniff (reference tools/ingestion.py:599-615). */
-  def loadAtomic(spark: SparkSession, path: String): DataFrame = {
+  /** The array-vs-lines sniff (reference tools/ingestion.py:599-615): does
+    * the document open with `[`? */
+  def isArrayDocument(path: String): Boolean = {
     val head = {
       val in = new java.io.FileInputStream(path)
       try {
@@ -192,7 +214,10 @@ object JsonRepair {
         new String(buf.take(math.max(n, 0)), java.nio.charset.StandardCharsets.UTF_8)
       } finally in.close()
     }
-    if (head.dropWhile(_.isWhitespace).headOption.contains('[')) arrayAtomic(spark, path)
-    else jsonlAtomic(spark, path)
+    head.dropWhile(_.isWhitespace).headOption.contains('[')
   }
+
+  /** Route by [[isArrayDocument]]. */
+  def loadAtomic(spark: SparkSession, path: String): DataFrame =
+    if (isArrayDocument(path)) arrayAtomic(spark, path) else jsonlAtomic(spark, path)
 }

@@ -7,9 +7,10 @@ import graft.lake.{AutoSkip, PartitionedTable}
 
 /** Planner-integrated skipping pins: a PLAIN `AutoSkip.read(...).filter(...)`
   * must (a) return exactly what an unpruned scan returns for every predicate
-  * shape, and (b) demonstrably open only sidecar-admitted files — without the
-  * query naming any index. Staleness cases pin the superset guarantee: files
-  * the sidecars don't cover are never pruned. */
+  * shape, and (b) demonstrably open only the files whose footer evidence
+  * admits a match — without the query naming any index. Coverage cases pin
+  * the superset guarantee: a file without point evidence is never pruned
+  * on a point value. */
 class AutoSkipSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -110,40 +111,38 @@ class AutoSkipSpec extends AnyFunSuite {
     assertSameRows(pruned, pred(plain))
   }
 
-  test("stale sidecar after append: new files kept unconditionally (superset)") {
+  test("files without point evidence are kept unconditionally (superset)") {
     import spark.implicits._
-    val (root, table) = build()
-    // r13: appends refresh sidecars transparently, so REAL staleness must be
-    // constructed — snapshot the pre-append sidecar generation and restore it
-    // after the append, exactly what a crashed/lagging refresher leaves
-    import java.nio.file.{Files, Path, StandardCopyOption}
-    val idx = Path.of(root, "t", "idx")
-    val saved = Path.of(root, "idx_saved")
-    def copyTree(from: Path, to: Path): Unit =
-      Files.walk(from).forEach { p =>
-        val q = to.resolve(from.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(q)
-        else Files.copy(p, q, StandardCopyOption.REPLACE_EXISTING)
-      }
-    def rmTree(p: Path): Unit = if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(q => Files.deleteIfExists(q))
-    copyTree(idx, saved)
-    // append rows the saved sidecar generation has never seen, with values
-    // that WOULD be pruned if it (wrongly) claimed to cover the new files
+    // no Bloom column declared yet: the unique ids are written plain, so no
+    // file carries a filter or a dictionary on id
+    val (root, table) = build(indexed = false)
     table.append(Seq(("a", 2050L, "id_new_1"), ("b", 2051L, "id_new_2"))
       .toDF("cat", "v", "id"), "t")
-    rmTree(idx); copyTree(saved, idx); rmTree(saved)
     val plain = table.read(spark, "t")
-    val pred = (d: DataFrame) => d.filter(
-      col("v") >= 2000L && col("v") <= 2099L && col("id").isin("id_new_1", "id_a_2010"))
-    val pruned = pred(AutoSkip.read(spark, root, "t"))
-    assertSameRows(pruned, pred(plain))
-    assert(pruned.count() == 2L)
-    // refresh folds the appended files in; pruning tightens, result unchanged
+    val ids = Seq("id_new_1", "id_a_2010")
+    val point = (d: DataFrame) => d.filter(col("id").isin(ids: _*))
+    def keys(paths: Seq[String]) =
+      paths.map(p => AutoSkip.fileKey(new org.apache.hadoop.fs.Path(p).toUri.toString)).toSet
+    val unpruned = point(AutoSkip.read(spark, root, "t"))
+    assertSameRows(unpruned, point(plain))
+    assert(unpruned.count() == 2L)
+    // only the footer bounds on id prune: every file whose [min, max]
+    // admits a value is kept
+    val idx = AutoSkip.fileIndexOf(unpruned).get
+    val byBounds = idx.zones.collect { case (f, z) if ids.exists { v =>
+      val u = org.apache.spark.unsafe.types.UTF8String.fromString(v)
+      z("id").min.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].compareTo(u) <= 0 &&
+        z("id").max.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].compareTo(u) >= 0
+    } => f }.toSet
+    assert(keys(keptOf(unpruned)) == byBounds)
+    // the declaration rewrites the uncovered files with their filters: the
+    // point read then keeps exactly the files holding a value
     AutoSkip.index(spark, root, "t", Seq("v"), Seq("id"))
-    val again = pred(AutoSkip.read(spark, root, "t"))
-    assertSameRows(again, pred(plain))
+    val again = point(AutoSkip.read(spark, root, "t"))
+    assertSameRows(again, point(plain))
+    val holding = point(table.read(spark, "t")).select(input_file_name()).distinct()
+      .collect().map(r => AutoSkip.fileKey(r.getString(0))).toSet
+    assert(keys(keptOf(again)) == holding)
   }
 
   test("write-transparent maintenance: plain append -> plain read prunes NEW files, no index() call") {
@@ -154,7 +153,7 @@ class AutoSkipSpec extends AnyFunSuite {
     val plain = table.read(spark, "t")
     val total = plain.inputFiles.length
     // range disjoint from every pre-append stripe: only the appended files
-    // can match, and the commit-hook refresh must have zone-covered them
+    // can match, and their own footers bound them
     val pred = (d: DataFrame) => d.filter(col("v") >= 9000L)
     val pruned = pred(AutoSkip.read(spark, root, "t"))
     assertSameRows(pruned, pred(plain))
@@ -163,27 +162,27 @@ class AutoSkipSpec extends AnyFunSuite {
     assert(kept.nonEmpty && kept.size < total,
       s"appended files must be pruned against without an index() call: " +
         s"kept ${kept.size} of $total")
-    // and the OLD stripes stay prunable too (the refresh kept, not replaced,
-    // existing coverage); point-lookup through the bloom sidecar still works
+    // and the OLD stripes stay prunable too; a point lookup prunes through
+    // the Bloom filters the append wrote
     val pointPred = (d: DataFrame) => d.filter(col("id") === "id_auto_2")
     val point = pointPred(AutoSkip.read(spark, root, "t"))
     assertSameRows(point, pointPred(plain))
     assert(keptOf(point).size < total)
-    // per-commit refreshes retain a BOUNDED generation history (the commit
-    // hook applies CommitRefreshRetain) — steady-state sidecar storage must
-    // not grow one snapshot per table commit
+    // each append is one commit and nothing else: no index state is kept
+    // beside the data, and every file it wrote carries its own filters
+    val v0 = table.version("t").get
     for (i <- 0 until 8)
       table.append(Seq(("a", 9100L + i, s"id_gen_$i")).toDF("cat", "v", "id"), "t")
-    val gens = new graft.lake.ParquetDirFormat(s"$root/t/idx").versions("bloom__id")
-    assert(gens.size <= AutoSkip.CommitRefreshRetain + 1,
-      s"sidecar generations must stay bounded, saw ${gens.size}: $gens")
+    assert(table.version("t").get == v0 + 8)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "t", "idx")))
+    assert(BloomFooters.uncovered(root, "t").isEmpty)
   }
 
   test("mixed partition specs after evolvePartitionSpec: pruning correct across both") {
     import spark.implicits._
     val (root, table) = build() // partitioned by cat, indexed on v (zone) + id (bloom)
     table.evolvePartitionSpec("t", Seq("cat", "id"))
-    // new-spec appends; the commit hook refreshes the sidecars transparently
+    // new-spec appends write their filters like any other stage
     table.append(Seq(("a", 9000L, "id_mx_1"), ("b", 9001L, "id_mx_2"))
       .toDF("cat", "v", "id"), "t")
     val plain = table.read(spark, "t")
@@ -198,13 +197,13 @@ class AutoSkipSpec extends AnyFunSuite {
     assert(kept.nonEmpty && kept.size < total, s"kept ${kept.size} of $total")
     assert(kept.forall(_.contains("cat=a")), kept.mkString("\n"))
     // new-spec partition values participate: an id equality prunes to the
-    // new file through its id partition segment AND the bloom sidecar
+    // new file through its footer bounds AND its Bloom filter
     val p2 = AutoSkip.read(spark, root, "t").filter(col("id") === "id_mx_2")
     assert(p2.count() == 1L)
     assert(keptOf(p2).size < total)
     // a MIGRATING rewrite (upsert touching an old-spec partition) replaces
-    // old-spec files with new-spec files; the commit-hook refresh must cover
-    // the migrated files so pruned reads stay exact with no index() call
+    // old-spec files with new-spec files, written with their footers, so
+    // pruned reads stay exact with no index() call
     table.upsert(Seq(("a", 9100L, "id_mig_1")).toDF("cat", "v", "id"),
       "t", Seq("cat", "id"))
     val plainM = table.read(spark, "t")
@@ -214,7 +213,7 @@ class AutoSkipSpec extends AnyFunSuite {
     assertSameRows(prunedM, predM(plainM))
     assert(prunedM.count() == 1L)
     assert(keptOf(prunedM).size < totalM,
-      s"migrated files must be sidecar-covered: kept ${keptOf(prunedM).size} of $totalM")
+      s"migrated files must be footer-covered: kept ${keptOf(prunedM).size} of $totalM")
   }
 
   test("null-safe: IsNull finds the default-partition rows, IsNotNull prunes them") {
@@ -253,21 +252,20 @@ class AutoSkipSpec extends AnyFunSuite {
       AutoSkip.read(spark, root, "t").filter(col("v") >= 2000L && col("v") <= 2099L).collect())
     assert(rows.length == 200)
     // job counts repeat exactly, so the pin is exact. The schema and the
-    // zones come from footers read on the driver, and no filter pins a
-    // point value on id, so the read resolves no Bloom sidecar: the one job
-    // is the collect
+    // zones come from footers read on the driver: the one job is the collect
     val pinned = 1
     assert(jobs == pinned, s"a range-only read ran $jobs Spark jobs, pinned at $pinned")
   }
 
-  test("job-count guard: a point read through the Bloom sidecar") {
-    val (root, _) = build() // zone map on v, Bloom filter on id
-    val (rows, jobs) = TestSpark.jobsOf(
-      AutoSkip.read(spark, root, "t").filter(col("id") === "id_a_2010").collect())
+  test("job-count guard: a point read through the footer Bloom filters") {
+    val (root, table) = build() // zone map on v, Bloom filter on id
+    val df = AutoSkip.read(spark, root, "t").filter(col("id") === "id_a_2010")
+    val (rows, jobs) = TestSpark.jobsOf(df.collect())
     assert(rows.length == 1)
-    // exact pin: the Bloom sidecar resolves its covered files and its
-    // (bits, k) in one aggregate, and the membership join reuses them
-    val pinned = 7
+    assert(keptOf(df).size < table.read(spark, "t").inputFiles.length)
+    // exact pin: the filters are tested on the driver by parquet-mr's own
+    // row-group filter, so the one job is the collect
+    val pinned = 1
     assert(jobs == pinned, s"a point read ran $jobs Spark jobs, pinned at $pinned")
   }
 
@@ -275,12 +273,12 @@ class AutoSkipSpec extends AnyFunSuite {
     import spark.implicits._
     // a tab, a space and a '%' in a partition value: Spark escapes the tab
     // and the '%' in the directory name (s=%09P, s=a%25b), which a file's
-    // URI escapes once more. Every commit refreshes the Bloom sidecar on id
+    // URI escapes once more. Every commit writes the Bloom filters on id
     val root = tempDir()
     val table = new PartitionedTable(root, Seq("s"))
     val parts = Seq("\tP", " P", "a%b", "plain")
     // per file: a band of v, and ids interleaved over all files so only
-    // the Bloom sidecar tells the files apart on id
+    // the Bloom filters tell the files apart on id
     def batch(round: Int) = (for ((s, si) <- parts.zipWithIndex; i <- 0 until 20)
       yield (s, 10000L * round + 100L * si + i, f"u${round * 1000 + parts.size * i + si}%05d"))
       .toDF("s", "v", "id").repartition(1)
@@ -353,9 +351,9 @@ class AutoSkipSpec extends AnyFunSuite {
     import spark.implicits._
     // 8 racing workers, mirroring the lake's CAS-commit races: 2 appenders
     // (compose-commits, both must land), 1 compactor (read-modify-write,
-    // aborts loudly on conflict and retries next round), 2 sidecar
-    // refreshers (serialized in-process; each commits a NEW index
-    // generation), 3 readers asserting on every iteration that the PRUNED
+    // aborts loudly on conflict and retries next round), 2 index callers
+    // (the table is covered, so each checks the footers and commits
+    // nothing), 3 readers asserting on every iteration that the PRUNED
     // read over their snapshot equals the UNPRUNED read over the same
     // files — the superset guarantee as an exact-equality check, because
     // the retained filter clears pruning slack.

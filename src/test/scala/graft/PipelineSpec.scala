@@ -233,16 +233,40 @@ class PipelineSpec extends AnyFunSuite {
     val (r, jobs) = TestSpark.jobsOf(
       FilePipeline.processFile(spark, second.toString, "orders", lake, ledger))
     assert(r.rows == 200 && r.quarantinedRows == 0)
-    // the commit hook brought the Bloom sidecar to the live file list
-    val sidecar = graft.lake.BloomIndex.sidecar(
-      new ParquetDirFormat(s"$lakeRoot/orders/idx").read(spark, "bloom__o_custkey"))
-    assert(sidecar.files.map(graft.lake.AutoSkip.fileKey) ==
-      lake.dataFileStatuses("orders").map(_._2.getPath.toUri.getPath).toSet)
-    // exact pin: the un-indexed load's 2 jobs, plus the commit hook's Bloom
-    // refresh — the sidecar's covered-files aggregate and the build of the
-    // new files' filters, written as the sidecar's next generation
-    val pinned = 6
+    // the staged write carried the point evidence in the new files' own
+    // footers: every o_custkey chunk has a Bloom filter or a dictionary
+    // encoding all its pages (37 values per file: the dictionary)
+    assert(BloomFooters.uncovered(lakeRoot, "orders").isEmpty)
+    assert(!Files.exists(root.resolve("lake/orders/idx")))
+    // exact pin: the un-indexed load's 2 jobs — the filters cost no job
+    val pinned = 2
     assert(jobs == pinned, s"an indexed clean CSV load ran $jobs Spark jobs, pinned at $pinned")
+  }
+
+  test("job-count guard: a JSONL load into an existing un-indexed PartitionedTable") {
+    val root = Files.createTempDirectory("graft-jobs-jsonl")
+    def orders(from: Int): String =
+      (from until from + 200).map { i =>
+        s"""{"o_orderkey": $i, "o_custkey": ${i % 37}, "o_orderstatus": " ${"FOP"(i % 3)} ", """ +
+          s""""o_totalprice": ${i * 1.25}, "o_comment": "note $i"}"""
+      }.mkString("\n") + "\n"
+    val first = root.resolve("orders-1.jsonl")
+    val second = root.resolve("orders-2.jsonl")
+    Files.write(first, orders(1).getBytes("UTF-8"))
+    Files.write(second, orders(1001).getBytes("UTF-8"))
+    val lake = new PartitionedTable(root.resolve("lake").toString, Seq("o_orderstatus"))
+    val ledger = new Ledger(root.resolve("ledger.tsv").toString)
+    FilePipeline.processFile(spark, first.toString, "orders", lake, ledger)
+
+    val (r, jobs) = TestSpark.jobsOf(
+      FilePipeline.processFile(spark, second.toString, "orders", lake, ledger))
+    assert(r.rows == 200 && r.quarantinedRows == 0)
+    assert(lake.read(spark, "orders").count() == 400)
+    // exact pin: the line validation, the JSON reader's schema inference,
+    // the load profile, which carries the loaded-rows check, and the staged
+    // write
+    val pinned = 4
+    assert(jobs == pinned, s"a JSONL load ran $jobs Spark jobs, pinned at $pinned")
   }
 
   test("job-count guard: a CSV load that falls back to CsvRecovery") {

@@ -760,38 +760,6 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     assert(t10 / t1 < 20.0, f"superlinear blowup: $t1%.1f s -> $t10%.1f s")
   }
 
-  test("Bloom sidecar: build scales linearly, lookup cost is index-sized", SlowRehearsal) {
-    import graft.lake.BloomIndex
-    val dir1 = Files.createTempDirectory("graft-bloomr1").toString
-    val dir10 = Files.createTempDirectory("graft-bloomr10").toString
-    def write(n: Long, d: String) = spark.range(n)
-      .select(col("id"), (col("id") % 100000L).as("user_id"))
-      .repartition(16, col("id")).write.mode("overwrite").parquet(d)
-    write(200000L, dir1); write(2000000L, dir10)
-    val (t1, _) = timed("bloom build 1x (200k)") {
-      runRows(BloomIndex.build(spark.read.parquet(dir1), "user_id"))
-    }
-    val (t10, _) = timed("bloom build 10x (2M)") {
-      runRows(BloomIndex.build(spark.read.parquet(dir10), "user_id"))
-    }
-    assert(t10 / t1 < 20.0, f"superlinear blowup: $t1%.1f s -> $t10%.1f s")
-    // serve cost rides the sidecar, not the data: once the index is
-    // materialized, a lookup scans files x bits/64 words — assert the
-    // structural bound (the wall clock at this scale is job-scheduling
-    // floor, not data; the INDEX SIZE is what's corpus-rate-independent)
-    val idx10 = BloomIndex.build(spark.read.parquet(dir10), "user_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idxRows = idx10.count()
-    assert(idxRows <= 16L * (1 << 16) / 64,
-      s"sidecar must stay <= files x bits/64 words, got $idxRows")
-    val (tq, nCand) = timed("bloom lookup on 10x index") {
-      BloomIndex.candidateFiles(spark, idx10, Seq(777L)).length.toLong
-    }
-    idx10.unpersist()
-    assert(nCand <= 16L)
-    info(f"lookup wall on the 10x index: $tq%.2f s over $idxRows index words")
-  }
-
   test("skipping-triad serve rides CANDIDATE files, not total files, at a 25x layout",
        SlowRehearsal) {
     import spark.implicits._

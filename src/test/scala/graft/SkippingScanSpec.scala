@@ -8,7 +8,7 @@ import graft.lake.{AutoSkip, PartitionedTable}
 /** The composed file-skipping triad through [[AutoSkip.read]]: a partition
   * predicate, a zone-map range and a Bloom point set prune in one
   * `listFiles`. Pins: the triad keeps exactly the intersection of what each
-  * leg keeps alone, every leg prunes, a refreshed table stays exact and
+  * leg keeps alone, every leg prunes, an appended-to table stays exact and
   * covered, and an empty intersection reads nothing. */
 class SkippingScanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -90,7 +90,7 @@ class SkippingScanSpec extends AnyFunSuite {
     def files() = table.read(spark, "t").inputFiles.map(norm).toSet
     val before = files()
     // append a new cat=a stripe carrying fresh v range + fresh ids; the
-    // commit refreshes the sidecars
+    // append writes their bounds and Bloom filters with the data
     table.append(Seq.tabulate(50)(i => ("a", 9000L + i, s"id_a_${9000L + i}"))
       .toDF("cat", "v", "id").repartition(1), "t")
     val added = files() -- before
@@ -100,8 +100,8 @@ class SkippingScanSpec extends AnyFunSuite {
     val (kept, rows) = read(root, fresh)
     assert(rows == plainRows(table, fresh) && rows.size == 2)
     assert(kept.nonEmpty && kept.subsetOf(added))
-    // and a query into the OLD stripes prunes the new files: the refreshed
-    // sidecars cover them (an uncovered file is kept unconditionally)
+    // and a query into the OLD stripes prunes the new files: their own
+    // footers cover them (an uncovered file is kept unconditionally)
     val old = cat("a") && range(2000L, 2099L) && points("id_a_2010")
     val (keptOld, rowsOld) = read(root, old)
     assert(rowsOld == plainRows(table, old) && rowsOld.size == 1)
